@@ -6,7 +6,7 @@ metrics) over deterministic synthetic pages sized from sf0.001 documents.
 
 ``queries()`` exposes one named query per implemented operator family from
 SURVEY.md §2 (S1-S28) plus the training-data ops (dedup / similarity /
-text-analysis / multimodal); ``oracle_sql()`` gives the DuckDB-equivalent SQL
+text-analysis); ``oracle_sql()`` gives the DuckDB-equivalent SQL
 for every SQL-expressible one. Aggregates use exact decimal arithmetic so
 Spark and DuckDB agree bit-for-bit; float formatting uses printf-style
 rendering available identically on both sides.
@@ -171,18 +171,18 @@ def q_s14_dedup_firstseen(spark, sf):
 
 def q_s14b_surrogate_keys(spark, sf):
     # S14: dense surrogate keys in first-seen order — via the engine's
-    # skew-robust range-partitioned ranking (seen.dense_rank_range), NOT a
-    # global single-partition window
-    from crawlspark.seen import dense_rank_range
+    # skew-robust ranker (seen.rank_and_key), NOT a global single-partition
+    # window. Every row counts as fetched, so surrogate_key == seq.
+    from crawlspark.seen import rank_and_key
 
     e = _t(spark, sf, "events")
-    # dense_rank_range persists+counts its input itself and picks the
-    # single-window fast path for small key counts, the range-partitioned
-    # path beyond small_threshold (adaptive — see seen.py)
-    firsts = e.groupBy("user_id").agg(F.min("ts").alias("first_ts"))
-    return dense_rank_range(
-        firsts, ["first_ts", "user_id"], out_col="surrogate_key"
-    ).select("user_id", "first_ts", "surrogate_key")
+    firsts = (
+        e.groupBy("user_id").agg(F.min("ts").alias("first_ts"))
+        .withColumn("is_fetched", F.lit(True))
+    )
+    return rank_and_key(firsts, ["first_ts", "user_id"]).select(
+        "user_id", "first_ts", "surrogate_key"
+    )
 
 
 def q_s15_point_wkt(spark, sf):
@@ -1094,68 +1094,6 @@ def q_pipeline_curate(spark, sf):
     return token_count(survivors)
 
 
-def q_multimodal_image(spark, sf):
-    from crawlspark.multimodal import decode_image_features, documents_as_binary
-
-    d = documents_as_binary(_t(spark, sf, "documents"))
-    return decode_image_features(d).select("doc_id", "width", "height", "n_bytes", "decoder")
-
-
-def q_multimodal_png(spark, sf):
-    # REAL decode branch: deterministic PNG payloads (pure-stdlib encoder,
-    # executor-side) roundtripped through the pure-stdlib PNG decoder — the
-    # oracle checks decoded width/height/mode against the encode parameters
-    from crawlspark.multimodal import decode_image_features, synth_png_payloads
-
-    d = _t(spark, sf, "documents").filter(F.col("doc_id") < 200)
-    return decode_image_features(synth_png_payloads(d)).select(
-        "doc_id", "width", "height", "mode", "decoder"
-    )
-
-
-def q_multimodal_wav(spark, sf):
-    # REAL audio branch: deterministic PCM-WAV payloads (pure-stdlib RIFF
-    # encoder, executor-side, integer waveform = closed form of doc_id)
-    # parsed by the pure-stdlib WAV decoder — rate/length/duration AND the
-    # RMS (exact f64 arithmetic over integer samples) all have ANSI-SQL
-    # closed forms
-    from crawlspark.multimodal import decode_audio_features, synth_wav_payloads
-
-    d = _t(spark, sf, "documents").filter(F.col("doc_id") < 200)
-    return decode_audio_features(synth_wav_payloads(d))
-
-
-def q_multimodal_frames(spark, sf):
-    from crawlspark.multimodal import documents_as_binary, frame_sample
-
-    d = documents_as_binary(_t(spark, sf, "documents").filter(F.col("doc_id") < 50))
-    return frame_sample(d)
-
-
-def q_multimodal_gif(spark, sf):
-    # REAL frame-splitter branch: deterministic animated-GIF payloads
-    # (pure-stdlib GIF89a encoder, executor-side) walked by the pure-stdlib
-    # container parser — the oracle checks per-frame byte spans, dimensions
-    # and the sampling stride as closed forms of doc_id
-    from crawlspark.multimodal import frame_sample, synth_gif_payloads
-
-    d = _t(spark, sf, "documents").filter(F.col("doc_id") < 200)
-    return frame_sample(synth_gif_payloads(d))
-
-
-def q_multimodal_avi(spark, sf):
-    # REAL RIFF/AVI frame-splitter branch (round-4 verdict #5 — a second
-    # real container so the stub is reserved for genuinely unknown bytes):
-    # deterministic AVI payloads (pure-stdlib encoder, executor-side) walked
-    # by the pure-stdlib movi-chunk parser — the oracle checks per-frame
-    # chunk spans, avih dimensions and the sampling stride as closed forms
-    # of doc_id (crawlspark.multimodal.avi_frames / synth_avi_payloads)
-    from crawlspark.multimodal import frame_sample, synth_avi_payloads
-
-    d = _t(spark, sf, "documents").filter(F.col("doc_id") < 200)
-    return frame_sample(synth_avi_payloads(d))
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         "s01_filter_pushdown": q_s01_filter_pushdown,
@@ -1226,12 +1164,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "crawl_warc_parse": q_crawl_warc_parse,
         "crawl_warc_pages": q_crawl_warc_pages,
         "fingerprint_winnow": q_fingerprint_winnow,
-        "multimodal_image": q_multimodal_image,
-        "multimodal_png": q_multimodal_png,
-        "multimodal_wav": q_multimodal_wav,
-        "multimodal_frames": q_multimodal_frames,
-        "multimodal_gif": q_multimodal_gif,
-        "multimodal_avi": q_multimodal_avi,
     }
 
 
@@ -1891,91 +1823,6 @@ def oracle_sql() -> dict[str, str]:
         "pipeline_curate": f"""
             SELECT doc_id, ws_tokens, bpe_est_tokens
             FROM read_parquet('{_FIXTURES}/pipeline_curate.parquet')
-        """,
-        # the multimodal stub decoder is a deterministic function of the
-        # payload BYTE LENGTH only (no byte/encoding assumptions)
-        "multimodal_image": """
-            SELECT doc_id,
-                   CAST(1 + octet_length(encode(text)) % 64 AS int) AS width,
-                   CAST(1 + (octet_length(encode(text)) // 64) % 64 AS int) AS height,
-                   CAST(octet_length(encode(text)) AS bigint) AS n_bytes,
-                   'stub' AS decoder
-            FROM documents
-        """,
-        # real-PNG roundtrip: decoded dims/mode must equal the encode
-        # parameters, which are pure functions of doc_id
-        "multimodal_png": """
-            SELECT doc_id,
-                   CAST(1 + doc_id % 64 AS int) AS width,
-                   CAST(1 + (doc_id // 64) % 64 AS int) AS height,
-                   'L' AS mode,
-                   'real-png' AS decoder
-            FROM documents WHERE doc_id < 200
-        """,
-        # real-WAV roundtrip: rate = 8000*(1+id%3), n = 64+id%129, sample j =
-        # ((id*31 + j*j) % 20001) - 10000; rms = sqrt(sum(x^2)/n) — integer
-        # sums are exact in f64 on both engines, so sqrt agrees bit-for-bit
-        "multimodal_wav": """
-            SELECT doc_id,
-                   CAST(8000 * (1 + doc_id % 3) AS int) AS sample_rate,
-                   CAST(1 AS int) AS channels,
-                   CAST(n AS bigint) AS n_samples,
-                   CAST(n * 1000 // (8000 * (1 + doc_id % 3)) AS bigint) AS duration_ms,
-                   sqrt(ss / n) AS rms,
-                   'real-wav' AS decoder
-            FROM (
-              SELECT doc_id, 64 + doc_id % 129 AS n,
-                     (SELECT sum(CAST(((doc_id * 31 + j * j) % 20001) - 10000 AS double) *
-                                 CAST(((doc_id * 31 + j * j) % 20001) - 10000 AS double))
-                      FROM unnest(generate_series(0, 64 + doc_id % 129 - 1)) AS t(j)) AS ss
-              FROM documents WHERE doc_id < 200
-            )
-        """,
-        "multimodal_frames": """
-            SELECT doc_id, CAST(fi AS int) AS frame_index,
-                   CAST(least(16, n - fi * 16) AS bigint) AS frame_bytes,
-                   CAST(NULL AS int) AS width, CAST(NULL AS int) AS height,
-                   'stub' AS splitter
-            FROM (
-              SELECT doc_id, octet_length(encode(text)) AS n,
-                     unnest(generate_series(
-                       0, greatest(octet_length(encode(text)) // 16, 1) - 1, 2)) AS fi
-              FROM documents WHERE doc_id < 50
-            )
-        """,
-        # real-GIF roundtrip: per-frame byte span = descriptor(10) + min-code
-        # byte(1) + LZW payload L + sub-block framing (ceil(L/255) length
-        # bytes + terminator), with L = npix + (npix-1)//110 clears + clear +
-        # end — all closed forms of the encode parameters (see
-        # crawlspark/multimodal.py gif_encode_frames / _gif_lzw_uncompressed)
-        "multimodal_avi": """
-            SELECT doc_id, CAST(fi AS int) AS frame_index,
-                   CAST(w * h AS bigint) AS frame_bytes,
-                   CAST(w AS int) AS width, CAST(h AS int) AS height,
-                   'real-avi' AS splitter
-            FROM (
-              SELECT doc_id, w, h,
-                     unnest(generate_series(0, doc_id % 6, 2)) AS fi
-              FROM (
-                SELECT doc_id, 1 + doc_id % 32 AS w, 1 + (doc_id // 32) % 32 AS h
-                FROM documents WHERE doc_id < 200
-              )
-            )
-        """,
-        "multimodal_gif": """
-            SELECT doc_id, CAST(fi AS int) AS frame_index,
-                   CAST(12 + L + (L + 254) // 255 AS bigint) AS frame_bytes,
-                   CAST(w AS int) AS width, CAST(h AS int) AS height,
-                   'real-gif' AS splitter
-            FROM (
-              SELECT doc_id, w, h,
-                     w * h + (w * h - 1) // 110 + 2 AS L,
-                     unnest(generate_series(0, doc_id % 5, 2)) AS fi
-              FROM (
-                SELECT doc_id, 1 + doc_id % 16 AS w, 1 + (doc_id // 16) % 16 AS h
-                FROM documents WHERE doc_id < 200
-              )
-            )
         """,
         # full textbook recomputation of the window-relaxed ExactSubstr
         # dedup: same text construction, same md5 window hashes, keeper =

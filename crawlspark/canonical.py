@@ -64,13 +64,12 @@ _DOT_RULES: list[tuple[str, str]] = [
 # ---------------------------------------------------------------------------
 
 def _bind_once(expr: Column, fn) -> Column:
-    """Evaluate ``expr`` once and feed it to ``fn`` as a lambda variable
-    (textops._bind_once twin, kept local so the foundational module stays
-    import-cycle-free). Catalyst evaluates every textual occurrence of a
-    column expression independently — inside higher-order-function lambdas
-    there is no codegen subexpression elimination at all — so a multi-
-    reference intermediate must be routed through a 1-element array
-    transform to be computed exactly once."""
+    """Evaluate ``expr`` once and feed it to ``fn`` as a lambda variable.
+    Catalyst evaluates every textual occurrence of a column expression
+    independently — inside higher-order-function lambdas there is no codegen
+    subexpression elimination at all — so a multi-reference intermediate
+    must be routed through a 1-element array transform to be computed
+    exactly once."""
     return F.element_at(F.transform(F.array(expr), fn), 1)
 
 
@@ -423,8 +422,6 @@ def url_trap_signals(
     n_params = F.when(query.isNull() | (F.length(query) == 0), F.lit(0)).otherwise(
         (F.length(query) - F.length(F.replace(query, F.lit("&"), F.lit("")))) + 1
     ).cast("long")
-    from .textops import _bind_once
-
     segs = F.filter(F.split(path, "/"), lambda s: F.length(s) > 0)
     # the segment array is bound once before the per-segment lambda reads it:
     # referencing `segs` free inside the transform lambda re-ran the

@@ -117,8 +117,12 @@ def write_gpkg(
     # persisted so the envelope aggregate and the feature iteration below
     # see the SAME rows — on a non-deterministic source two separate actions
     # could otherwise write a gpkg_contents envelope inconsistent with the
-    # features (round-5 advice)
-    df = df.persist()
+    # features. A frame the caller already cached is used as is and stays
+    # cached: only the persistence added here is released below.
+    lvl = df.storageLevel
+    owned = not (lvl.useMemory or lvl.useDisk)
+    if owned:
+        df = df.persist()
     # envelope: one executor-side aggregate (metadata-sized result)
     env = df.agg(
         F.min(lon_col).alias("min_x"),
@@ -222,7 +226,8 @@ def write_gpkg(
         return n
     finally:
         con.close()
-        df.unpersist()
+        if owned:
+            df.unpersist()
 
 
 def units_to_gpkg(

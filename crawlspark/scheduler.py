@@ -661,39 +661,6 @@ class Crawler:
         datasets = datasets.join(key_map, "url", "left")
         units = units.join(key_map, "url", "left")
 
-        # opt-in post-round curation (CrawlSettings.curate): quality-gate +
-        # near-dup verdicts over THIS round's extracted text, appended as the
-        # auditable 'curation' table. Reads the persisted `extracted` cache
-        # via `datasets` — no extra payload pass. doc_id packs
-        # (surrogate_key, member_index) into one long (member_index < 2^16 —
-        # zip archives are far smaller than that).
-        extra_appends: dict[str, DataFrame] = {}
-        if s.curate:
-            from .textops import curation_decisions
-
-            ds_fields, _ = self.fields.split()
-            text_cols = [f.hash for f in ds_fields if not f.numeric]
-            corpus = datasets.select(
-                "url", "member_index",
-                (F.col("surrogate_key") * (1 << 16) + F.col("member_index"))
-                .alias("doc_id"),
-                F.concat_ws(
-                    " ", *[F.coalesce(F.col(c), F.lit("")) for c in text_cols]
-                ).alias("text"),
-            )
-            decisions = curation_decisions(
-                corpus.select("doc_id", "text"),
-                jaccard_threshold=s.curate_jaccard_threshold,
-            )
-            extra_appends["curation"] = (
-                corpus.select("url", "member_index", "doc_id")
-                .join(decisions, "doc_id")
-                .select(
-                    F.lit(round_).alias("round"), "url", "member_index",
-                    "keep", "reason",
-                )
-            )
-
         # the 1-row metrics record is pure driver data — written with pyarrow
         # directly (no Spark job), schema matching schemas.METRICS
         import pyarrow as pa
@@ -788,7 +755,6 @@ class Crawler:
                 "lineage": lineage,
                 "datasets": datasets.sortWithinPartitions("surrogate_key"),
                 "units": units.sortWithinPartitions("surrogate_key"),
-                **extra_appends,
             },
             local_appends={"metrics": metrics_tbl},
             stats_cols={"datasets": ["surrogate_key"], "units": ["surrogate_key"],

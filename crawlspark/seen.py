@@ -21,9 +21,10 @@ Engine design (north_rule):
   settings.bloom_broadcast_max_bytes total) may instead ship whole via one
   broadcast (bloom_filter_column) — fewer shuffles, local-mode default; the
   scheduler picks per settings.bloom_probe.
-* dense key assignment avoids a global single-partition sort: per-host
-  row_number + host-offset cumulative sum (the host-count table is tiny), so
-  the only global ordering work is over n_hosts rows, not n_urls.
+* dense key assignment (rank_and_key) avoids a global single-partition sort
+  above a small-batch threshold: range-repartition on the order columns,
+  per-partition row_number + cumulative partition offsets (the
+  partition-count table is tiny).
 """
 
 from __future__ import annotations
@@ -614,8 +615,8 @@ def distributed_bloom_update(
     )
 
 
-def _cumsum_offsets(counts: DataFrame, sums: list[tuple[str, str]], key: str = "_pid") -> DataFrame:
-    """Exclusive prefix sums of ``sums`` columns ordered by ``key``, computed
+def _cumsum_offsets(counts: DataFrame, sums: list[tuple[str, str]]) -> DataFrame:
+    """Exclusive prefix sums of ``sums`` columns ordered by ``_pid``, computed
     with a triangular self-join — O(p²) pairs over a frame bounded by the
     shuffle-partition count (metadata-sized), never a global window.
 
@@ -625,7 +626,7 @@ def _cumsum_offsets(counts: DataFrame, sums: list[tuple[str, str]], key: str = "
     combined-counters job instead of overlapping with it — 20.2k → 17.6k
     urls/s at 16 cores on the 800k-page crawl. The lazy join's few extra tiny
     stages per consumer are cheaper than the lost overlap."""
-    strictly_before = F.col(f"_b.{key}") < F.col(f"_a.{key}")
+    strictly_before = F.col("_b._pid") < F.col("_a._pid")
     a, b = counts.alias("_a"), counts.alias("_b")
     aggs = [
         F.coalesce(F.sum(F.col(f"_b.{src}")), F.lit(0)).alias(dst)
@@ -633,68 +634,9 @@ def _cumsum_offsets(counts: DataFrame, sums: list[tuple[str, str]], key: str = "
     ]
     return (
         a.join(b, strictly_before, "left")
-        .groupBy(F.col(f"_a.{key}").alias(key))
+        .groupBy(F.col("_a._pid").alias("_pid"))
         .agg(*aggs)
     )
-
-
-def dense_rank_range(
-    df: DataFrame,
-    order_cols: list[str],
-    out_col: str = "seq",
-    offset: int = 0,
-    keep: list | None = None,
-    small_threshold: int = 2_000_000,
-) -> DataFrame:
-    """Dense 1-based global numbering by a strict total order, skew-robust.
-
-    ADAPTIVE (the AQE idea applied to ranking): the input is persisted and
-    counted first — one job that the range path would pay anyway through its
-    sampling pass. At or under ``small_threshold`` rows the rank is one
-    single-partition window (one task sorting ≤2M rows beats the 4-job
-    range machinery, whose pure scheduling cost measured 1.6-3.6 s on a
-    1.5k-row input); above it, range-repartition on the order columns
-    (balanced regardless of key skew), then per-partition row_number +
-    cumulative partition offsets. Partition boundaries come from sampling
-    and are not deterministic — but the output IS: ranks are fully
-    determined by the total order, and range partition i always precedes
-    partition j>i in that order. Requires the order to be strict (no ties),
-    which holds for crawl batches (curl is unique). Both paths produce
-    identical output (pinned by test_seen).
-    """
-    oc = [F.col(c).asc() for c in order_cols]
-    src = df.persist()
-    if keep is not None:
-        keep.append(src)
-    if src.count() <= small_threshold:
-        w_small = Window.orderBy(*oc)
-        return src.withColumn(
-            out_col, (F.row_number().over(w_small) + F.lit(offset)).cast("long")
-        )
-    # persisted: the counts branch and the window branch MUST observe the same
-    # (sampled, hence nondeterministic) range boundaries — the cache pins them
-    d = (
-        src.repartitionByRange(*oc)
-        .sortWithinPartitions(*oc)
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
-    )
-    if keep is not None:
-        keep.append(d)
-    counts = d.groupBy("_pid").count()
-    # cumulative offsets via a triangular self-join over the TINY partition-
-    # count frame (≤ n_shuffle_partitions rows): no unpartitioned window, so
-    # nothing ever moves "all data to a single partition" — not even the
-    # bounded metadata frame
-    offsets = _cumsum_offsets(counts, [("count", "_off")])
-    w_local = Window.partitionBy("_pid").orderBy(*oc)
-    out = (
-        d.withColumn("_rn", F.row_number().over(w_local))
-        .join(F.broadcast(offsets), "_pid")
-        .withColumn(out_col, (F.col("_rn") + F.col("_off") + F.lit(offset)).cast("long"))
-        .drop("_pid", "_rn", "_off")
-    )
-    return out
 
 
 def rank_and_key(
@@ -706,21 +648,25 @@ def rank_and_key(
     small_threshold: int = 100_000,
 ) -> DataFrame:
     """Fused global numbering: one range shuffle produces BOTH the crawl-order
-    ``seq`` (dense over all rows) and the dense ``surrogate_key`` over the
-    fetched subset (first-seen order), continuing from ``key_offset``.
+    ``seq`` (dense 1-based over all rows) and the dense ``surrogate_key`` over
+    the fetched subset (first-seen order), continuing from ``key_offset``.
 
-    Same exactness/skew properties as dense_rank_range; halves the per-round
-    shuffle + plan-compile cost of the two separate rankings.
-
-    ADAPTIVE like dense_rank_range, but with a LOWER default threshold: the
-    input is persisted and counted (a job the range path pays anyway via its
-    sampling pass); at or under ``small_threshold`` rows both numberings run
-    in one single-partition window — the 4-job range machinery costs seconds
-    of pure scheduling per crawl round on small/local batches. The threshold
-    is deliberately far below dense_rank_range's 2M: rank_and_key sits on
-    the PER-ROUND crawl hot path, and a single-task sort of a bench-scale
+    ADAPTIVE (the AQE idea applied to ranking): the input is persisted and
+    counted first — one job the range path pays anyway through its sampling
+    pass. At or under ``small_threshold`` rows both numberings run in one
+    single-partition window — the 4-job range machinery costs seconds of pure
+    scheduling per crawl round on small/local batches. Above it, the input is
+    range-repartitioned on the order columns (balanced regardless of key
+    skew), numbered per partition, and shifted by cumulative partition
+    offsets. The threshold stays low because rank_and_key sits on the
+    per-round crawl hot path, and a single-task sort of a bench-scale
     800k-row batch would serialize the round at high core counts (Amdahl).
-    Both paths produce identical output (pinned by test_seen).
+
+    Range boundaries come from sampling and are not deterministic, but the
+    output is: ranks are fully determined by the total order, and range
+    partition i always precedes partition j>i in it. Requires the order to be
+    strict (no ties), which holds for crawl batches (curl is unique). Both
+    paths produce identical output (pinned by test_rank_and_key_fused).
     """
     oc = [F.col(c).asc() for c in order_cols]
     fint0 = F.col(fetched_col).cast("long")
@@ -741,6 +687,8 @@ def rank_and_key(
             )
             .drop("_frn")
         )
+    # persisted: the counts branch and the window branch MUST observe the same
+    # (sampled, hence nondeterministic) range boundaries — the cache pins them
     d = (
         src.repartitionByRange(*oc)
         .sortWithinPartitions(*oc)
@@ -753,7 +701,9 @@ def rank_and_key(
     counts = d.groupBy("_pid").agg(
         F.count("*").alias("_n"), F.sum(fint).alias("_nf")
     )
-    # triangular-join cumsum over the tiny counts frame (see dense_rank_range)
+    # cumulative offsets via a triangular self-join over the TINY partition-
+    # count frame (≤ n_shuffle_partitions rows): no unpartitioned window, so
+    # nothing ever moves "all data to a single partition"
     offsets = _cumsum_offsets(counts, [("_n", "_off"), ("_nf", "_foff")])
     w_local = Window.partitionBy("_pid").orderBy(*oc)
     out = (
@@ -771,31 +721,3 @@ def rank_and_key(
         .drop("_pid", "_rn", "_frn", "_off", "_foff")
     )
     return out
-
-
-def dense_rank_two_level(
-    df: DataFrame,
-    part_col: str,
-    order_cols: list[str],
-    out_col: str = "seq",
-    offset: int = 0,
-) -> DataFrame:
-    """Dense 1-based global numbering by (part_col, *order_cols) without a
-    single-partition global sort.
-
-    Global order is (part_col asc, *order_cols asc). Implementation: per-part
-    row_number (parallel) + cumulative part offsets computed over the tiny
-    part-count table. Scale: the only single-partition window runs over
-    n_distinct(part_col) rows (hosts), not n_rows (URLs).
-    """
-    w_part = Window.partitionBy(part_col).orderBy(*[F.col(c).asc() for c in order_cols])
-    numbered = df.withColumn("_rn", F.row_number().over(w_part))
-
-    counts = df.groupBy(part_col).count()
-    offsets = _cumsum_offsets(counts, [("count", "_off")], key=part_col)
-
-    return (
-        numbered.join(F.broadcast(offsets), part_col)
-        .withColumn(out_col, (F.col("_rn") + F.col("_off") + F.lit(offset)).cast("long"))
-        .drop("_rn", "_off")
-    )

@@ -71,17 +71,10 @@ class CrawlSettings:
     # (tests/oracle_sim.py) models exactly that
     discover_links: bool = False
     discovered_priority: int = 1    # priority for discovered urls (seed = 0)
-    # opt-in post-round curation: run the quality-gate + near-dup chain
-    # (textops.curation_decisions) over the round's extracted text and append
-    # per-document keep/drop verdicts to the warehouse 'curation' table.
-    # Default OFF — the default crawl path stays byte-identical to the
-    # reference-parity oracle
-    curate: bool = False
-    curate_jaccard_threshold: float = 0.8
     # opt-in crawl-trap derating: score each round's candidate URL shapes
     # (canonical.url_trap_signals) and divide a flagged host's politeness
     # budget by trap_budget_divisor (floor 1). Default OFF — same
-    # oracle-parity reasoning as discover_links/curate
+    # oracle-parity reasoning as discover_links
     trap_detect: bool = False
     trap_budget_divisor: int = 4
 

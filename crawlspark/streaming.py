@@ -91,7 +91,15 @@ def discovered_urls_stream(
     Dedup is against BOTH the persistent seen set and every previously
     committed ``out_table`` append (a URL arriving in two drops lands once;
     the stream never writes 'seen', so the prior-appends anti-join is what
-    makes the output-unique property hold across micro-batches). When the
+    makes the output-unique property hold across micro-batches). The prior
+    appends are read from the ``{out_table}_url_hashes`` snapshot that each
+    batch commits alongside its append, not from ``out_table`` itself.
+
+    SINGLE-WRITER CONTRACT: ``out_table`` belongs to this stream alone. Once
+    the hash snapshot exists, rows another writer appends to ``out_table``
+    are not in it, so later micro-batches do not dedup against them. Give
+    each stream its own ``out_table``; the snapshot is seeded from
+    ``out_table``'s appends only when it does not yet exist. When the
     warehouse carries a prefilter state table (``filter_table``, written by
     the batch crawl loop), the seen confirm takes the same bucket-routed
     probe as the batch rounds; without one it falls back to the exact join

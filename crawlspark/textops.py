@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .canonical import _bind_once
+
 # ---------------------------------------------------------------------------
 # dedup
 # ---------------------------------------------------------------------------
@@ -739,17 +741,6 @@ def _bits_expr(proj, lo: int, n: int):
     return out
 
 
-def _bind_once(expr, fn):
-    """Evaluate ``expr`` once and feed it to ``fn`` as a lambda variable.
-
-    Spark evaluates every occurrence of a (higher-order-function) column
-    object independently — referencing the projection aggregate from 64 bit
-    expressions re-ran it 64× per row. Wrapping it as the element of a
-    1-element array and consuming it through ``transform``'s lambda variable
-    forces exactly one evaluation."""
-    return F.element_at(F.transform(F.array(expr), fn), 1)
-
-
 def sign_sketch_expr(vec, planes: int = 16, plane_offset: int = 0, dims: int = 64):
     """LSH sign-bit sketch: bit p = sign of the dot product with a
     deterministic pseudo-random hyperplane (weights: _plane_weight, literal
@@ -1331,43 +1322,6 @@ def gopher_quality_rules(
         ok_alpha.alias("ok_alpha_ratio"),
         ok_stop.alias("ok_stopwords"),
         (ok_words & ok_mwl & ok_alpha & ok_stop).alias("keep"),
-    )
-
-
-def curation_decisions(
-    corpus: DataFrame,
-    jaccard_threshold: float = 0.8,
-    max_class_pairs: int | None = 100_000,
-) -> DataFrame:
-    """(doc_id, text) → one (doc_id, keep, reason) decision per document:
-    Gopher quality gates first, then MinHash-LSH near-dup clustering over
-    the gate survivors — the same chain as the pipeline_curate battery row,
-    shaped as an auditable per-doc verdict table (reason 'quality' |
-    'duplicate' | NULL). Used by the crawl loop's settings-gated post-round
-    curation hook (CrawlSettings.curate); scale shape inherits from its
-    stages (pure-Catalyst gates, banded id-only LSH shuffle, capped class
-    expansion)."""
-    gates = gopher_quality_rules(corpus).select("doc_id", "keep")
-    gated = corpus.join(gates.filter("keep").select("doc_id"), "doc_id")
-    pairs = minhash_lsh_pairs(
-        gated, jaccard_threshold=jaccard_threshold, max_class_pairs=max_class_pairs
-    )
-    losers = (
-        dedup_clusters(pairs).filter(~F.col("is_keeper")).select("doc_id")
-        .withColumn("_dup", F.lit(True))
-    )
-    g = gates.withColumnRenamed("keep", "_gate")
-    return (
-        corpus.select("doc_id")
-        .join(g, "doc_id", "left")
-        .join(losers, "doc_id", "left")
-        .select(
-            "doc_id",
-            (F.coalesce("_gate", F.lit(False)) & F.col("_dup").isNull()).alias("keep"),
-            F.when(~F.coalesce("_gate", F.lit(False)), F.lit("quality"))
-            .when(F.col("_dup").isNotNull(), F.lit("duplicate"))
-            .alias("reason"),
-        )
     )
 
 

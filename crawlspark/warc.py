@@ -16,7 +16,7 @@ is an HTTP message — status line + headers, blank line, body. Framing is by
 Content-Length ONLY: a payload containing the bytes ``WARC/1.0`` must NOT
 resync the parser (tested), which is why this is a byte walk and not a
 regex/split — and therefore an Arrow-batched ``mapInPandas`` (the same
-legitimately-Python tier as the multimodal codecs), never per-row Python.
+legitimately-Python tier as the extraction UDF), never per-row Python.
 
 Scale shape: WARC files are independent — parallelism is one task per file
 (Common Crawl ships ~1 GB segments; 100 TB = ~10^5 files ≫ executor

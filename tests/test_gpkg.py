@@ -172,3 +172,20 @@ def test_write_gpkg_true_overwrite(spark, tmp_path):
     layers = {r[0] for r in con.execute("SELECT table_name FROM gpkg_contents")}
     con.close()
     assert layers == {"layer_c"}
+
+
+def test_write_gpkg_keeps_caller_cache(spark, tmp_path):
+    """A frame the caller persisted stays persisted after the export: the
+    writer releases only the persistence it added itself."""
+    from pyspark.sql import functions as F
+
+    df = spark.range(3).select(
+        F.col("id").cast("double").alias("lon"),
+        F.col("id").cast("double").alias("lat"),
+    ).persist()
+    try:
+        assert write_gpkg(df, str(tmp_path / "out.gpkg")) == 3
+        assert df.is_cached
+        assert df.storageLevel.useMemory or df.storageLevel.useDisk
+    finally:
+        df.unpersist()

@@ -312,46 +312,6 @@ def test_metrics_digest(spark, tmp_path):
     assert "[ATTENTION]" in digest and f"{results[0].failed} failed" in digest
 
 
-def test_crawl_curation_hook(spark, tmp_path):
-    """CrawlSettings.curate=True: each round appends per-document keep/drop
-    verdicts (quality gates + near-dup chain over the round's extracted
-    text) to the 'curation' table; the default path writes no such table."""
-    from crawlspark import schemas, synth
-    from crawlspark.scheduler import Crawler
-    from crawlspark.settings import Settings
-    from crawlspark.warehouse import Warehouse
-
-    n, n_hosts = 40, 5
-    pages = spark.createDataFrame(
-        [synth.page_row(i, n_hosts) for i in range(n)], schemas.PAGES
-    )
-    frontier = spark.createDataFrame(synth.frontier_rows(n, n_hosts), schemas.FRONTIER)
-    robots = spark.createDataFrame(synth.robots_rows(n_hosts), schemas.ROBOTS)
-
-    wh = Warehouse(str(tmp_path / "wh"))
-    settings = Settings.new(overrides={"crawl": {"curate": True, "max_retries": 0}})
-    results = Crawler(
-        spark, settings, wh, synth.golden_fields(), pages, robots, frontier
-    ).run(max_rounds=2)
-    assert wh.has_table("curation")
-    cur = wh.read_appends(spark, "curation").collect()
-    # one verdict per extracted dataset row, across all crawled rounds
-    n_datasets = wh.read_appends(spark, "datasets").count()
-    assert len(cur) == n_datasets > 0
-    assert {r["round"] for r in cur} == set(range(len(results)))  # rounds from 0
-    for r in cur:
-        assert (r["reason"] is None) == bool(r["keep"])
-        assert r["reason"] in (None, "quality", "duplicate")
-
-    # default path: no curation table
-    wh2 = Warehouse(str(tmp_path / "wh2"))
-    Crawler(
-        spark, Settings.new(overrides={"crawl": {"max_retries": 0}}), wh2,
-        synth.golden_fields(), pages, robots, frontier,
-    ).run(max_rounds=1)
-    assert not wh2.has_table("curation")
-
-
 def test_robots_parser_consecutive_user_agent_grouping(spark):
     """RFC 9309 §2.2.1: consecutive User-agent lines form ONE record — rules
     below apply if ANY of the group's agents matches. A UA line after rule

@@ -1,10 +1,11 @@
 """Seen-set machinery: bloom routing (never drops), dense numbering."""
 
 import numpy as np
+import pytest
 
 from pyspark.sql import functions as F
 
-from crawlspark.seen import PartitionedBloom, dense_rank_range, dense_rank_two_level, split_new_vs_seen
+from crawlspark.seen import PartitionedBloom, rank_and_key, split_new_vs_seen
 
 
 def test_bloom_no_false_negatives():
@@ -101,17 +102,18 @@ def test_split_new_vs_seen_routed_df(spark):
     assert all(out[i] == (i % 2 == 0) for i in range(20))
 
 
-def _ranks(rows):
-    return {r["k"]: r["seq"] for r in rows}
-
-
-def test_rank_and_key_fused(spark):
-    from crawlspark.seen import rank_and_key
-
-    data = [(f"h{i % 5}", i % 3, i % 2 == 0, f"k{i:03d}") for i in range(57)]
+@pytest.mark.parametrize("small_threshold", [None, 0], ids=["window", "range"])
+def test_rank_and_key_fused(spark, small_threshold):
+    """Both adaptive paths — the single window (input ≤ the default
+    threshold) and the range-partitioned path (forced by threshold 0) —
+    number rows densely in (host, priority, k) order and key the fetched
+    subset densely from key_offset + 1."""
+    data = [(f"h{i % 7}", (i * 13) % 5, i % 3 != 1, f"k{i:03d}") for i in range(211)]
     df = spark.createDataFrame(data, ["host", "priority", "is_fetched", "k"])
+    kw = {} if small_threshold is None else {"small_threshold": small_threshold}
     out = {r["k"]: (r["seq"], r["surrogate_key"])
-           for r in rank_and_key(df, ["host", "priority", "k"], key_offset=100).collect()}
+           for r in rank_and_key(df, ["host", "priority", "k"], key_offset=100, **kw).collect()}
+    assert len(out) == len(data)
     ordered = sorted(data, key=lambda t: (t[0], t[1], t[3]))
     frank = 0
     for seq, row in enumerate(ordered, start=1):
@@ -121,33 +123,6 @@ def test_rank_and_key_fused(spark):
             assert out[k] == (seq, 100 + frank)
         else:
             assert out[k] == (seq, None)
-
-
-def test_dense_rank_variants_agree(spark):
-    data = [(f"h{i % 5}", i % 3, i, f"k{i:03d}") for i in range(97)]
-    df = spark.createDataFrame(data, ["host", "priority", "i", "k"])
-    a = dense_rank_range(df, ["host", "priority", "k"], out_col="seq", offset=10)
-    b = dense_rank_two_level(df, "host", ["priority", "k"], out_col="seq", offset=10)
-    ra, rb = _ranks(a.collect()), _ranks(b.collect())
-    assert ra == rb
-    # dense, 1-based + offset, ordered by (host, priority, k)
-    assert sorted(ra.values()) == list(range(11, 11 + 97))
-    ordered = sorted(data, key=lambda t: (t[0], t[1], t[3]))
-    for rank, row in enumerate(ordered, start=11):
-        assert ra[row[3]] == rank
-
-
-def test_dense_rank_adaptive_paths_identical(spark):
-    """The adaptive fast path (single window, input ≤ small_threshold) and
-    the range-partitioned path must produce IDENTICAL ranks — forced here by
-    running the same input through both thresholds."""
-    data = [(f"h{i % 7}", (i * 13) % 5, f"k{i:03d}") for i in range(211)]
-    df = spark.createDataFrame(data, ["host", "priority", "k"])
-    fast = dense_rank_range(df, ["host", "priority", "k"], out_col="seq",
-                            offset=3)                      # 211 ≤ default
-    ranged = dense_rank_range(df, ["host", "priority", "k"], out_col="seq",
-                              offset=3, small_threshold=0)  # force range path
-    assert _ranks(fast.collect()) == _ranks(ranged.collect())
 
 
 # ---------------------------------------------------------------------------
@@ -312,8 +287,6 @@ def test_split_new_vs_seen_cuckoo(spark):
 def test_cuckoo_overfull_raises():
     """An over-capacity cuckoo bucket fails loudly (resize guidance), never
     silently drops a key (which would corrupt seen-set routing)."""
-    import pytest
-
     from crawlspark.seen import PartitionedCuckoo
 
     ck = PartitionedCuckoo(2, 2, 1, max_kicks=50)  # 4 slots total

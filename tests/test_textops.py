@@ -1,4 +1,4 @@
-"""Training-data ops: dedup / similarity / text analysis / multimodal."""
+"""Training-data ops: dedup / similarity / text analysis."""
 
 import pytest
 
@@ -271,154 +271,6 @@ def test_quality_and_tokens(docs):
     assert t[1]["ws_tokens"] == 10
 
 
-def test_png_codec_roundtrip():
-    """Pure-stdlib PNG codec: encode → decode is identity for gray; RGB and
-    all five scanline filters decode per spec."""
-    import struct
-    import zlib
-
-    from crawlspark.multimodal import _png_chunk, _PNG_SIG, png_decode, png_encode_gray
-
-    px = bytes((x * 7 + y * 13) % 256 for y in range(5) for x in range(9))
-    blob = png_encode_gray(9, 5, px)
-    w, h, ch, out = png_decode(blob)
-    assert (w, h, ch) == (9, 5, 1) and out == px
-
-    # RGB, one row per filter type 0..4 (reference unfilter mirrors the spec)
-    width, height, chn = 4, 5, 3
-    rows = [bytes((r * 31 + i * 11) % 256 for i in range(width * chn)) for r in range(height)]
-
-    def flt(f, cur, prev):
-        o = bytearray()
-        for i in range(len(cur)):
-            a = cur[i - chn] if i >= chn else 0
-            b = prev[i]
-            c = prev[i - chn] if i >= chn else 0
-            if f == 0:
-                pred = 0
-            elif f == 1:
-                pred = a
-            elif f == 2:
-                pred = b
-            elif f == 3:
-                pred = (a + b) >> 1
-            else:
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-            o.append((cur[i] - pred) & 0xFF)
-        return bytes(o)
-
-    raw = b""
-    prev = bytes(width * chn)
-    for f, row in enumerate(rows):
-        raw += bytes([f]) + flt(f, row, prev)
-        prev = row
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, 2, 0, 0, 0)
-    blob = (
-        _PNG_SIG
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", zlib.compress(raw))
-        + _png_chunk(b"IEND", b"")
-    )
-    w, h, ch, out = png_decode(blob)
-    assert (w, h, ch) == (width, height, chn)
-    assert out == b"".join(rows)
-
-
-def test_multimodal_real_png_branch(spark):
-    """decode_image_features takes the real-png branch on PNG payloads and
-    falls back to the length-defined stub on garbage — per row, same batch."""
-    from crawlspark.multimodal import decode_image_features, png_encode_gray
-
-    png = png_encode_gray(6, 3, bytes(range(18)))
-    rows = [(1, bytearray(png)), (2, bytearray(b"not an image at all"))]
-    df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    got = {r["doc_id"]: r for r in decode_image_features(df).collect()}
-    assert got[1]["decoder"] == "real-png"
-    assert (got[1]["width"], got[1]["height"], got[1]["mode"]) == (6, 3, "L")
-    assert got[2]["decoder"] == "stub"
-    n = len(b"not an image at all")
-    assert (got[2]["width"], got[2]["height"]) == (1 + n % 64, 1 + (n // 64) % 64)
-
-
-def test_multimodal_png_battery_roundtrip(spark):
-    from crawlspark.multimodal import decode_image_features, synth_png_payloads
-
-    d = spark.createDataFrame([(i,) for i in (0, 5, 63, 64, 130)], "doc_id long")
-    got = {r["doc_id"]: r for r in decode_image_features(synth_png_payloads(d)).collect()}
-    for i in (0, 5, 63, 64, 130):
-        assert got[i]["decoder"] == "real-png"
-        assert got[i]["width"] == 1 + i % 64
-        assert got[i]["height"] == 1 + (i // 64) % 64
-
-
-def test_multimodal_stub_plumbing(spark):
-    from crawlspark.multimodal import decode_image_features, documents_as_binary, frame_sample
-
-    df = spark.createDataFrame(
-        [(1, "hello world"), (2, "x" * 100)], ["doc_id", "text"]
-    )
-    b = documents_as_binary(df)
-    meta = decode_image_features(b).collect()
-    assert len(meta) == 2
-    assert all(len(r["features"]) == 8 for r in meta)
-    assert all(r["decoder"] in ("real", "stub") for r in meta)
-    # determinism
-    meta2 = decode_image_features(b).collect()
-    assert sorted(map(tuple, meta)) == sorted(map(tuple, meta2))
-    frames = frame_sample(b).collect()
-    assert {r["doc_id"] for r in frames} == {1, 2}
-    assert all(r["splitter"] == "stub" and r["width"] is None for r in frames)
-
-
-def test_gif_codec_roundtrip():
-    """Pure-stdlib GIF container codec: encode N frames → the splitter finds
-    exactly N frames with the encoded dimensions and contiguous byte spans."""
-    from crawlspark.multimodal import gif_encode_frames, gif_frames
-
-    w, h = 5, 3
-    frames = [bytes(((f * 7 + i) % 128) for i in range(w * h)) for f in range(4)]
-    blob = gif_encode_frames(w, h, frames)
-    got = gif_frames(blob)
-    assert [g[0] for g in got] == [0, 1, 2, 3]
-    assert all((fw, fh) == (w, h) for _, _, _, fw, fh in got)
-    # spans are contiguous: each frame starts at its descriptor byte 0x2C
-    for _, off, ln, _, _ in got:
-        assert blob[off] == 0x2C and off + ln <= len(blob)
-    import pytest
-
-    with pytest.raises(ValueError):
-        gif_frames(b"not a gif")
-    with pytest.raises(ValueError):
-        gif_frames(b"GIF89a" + b"\x00" * 4)  # truncated header
-
-
-def test_multimodal_gif_real_splitter(spark):
-    """frame_sample takes the real-gif branch on GIF payloads (per-frame
-    dims + sampling stride) and the stub on garbage — per row, same batch."""
-    from crawlspark.multimodal import frame_sample, gif_encode_frames, synth_gif_payloads
-
-    blob = gif_encode_frames(4, 2, [bytes(8)] * 5)
-    rows = [(1, bytearray(blob)), (2, bytearray(b"plain text payload here"))]
-    df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    got = frame_sample(df, every_n=2).collect()
-    g1 = sorted((r for r in got if r["doc_id"] == 1), key=lambda r: r["frame_index"])
-    assert [r["frame_index"] for r in g1] == [0, 2, 4]  # 5 frames sampled by 2
-    assert all(r["splitter"] == "real-gif" and (r["width"], r["height"]) == (4, 2) for r in g1)
-    g2 = [r for r in got if r["doc_id"] == 2]
-    assert all(r["splitter"] == "stub" for r in g2)
-
-    # battery shape: synthesized corpus roundtrip, frame count = 1 + id%5
-    d = spark.createDataFrame([(i,) for i in (0, 3, 17, 44)], "doc_id long")
-    per = {}
-    for r in frame_sample(synth_gif_payloads(d), every_n=1).collect():
-        assert r["splitter"] == "real-gif"
-        assert r["width"] == 1 + r["doc_id"] % 16
-        per[r["doc_id"]] = per.get(r["doc_id"], 0) + 1
-    assert per == {i: 1 + i % 5 for i in (0, 3, 17, 44)}
-
-
 def test_embed_neardup_recall_vs_bruteforce(spark):
     """Banded-sketch candidates must recover the full exact pair set on a
     clustered corpus (near-dups = tiny perturbations -> same sign pattern in
@@ -490,49 +342,6 @@ def test_minhash_max_class_pairs_guard(spark, caplog):
     cl = {r["doc_id"]: (r["cluster_id"], r["is_keeper"]) for r in dedup_clusters(pairs).collect()}
     assert all(cl[i] == (0, i == 0) for i in range(n))
     assert cl[n + 1] == (n + 1, True) and cl[n + 2] == (n + 1, False)
-
-
-def test_avi_codec_roundtrip():
-    """Pure-stdlib RIFF/AVI walker: encode N frames → the walker finds
-    exactly N movi chunks with the avih dimensions and in-bounds data spans;
-    WAV payloads (also RIFF) and malformed input raise."""
-    import pytest
-
-    from crawlspark.multimodal import avi_encode_frames, avi_frames, wav_encode_pcm16
-
-    w, h = 6, 4
-    frames = [bytes(((f * 11 + i) % 251) for i in range(w * h)) for f in range(5)]
-    blob = avi_encode_frames(w, h, frames)
-    got = avi_frames(blob)
-    assert [g[0] for g in got] == [0, 1, 2, 3, 4]
-    assert all((fw, fh) == (w, h) for _, _, _, fw, fh in got)
-    for fi, off, ln, _, _ in got:
-        assert ln == w * h and blob[off:off + ln] == frames[fi]
-    with pytest.raises(ValueError):
-        avi_frames(b"not an avi")
-    with pytest.raises(ValueError):
-        avi_frames(wav_encode_pcm16(8000, [0, 1, 2]))  # RIFF but WAVE
-    with pytest.raises(ValueError):
-        avi_frames(blob[:40])  # truncated mid-chunk
-
-
-def test_frame_sample_avi_branch(spark):
-    """frame_sample routes AVI payloads through the real walker (dimensions
-    + stride from the container), GIFs through the GIF walker, and unknown
-    bytes through the stub — all in one batch."""
-    from crawlspark.multimodal import (
-        avi_encode_frames, frame_sample, gif_encode_frames,
-    )
-
-    avi = avi_encode_frames(3, 2, [bytes(6), bytes(6), bytes(6)])
-    gif = gif_encode_frames(2, 2, [bytes(4)])
-    rows = [(1, bytearray(avi)), (2, bytearray(gif)), (3, bytearray(b"plainbytes" * 5))]
-    df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    got = {(r["doc_id"], r["frame_index"]): r for r in frame_sample(df).collect()}
-    assert got[(1, 0)]["splitter"] == "real-avi" and got[(1, 0)]["width"] == 3
-    assert (1, 2) in got and (1, 1) not in got  # every_n=2 stride
-    assert got[(2, 0)]["splitter"] == "real-gif"
-    assert got[(3, 0)]["splitter"] == "stub" and got[(3, 0)]["width"] is None
 
 
 def test_minhash_cross_class_cap_routing(spark, caplog):
@@ -634,48 +443,6 @@ def test_ann_ivf_probe_fraction(spark):
     # k=60 asks for everything retrievable: fewer than the full corpus comes
     # back because unprobed lists are never scored
     assert 0 < len(got) < 59
-
-
-def test_wav_codec_roundtrip():
-    """Pure-stdlib WAV codec: encode → decode identity; malformed raises."""
-    import struct as _struct
-
-    import pytest
-
-    from crawlspark.multimodal import wav_decode, wav_encode_pcm16
-
-    samples = [((j * 37) % 9001) - 4500 for j in range(200)]
-    blob = wav_encode_pcm16(16000, samples)
-    rate, ch, bits, data = wav_decode(blob)
-    assert (rate, ch, bits) == (16000, 1, 16)
-    assert list(_struct.unpack(f"<{len(samples)}h", data)) == samples
-    with pytest.raises(ValueError):
-        wav_decode(b"RIFFxxxxNOPE")
-    with pytest.raises(ValueError):
-        wav_decode(b"plainly not audio")
-
-
-def test_multimodal_wav_real_branch(spark):
-    """decode_audio_features takes the real-wav branch on WAV payloads and
-    the stub on garbage — per row, same batch."""
-    import math
-
-    from crawlspark.multimodal import decode_audio_features, wav_encode_pcm16
-
-    samples = [100, -100, 100, -100]
-    blob = wav_encode_pcm16(8000, samples)
-    rows = [(1, bytearray(blob)), (2, bytearray(b"not audio at all"))]
-    df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    got = {r["doc_id"]: r for r in decode_audio_features(df).collect()}
-    assert got[1]["decoder"] == "real-wav"
-    assert (got[1]["sample_rate"], got[1]["channels"], got[1]["n_samples"]) == (8000, 1, 4)
-    assert got[1]["rms"] == 100.0
-    assert got[2]["decoder"] == "stub"
-    assert got[2]["n_samples"] == len(b"not audio at all")
-    assert math.isclose(
-        got[2]["rms"],
-        (sum(b * b for b in b"not audio at all") / len(b"not audio at all")) ** 0.5,
-    )
 
 
 def test_line_dedup(spark):
