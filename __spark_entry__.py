@@ -5,8 +5,8 @@ canonicalize → robots → politeness → fetch join → extraction → seen/ke
 metrics) over deterministic synthetic pages sized from sf0.001 documents.
 
 ``queries()`` exposes one named query per implemented operator family from
-SURVEY.md §2 (S1-S28) plus the training-data ops (dedup / similarity /
-text-analysis); ``oracle_sql()`` gives the DuckDB-equivalent SQL
+SURVEY.md §2 (S1-S28) plus the training-data ops (dedup / text analysis /
+corpus curation); ``oracle_sql()`` gives the DuckDB-equivalent SQL
 for every SQL-expressible one. Aggregates use exact decimal arithmetic so
 Spark and DuckDB agree bit-for-bit; float formatting uses printf-style
 rendering available identically on both sides.
@@ -510,58 +510,6 @@ def q_ngram_jaccard(spark, sf):
     )
 
 
-def q_ann_bruteforce(spark, sf):
-    from crawlspark.textops import ann_bruteforce_topk
-
-    return ann_bruteforce_topk(_t(spark, sf, "embeddings"), query_vec_id=0, k=10)
-
-
-def q_ann_lsh(spark, sf):
-    from crawlspark.textops import ann_lsh_topk
-
-    return ann_lsh_topk(_t(spark, sf, "embeddings"), query_vec_id=0, k=10, planes=6)
-
-
-def q_ann_ivf(spark, sf):
-    # IVF ANN: deterministic coarse quantizer (centroids = vec_id < nlist),
-    # posting-list assignment as a pure projection, nprobe multi-probe +
-    # exact cosine re-rank (textops.ann_ivf_topk)
-    from crawlspark.textops import ann_ivf_topk
-
-    return ann_ivf_topk(_t(spark, sf, "embeddings"), query_vec_id=0, k=10)
-
-
-def q_ann_ivf_kmeans(spark, sf):
-    # IVF ANN with the TRAINED coarse quantizer: deterministic driver-side
-    # Lloyd k-means on the vec_id < 256 sample (textops.kmeans_centroids),
-    # then the same pure-projection assignment / nprobe probe / exact cosine
-    # re-rank as ann_ivf. Oracle: bit-identical pure-Python mirror fixture
-    # (tools/make_fixtures.py ann_ivf_kmeans_fixture).
-    from crawlspark.textops import ann_ivf_topk
-
-    return ann_ivf_topk(
-        _t(spark, sf, "embeddings"), query_vec_id=0, k=10, quantizer="kmeans"
-    )
-
-
-def q_embed_neardup(spark, sf):
-    from crawlspark.textops import embedding_near_dup_pairs
-
-    e = _t(spark, sf, "embeddings")
-    dups = e.filter(F.col("vec_id") % 25 == 0).withColumn(
-        "vec_id", F.col("vec_id") + 1000000
-    )
-    return embedding_near_dup_pairs(e.unionByName(dups), threshold=0.999).orderBy("a", "b")
-
-
-def q_ann_knn_join(spark, sf):
-    # batch k-NN join (exact): top-5 corpus neighbors for every query vector
-    from crawlspark.textops import ann_knn_join_bruteforce
-
-    e = _t(spark, sf, "embeddings")
-    return ann_knn_join_bruteforce(e, e.filter(F.col("vec_id") < 8), k=5)
-
-
 def q_gopher_quality(spark, sf):
     from crawlspark.textops import gopher_quality_rules
 
@@ -626,21 +574,6 @@ def q_split_assign(spark, sf):
     return split_assign(_t(spark, sf, "documents")).orderBy("doc_id")
 
 
-def q_repetition_rules(spark, sf):
-    # Gopher §A1.2 repetition gates — shuffle-free sorted-array folds (no
-    # (doc_id, line) exchange); oracle recomputes via unnest + GROUP BY.
-    # The repartition is INPUT-SPLIT SIMULATION, not part of the operator:
-    # sf0.1 documents.parquet is one ~1.5 MB split, which would run this
-    # CPU-bound projection on a single core; a real corpus arrives in many
-    # splits (the op itself stays exchange-free — see PLANS.md §22).
-    from crawlspark.textops import repetition_rules
-
-    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return repetition_rules(
-        _t(spark, sf, "documents").repartition(n)
-    ).orderBy("doc_id")
-
-
 def q_pii_redact(spark, sf):
     # PII scrub audit: deterministic synthetic PII appended per doc (the
     # corpus itself is clean) so email/IP/phone branches all fire; identical
@@ -697,23 +630,6 @@ def q_substring_dedup(spark, sf):
     return substring_dedup(
         d.select("doc_id", text.alias("text")), window=8, stride=4
     ).orderBy("doc_id")
-
-
-def q_lm_likelihood(spark, sf):
-    # corpus-trained add-one bigram LM likelihood (CCNet-style quality
-    # signal, Wenzek et al. 2020) — integer fixed-point, bit-exact at any
-    # parallelism, so the DuckDB oracle mirrors the arithmetic directly
-    from crawlspark.textops import lm_likelihood
-
-    return lm_likelihood(_t(spark, sf, "documents")).orderBy("doc_id")
-
-
-def q_lm_buckets(spark, sf):
-    # CCNet §4.3 head/middle/tail thirds per language, cut on the quantized
-    # score histogram (no per-lang data-scale window) — exact integers
-    from crawlspark.textops import lm_buckets
-
-    return lm_buckets(_t(spark, sf, "documents")).orderBy("doc_id")
 
 
 def q_crawl_trap_detect(spark, sf):
@@ -1128,12 +1044,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_simhash": q_dedup_simhash,
         "dedup_clusters": q_dedup_clusters,
         "ngram_jaccard": q_ngram_jaccard,
-        "ann_bruteforce": q_ann_bruteforce,
-        "ann_lsh": q_ann_lsh,
-        "ann_ivf": q_ann_ivf,
-        "ann_ivf_kmeans": q_ann_ivf_kmeans,
-        "embed_neardup": q_embed_neardup,
-        "ann_knn_join": q_ann_knn_join,
         "pipeline_curate": q_pipeline_curate,
         "pipeline_training_set": q_pipeline_training_set,
         "gopher_quality": q_gopher_quality,
@@ -1144,12 +1054,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "decontaminate": q_decontaminate,
         "domain_quota": q_domain_quota,
         "split_assign": q_split_assign,
-        "repetition_rules": q_repetition_rules,
         "pii_redact": q_pii_redact,
         "pack_sequences": q_pack_sequences,
         "substring_dedup": q_substring_dedup,
-        "lm_likelihood": q_lm_likelihood,
-        "lm_buckets": q_lm_buckets,
         "crawl_trap_detect": q_crawl_trap_detect,
         "anchor_text_index": q_anchor_text_index,
         "crawl_robots_sitemaps": q_crawl_robots_sitemaps,
@@ -1460,28 +1367,6 @@ def oracle_sql() -> dict[str, str]:
                                                        string_split(b.text, ' ')))), 6) AS jaccard
             FROM documents a JOIN documents b ON b.doc_id = a.doc_id + 1
         """,
-        "ann_bruteforce": """
-            SELECT vec_id, rank FROM (
-              SELECT vec_id,
-                     row_number() OVER (
-                       ORDER BY list_cosine_similarity(
-                                  embedding,
-                                  (SELECT embedding FROM embeddings WHERE vec_id = 0)) DESC,
-                                vec_id ASC) AS rank
-              FROM embeddings WHERE vec_id <> 0
-            ) WHERE rank <= 10
-        """,
-        "ann_knn_join": """
-            SELECT q_id, vec_id, rank FROM (
-              SELECT q.vec_id AS q_id, c.vec_id AS vec_id,
-                     row_number() OVER (
-                       PARTITION BY q.vec_id
-                       ORDER BY list_cosine_similarity(c.embedding, q.embedding) DESC,
-                                c.vec_id ASC) AS rank
-              FROM embeddings c, embeddings q
-              WHERE q.vec_id < 8 AND c.vec_id <> q.vec_id
-            ) WHERE rank <= 5
-        """,
         "gopher_quality": """
             SELECT doc_id,
                    cast(nw AS bigint) AS n_words,
@@ -1578,79 +1463,6 @@ def oracle_sql() -> dict[str, str]:
                            % 100 AS bucket
                 FROM documents
             ) ORDER BY doc_id
-        """,
-        # duplicate-line + top-n-gram repetition features recomputed the
-        # textbook way (unnest + GROUP BY) — an independent formulation of
-        # the same pinned definitions as the shuffle-free fold
-        "repetition_rules": """
-            WITH lines AS (
-                SELECT doc_id, unnest(string_split(text, chr(10))) AS l
-                FROM documents
-            ),
-            lstats AS (
-                SELECT doc_id, count(*) AS n_lines,
-                       count(*) - count(DISTINCT l) AS dup_lines,
-                       sum(length(l)) AS line_chars
-                FROM lines GROUP BY doc_id
-            ),
-            ldup AS (
-                SELECT doc_id, sum((c - 1) * length(l)) AS dup_line_chars
-                FROM (SELECT doc_id, l, count(*) AS c
-                      FROM lines GROUP BY doc_id, l)
-                GROUP BY doc_id
-            ),
-            tok AS (
-                SELECT doc_id, string_split(text, ' ') AS w,
-                       length(text) AS n_chars
-                FROM documents
-            ),
-            g2 AS (
-                SELECT doc_id, max(c * length(g)) AS best FROM (
-                    SELECT doc_id,
-                           array_to_string(list_slice(w, i, i + 1), ' ') AS g,
-                           count(*) AS c
-                    FROM tok, unnest(generate_series(1, len(w) - 1)) AS t(i)
-                    GROUP BY doc_id, g HAVING count(*) >= 2
-                ) GROUP BY doc_id
-            ),
-            g3 AS (
-                SELECT doc_id, max(c * length(g)) AS best FROM (
-                    SELECT doc_id,
-                           array_to_string(list_slice(w, i, i + 2), ' ') AS g,
-                           count(*) AS c
-                    FROM tok, unnest(generate_series(1, len(w) - 2)) AS t(i)
-                    GROUP BY doc_id, g HAVING count(*) >= 2
-                ) GROUP BY doc_id
-            ),
-            feat AS (
-                SELECT t.doc_id,
-                       ls.n_lines, ls.dup_lines,
-                       round(ls.dup_lines * 1.0 / ls.n_lines, 6) AS dup_line_frac,
-                       round(CASE WHEN ls.line_chars > 0
-                             THEN coalesce(ld.dup_line_chars, 0) * 1.0 / ls.line_chars
-                             ELSE 0.0 END, 6) AS dup_line_char_frac,
-                       round(CASE WHEN t.n_chars > 0
-                             THEN coalesce(g2.best, 0) * 1.0 / t.n_chars
-                             ELSE 0.0 END, 6) AS top2gram_char_frac,
-                       round(CASE WHEN t.n_chars > 0
-                             THEN coalesce(g3.best, 0) * 1.0 / t.n_chars
-                             ELSE 0.0 END, 6) AS top3gram_char_frac
-                FROM tok t
-                JOIN lstats ls USING (doc_id)
-                LEFT JOIN ldup ld USING (doc_id)
-                LEFT JOIN g2 ON g2.doc_id = t.doc_id
-                LEFT JOIN g3 ON g3.doc_id = t.doc_id
-            )
-            SELECT doc_id, n_lines, dup_lines, dup_line_frac,
-                   dup_line_char_frac, top2gram_char_frac, top3gram_char_frac,
-                   dup_line_frac <= 0.30 AS ok_dup_lines,
-                   dup_line_char_frac <= 0.20 AS ok_dup_line_chars,
-                   top2gram_char_frac <= 0.20 AS ok_top2gram,
-                   top3gram_char_frac <= 0.18 AS ok_top3gram,
-                   (dup_line_frac <= 0.30 AND dup_line_char_frac <= 0.20
-                    AND top2gram_char_frac <= 0.20
-                    AND top3gram_char_frac <= 0.18) AS keep
-            FROM feat ORDER BY doc_id
         """,
         # identical footer construction + the identical Java/RE2-common
         # patterns, applied in the same pinned order (email → IP → phone)
@@ -1802,18 +1614,6 @@ def oracle_sql() -> dict[str, str]:
         "dedup_simhash": f"""
             SELECT a, b, hamming FROM read_parquet('{_FIXTURES}/dedup_simhash.parquet')
         """,
-        "ann_lsh": f"""
-            SELECT vec_id, rank FROM read_parquet('{_FIXTURES}/ann_lsh.parquet')
-        """,
-        "ann_ivf": f"""
-            SELECT vec_id, rank FROM read_parquet('{_FIXTURES}/ann_ivf.parquet')
-        """,
-        "ann_ivf_kmeans": f"""
-            SELECT vec_id, rank FROM read_parquet('{_FIXTURES}/ann_ivf_kmeans.parquet')
-        """,
-        "embed_neardup": f"""
-            SELECT a, b FROM read_parquet('{_FIXTURES}/embed_neardup.parquet')
-        """,
         "fingerprint_winnow": f"""
             SELECT doc_id, fp FROM read_parquet('{_FIXTURES}/fingerprint_winnow.parquet')
         """,
@@ -1885,105 +1685,6 @@ def oracle_sql() -> dict[str, str]:
             FROM agg a LEFT JOIN dwc w ON w.doc_id = a.doc_id
             ORDER BY a.doc_id
         """.replace("{shared}", " ".join(f"s{k}" for k in range(14))),
-        # add-one bigram LM on the integer fixed-point axis (scale 1e9):
-        # every term is ((c2+1)*1e9) // (c1+V) over exact long counts, so
-        # the sum is associative and order-independent on both engines
-        "lm_likelihood": """
-            WITH tok AS (
-                SELECT doc_id, string_split(lower(text), ' ') AS w
-                FROM documents
-            ),
-            bg AS (
-                SELECT doc_id,
-                       struct_extract(u.z, 1) AS w1,
-                       struct_extract(u.z, 2) AS w2
-                FROM tok,
-                     unnest(list_zip(w[1:len(w)-1], w[2:len(w)])) AS u(z)
-            ),
-            cnt1 AS (SELECT w1, count(*) AS c1 FROM bg GROUP BY w1),
-            cnt2 AS (SELECT w1, w2, count(*) AS c2 FROM bg GROUP BY w1, w2),
-            voc AS (
-                SELECT count(DISTINCT t.tok) AS v
-                FROM (SELECT unnest(w) AS tok FROM tok) t
-            ),
-            lik AS (
-                SELECT bg.doc_id,
-                       ((c2 + 1) * 1000000000) // (c1 + v) AS lik
-                FROM bg JOIN cnt2 USING (w1, w2) JOIN cnt1 USING (w1)
-                     CROSS JOIN voc
-            ),
-            agg AS (
-                SELECT doc_id, count(*) AS nb,
-                       CAST(sum(lik) AS BIGINT) AS s
-                FROM lik GROUP BY doc_id
-            )
-            SELECT d.doc_id,
-                   CAST(COALESCE(nb, 0) AS BIGINT) AS n_bigrams,
-                   CAST(COALESCE(s, 0) AS BIGINT) AS lm_score_sum,
-                   CAST(CASE WHEN COALESCE(nb, 0) = 0 THEN 0
-                             ELSE s // nb END AS BIGINT) AS lm_score_mean
-            FROM documents d LEFT JOIN agg ON d.doc_id = agg.doc_id
-            ORDER BY d.doc_id
-        """,
-        # quantized-histogram CCNet thirds over the lm_likelihood scores —
-        # same integer cuts (3*above < n / < 2n) on q = mean div 1e5
-        "lm_buckets": """
-            WITH tok AS (
-                SELECT doc_id, string_split(lower(text), ' ') AS w
-                FROM documents
-            ),
-            bg AS (
-                SELECT doc_id,
-                       struct_extract(u.z, 1) AS w1,
-                       struct_extract(u.z, 2) AS w2
-                FROM tok,
-                     unnest(list_zip(w[1:len(w)-1], w[2:len(w)])) AS u(z)
-            ),
-            cnt1 AS (SELECT w1, count(*) AS c1 FROM bg GROUP BY w1),
-            cnt2 AS (SELECT w1, w2, count(*) AS c2 FROM bg GROUP BY w1, w2),
-            voc AS (
-                SELECT count(DISTINCT t.tok) AS v
-                FROM (SELECT unnest(w) AS tok FROM tok) t
-            ),
-            lik AS (
-                SELECT bg.doc_id,
-                       ((c2 + 1) * 1000000000) // (c1 + v) AS lik
-                FROM bg JOIN cnt2 USING (w1, w2) JOIN cnt1 USING (w1)
-                     CROSS JOIN voc
-            ),
-            agg AS (
-                SELECT doc_id, count(*) AS nb,
-                       CAST(sum(lik) AS BIGINT) AS s
-                FROM lik GROUP BY doc_id
-            ),
-            scored AS (
-                SELECT d.doc_id, d.lang,
-                       CAST(CASE WHEN COALESCE(nb, 0) = 0 THEN 0
-                                 ELSE s // nb END AS BIGINT) AS lm_score_mean
-                FROM documents d LEFT JOIN agg ON d.doc_id = agg.doc_id
-            ),
-            qd AS (
-                SELECT doc_id, lang, lm_score_mean,
-                       lm_score_mean // 100000 AS q
-                FROM scored
-            ),
-            hist AS (SELECT lang, q, count(*) AS c FROM qd GROUP BY lang, q),
-            cuts AS (
-                SELECT lang, q,
-                       COALESCE(sum(c) OVER (
-                           PARTITION BY lang ORDER BY q DESC
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                       ), 0) AS above,
-                       sum(c) OVER (PARTITION BY lang) AS n
-                FROM hist
-            )
-            SELECT qd.doc_id, qd.lang, qd.lm_score_mean,
-                   CASE WHEN above * 3 < n THEN 'head'
-                        WHEN above * 3 < n * 2 THEN 'middle'
-                        ELSE 'tail' END AS ppl_bucket
-            FROM qd JOIN cuts ON qd.lang = cuts.lang AND qd.q = cuts.q
-            ORDER BY qd.doc_id
-        """,
         # identical regexp chain over the same synthesized HTML (patterns
         # stay in the Java-RE2 common subset; e'\n' = the literal newline
         # Spark's replacement strings produce; chr(39) = the apostrophe)

@@ -33,8 +33,8 @@ Architecture (Spark-first, not a port):
 * ``csvsink``     — --file-to-csv parity surface (src/main.rs:54-115)
 * ``gpkg``        — GeoPackage export (csv-to-gpkg.sh parity)
 * ``textops``     — training-data ops for the query battery: dedup (exact/minhash/
-                    simhash), similarity search, language-ID / quality / token
-                    counting, fingerprints (no crawl path reaches them)
+                    simhash), language-ID / quality / token counting,
+                    fingerprints, corpus curation (no crawl path reaches them)
 
 Everything is DataFrame-API; RDDs are never used; Python touches data only
 through Arrow-vectorized pandas UDFs: the ``extract`` and ``warc`` byte walks,

@@ -49,24 +49,7 @@ Scale notes:
 
 from __future__ import annotations
 
-import os
-import sys
-import time
 from dataclasses import dataclass
-
-_TIMING = os.environ.get("CRAWLSPARK_TIMING") == "1"
-
-
-class _Timer:
-    def __init__(self, round_: int):
-        self.round = round_
-        self.t = time.time()
-
-    def lap(self, label: str) -> None:
-        if _TIMING:
-            now = time.time()
-            sys.stderr.write(f"[timing r{self.round}] {label}: {now - self.t:.2f}s\n")
-            self.t = now
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -396,7 +379,6 @@ class Crawler:
     ) -> tuple[RoundResult, DataFrame, DataFrame, "PartitionedBloom | DataFrame | None", int]:
         s = self.settings.crawl
         sp = self.spark
-        tm = _Timer(round_)
         _pins: list = []
 
         base = enrich(frontier)
@@ -602,7 +584,6 @@ class Crawler:
         ).persist()
         _pins.append(ranked)
 
-        tm.lap("politeness+fetch plan")
         # ALL round counters in ONE action: non-selected dispositions union the
         # selected/fetch-statused ones AND the extraction kinds (each branch
         # reads a cached parent) — drop/eligibility/fetch/extraction counts
@@ -633,7 +614,6 @@ class Crawler:
             .count()
             .collect()
         }
-        tm.lap("all counters")
         n_fetched = c1.get("fetched", 0)
         n_retried = c1.get("retried", 0)
         n_failed = c1.get("failed", 0)
@@ -729,7 +709,6 @@ class Crawler:
         # per-bucket cogroup (seen.distributed_bloom_update / _cuckoo_update);
         # the driver never collects url hashes. The cogroup job runs inside
         # the commit's parallel write wave.
-        tm.lap("pre-bloom")
         tname = self._filter_table
         if self.wh.has_table(tname):
             prev_bloom_df = self.wh.read_state(sp, tname)
@@ -742,7 +721,6 @@ class Crawler:
         else:
             prev_bloom_df = None
         bloom_df = self._filter_update(new_seen.select("url_hash"), prev_bloom_df)
-        tm.lap("bloom plan")
 
         # sort-on-write (S21, the reference's post-load CLUSTER analog,
         # src/storage/database_sink.rs:408-489): committed dataset/unit files
@@ -761,7 +739,6 @@ class Crawler:
                         "frontier": []},
         )
 
-        tm.lap("commit")
         for df in (base, elig, cand, statused, extracted, *_pins):
             df.unpersist()
         # next round's bloom probe: rebuild from the committed bitmap table —

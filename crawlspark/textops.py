@@ -1,7 +1,7 @@
-"""Training-data pipeline operators over document/embedding tables.
+"""Training-data pipeline operators over document tables.
 
 These are the web-scale data-curation ops a 100 TB text pipeline needs on top
-of the crawl engine (task brief: dedup, similarity search, text analysis).
+of the crawl engine (task brief: dedup, text analysis, corpus curation).
 All hot paths are JVM-side Spark SQL (higher-order array functions); no
 per-row Python anywhere.
 
@@ -21,11 +21,6 @@ Scale notes:
   the token array (array accumulator, 1 xxhash64/token); near-dup candidates
   bucket on 16-bit chunks (hamming ≤ 3 ⇒ one of 4 chunks equal, pigeonhole),
   same bucket_pairs shape.
-* ANN: brute-force cosine is one broadcast of the query vector and a single
-  pass (F.aggregate dot products) + TakeOrderedAndProject top-k (no global
-  window); the LSH variant prunes candidates by sign-bit sketch first.
-* embedding near-dup: BANDED sign-sketches (4×16 planes) — any-band equality,
-  the MinHash banding trick, so candidates stay O(near-dups) at 10^10 vectors.
 """
 
 from __future__ import annotations
@@ -58,10 +53,10 @@ def shingles_expr(text, n: int = 3):
     The token array is BOUND once (_bind_once) before the per-shingle
     lambda reads it: a lambda body re-evaluates any outer (non-lambda-var)
     expression per element, so referencing ``F.split`` directly re-split the
-    text once PER SHINGLE — O(n²) splitting (the same defect
-    repetition_rules documents; measured 33.8 s → ~5 s for the sfbig minhash
-    signature pass when combined with the fold fix below). Output strings
-    are identical."""
+    text once PER SHINGLE — O(n²) splitting, because Spark applies no
+    subexpression elimination inside higher-order-function lambdas
+    (measured 33.8 s → ~5 s for the sfbig minhash signature pass when
+    combined with the fold fix below). Output strings are identical."""
     words = F.split(text, " ")
 
     def build(w):
@@ -641,578 +636,6 @@ def simhash_near_pairs(documents: DataFrame, max_hamming: int = 3) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# similarity search (embeddings)
-# ---------------------------------------------------------------------------
-
-def cosine_expr(a, b):
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
-    )
-    na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
-    nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v * v))
-    return dot / (na * nb)
-
-
-def ann_bruteforce_topk(embeddings: DataFrame, query_vec_id: int = 0, k: int = 10,
-                        keep: list | None = None) -> DataFrame:
-    """Exact top-k cosine neighbors of one vector — the correctness baseline.
-    The query vector is a 1-row broadcast; scoring is one scan."""
-    q = embeddings.filter(F.col("vec_id") == query_vec_id).select(
-        F.col("embedding").alias("qvec")
-    )
-    scored = (
-        embeddings.filter(F.col("vec_id") != query_vec_id)
-        .crossJoin(F.broadcast(q))
-        .select("vec_id", cosine_expr(F.col("embedding"), F.col("qvec")).alias("cos"))
-    )
-    return _rank_topk(scored, k, keep)
-
-
-def _rank_topk(scored: DataFrame, k: int, keep: list | None = None) -> DataFrame:
-    """(vec_id, rank) of the k best by (cos desc, vec_id asc) WITHOUT a global
-    window: ``orderBy().limit(k)`` compiles to TakeOrderedAndProject (per-
-    partition top-k + driver merge — no single-partition shuffle), then ranks
-    the k survivors by a broadcast self-count (k² comparisons, k≤~100)."""
-    topk = scored.orderBy(F.col("cos").desc(), F.col("vec_id").asc()).limit(k).persist()
-    # ^ k rows; both sides of the rank self-join read it — unpersisted, the
-    # full scoring scan ran twice
-    if keep is not None:
-        keep.append(topk)
-    l, r = topk.alias("l"), topk.alias("r")
-    better = (F.col("r.cos") > F.col("l.cos")) | (
-        (F.col("r.cos") == F.col("l.cos")) & (F.col("r.vec_id") < F.col("l.vec_id"))
-    )
-    return (
-        l.join(F.broadcast(r), better, "left")
-        .groupBy(F.col("l.vec_id").alias("vec_id"))
-        .agg((F.count(F.col("r.vec_id")) + 1).cast("int").alias("rank"))
-    )
-
-
-def _plane_weight(i: int, p: int) -> float:
-    """Deterministic pseudo-random hyperplane weight for (dimension i,
-    plane p): xxhash64 of "i_p" → truncated Java %, scaled to [-1, 1). Driver-
-    side and LITERAL in the plan — the naive in-expression form cost
-    dims×planes runtime hashes per row (4096 for 64-dim × 64-plane banding)
-    and blew up codegen. The values match the co-regenerated fixture oracles
-    (tools/make_fixtures.py mirrors this formula); xxhash64_py's bit-parity
-    with Spark's native xxhash64 is pinned separately by test_canonical.
-    No stored model: reproducible anywhere from the formula alone."""
-    from .canonical import xxhash64_py
-
-    h = xxhash64_py(f"{i}_{p}")
-    r = abs(h) % 1000
-    return float(r if h >= 0 else -r) / 500.0 - 1.0
-
-
-def _projections_expr(vec, n_planes: int, plane_offset: int = 0, dims: int = 64):
-    """Array of ``n_planes`` hyperplane dot products in ONE aggregate pass
-    with an array accumulator (64 per-plane aggregates each compiled their
-    own HOF tree — ~10 s of plan/codegen overhead; this is one expression).
-    Per plane the fold order over dimensions is unchanged (i ascending), so
-    every projection double — and hence every sketch bit and the fixture
-    oracles — is bit-identical to the per-plane formulation."""
-    w_matrix = F.array(
-        *[
-            F.array(*[F.lit(_plane_weight(i, plane_offset + p)) for p in range(n_planes)])
-            for i in range(dims)
-        ]
-    )  # w_matrix[i][p]
-    indexed = F.transform(vec, lambda v, i: F.struct(v.alias("v"), i.alias("i")))
-    acc0 = F.array(*[F.lit(0.0)] * n_planes)
-    return F.aggregate(
-        indexed,
-        acc0,
-        lambda acc, d: F.zip_with(
-            acc, F.element_at(w_matrix, d["i"] + 1), lambda a, w: a + d["v"] * w
-        ),
-    )
-
-
-def _bits_expr(proj, lo: int, n: int):
-    """Long whose bit b (0-based) = sign(proj[lo + b])."""
-    out = None
-    for b in range(n):
-        bit = F.when(F.element_at(proj, lo + b + 1) > 0, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        term = F.shiftleft(bit, b)
-        out = term if out is None else out.bitwiseXOR(term)
-    return out
-
-
-def sign_sketch_expr(vec, planes: int = 16, plane_offset: int = 0, dims: int = 64):
-    """LSH sign-bit sketch: bit p = sign of the dot product with a
-    deterministic pseudo-random hyperplane (weights: _plane_weight, literal
-    in the plan). ``plane_offset`` selects an independent plane family."""
-    proj = _projections_expr(vec, planes, plane_offset, dims)
-    return _bind_once(proj, lambda pr: _bits_expr(pr, 0, planes))
-
-
-def banded_sketch_expr(vec, bands: int = 4, planes_per_band: int = 16, dims: int = 64):
-    """Array of ``bands`` independent sign-sketches (the MinHash-LSH banding
-    trick applied to random hyperplanes): a pair is a candidate if ANY band's
-    sketch matches exactly, so recall grows with bands while each band's
-    bucket stays selective — candidates remain O(near-dups), never
-    O(n²/2^planes). All bands' projections come from one aggregate pass,
-    evaluated once (_bind_once)."""
-    proj = _projections_expr(vec, bands * planes_per_band, 0, dims)
-    return _bind_once(
-        proj,
-        lambda pr: F.array(
-            *[_bits_expr(pr, b * planes_per_band, planes_per_band) for b in range(bands)]
-        ),
-    )
-
-
-def ann_lsh_topk(
-    embeddings: DataFrame,
-    query_vec_id: int = 0,
-    k: int = 10,
-    planes: int = 8,
-    probe_hamming: int = 1,
-    keep: list | None = None,
-) -> DataFrame:
-    """Bucketed ANN with hamming-``probe_hamming`` multi-probe: candidates
-    share any sketch within ``probe_hamming`` bit flips of the query's (the
-    query row explodes into C(planes,<=r) probe sketches — still a tiny
-    broadcast), then exact cosine re-scoring inside the probed buckets. At
-    10^10 scale the sketch is the partition key, so each query touches only
-    the probed buckets' partitions (~sum C(planes,i)/2^planes of the corpus).
-
-    Recall contract (pinned by test_ann_lsh_recall): sign-LSH retrieves
-    HIGH-COSINE neighbors — recall 1.0 on a planted-neighbor corpus
-    (cos >= 0.95) at planes=6, r=1. On isotropic random vectors (the synthetic
-    testdata: the top-10 'neighbors' of any query sit at cos ~= 0.3) NO
-    sublinear probe retrieves the exact top-k reliably — measured 0.0 (r=0)
-    -> 0.1-0.2 (r=1) there; raise ``probe_hamming`` or fall back to
-    ann_bruteforce_topk when the corpus has no near-duplicate structure."""
-    from itertools import combinations
-
-    sk = embeddings.withColumn("sketch", sign_sketch_expr(F.col("embedding"), planes))
-    q = sk.filter(F.col("vec_id") == query_vec_id).select(
-        F.col("embedding").alias("qvec"), F.col("sketch").alias("qsketch")
-    )
-    if probe_hamming > 0:
-        masks = [
-            sum(1 << p for p in bits)
-            for r in range(probe_hamming + 1)
-            for bits in combinations(range(planes), r)
-        ]
-        # probe sketches are pairwise distinct, so no candidate matches twice
-        q = q.select(
-            "qvec",
-            F.explode(
-                F.array(*[F.col("qsketch").bitwiseXOR(F.lit(m).cast("long")) for m in masks])
-            ).alias("qsketch"),
-        )
-    cand = sk.filter(F.col("vec_id") != query_vec_id).join(
-        F.broadcast(q), F.col("sketch") == F.col("qsketch")
-    )
-    scored = cand.select("vec_id", cosine_expr(F.col("embedding"), F.col("qvec")).alias("cos"))
-    return _rank_topk(scored, k, keep)
-
-
-def kmeans_centroids(
-    sample: list[tuple[int, list[float]]],
-    nlist: int,
-    iters: int = 5,
-) -> dict[int, list[float]]:
-    """Deterministic Lloyd k-means for the IVF coarse quantizer — pure Python
-    floats, fixed iteration count, members folded in vec_id order (order-
-    stable f64 sums), so the SAME code run on the same sample always yields
-    bit-identical centroids (mirrored verbatim by tools/make_fixtures.py).
-
-    Seeding: centroids = the first ``nlist`` sample vectors (k-means with
-    fixed deterministic seeding is standard public practice — FAISS trains
-    its IVF quantizer on a sample the same way). Assignment uses the same
-    score the IVF assignment uses (dot / |centroid|, strict-> argmax, lowest
-    cell id wins ties); an emptied cluster keeps its previous centroid.
-    """
-    import math
-
-    sample = sorted(sample)  # vec_id order — fold order pinned
-    if len(sample) < nlist:
-        raise ValueError(
-            f"kmeans_centroids: training sample has {len(sample)} vectors but "
-            f"nlist={nlist} — supply at least nlist sample vectors (raise "
-            "train_n or lower nlist)"
-        )
-    cents: dict[int, list[float]] = {
-        c: [float(x) for x in sample[c][1]] for c in range(nlist)
-    }
-    for _ in range(iters):
-        norm = {c: math.sqrt(sum(x * x for x in cents[c])) for c in cents}
-        zero = [c for c in cents if norm[c] == 0.0]
-        if zero:
-            raise ValueError(
-                f"kmeans_centroids: centroid(s) {zero} are all-zero (degenerate "
-                "training sample) — the dot/|centroid| assignment score is "
-                "undefined for a zero centroid"
-            )
-        sums: dict[int, list[float]] = {c: [0.0] * len(cents[c]) for c in cents}
-        counts = {c: 0 for c in cents}
-        for _vid, vec in sample:
-            best = (float("-inf"), -1)
-            for c in range(nlist):
-                dot = 0.0
-                for x, w in zip(vec, cents[c]):
-                    dot += x * w
-                s = dot / norm[c]
-                if s > best[0]:
-                    best = (s, c)
-            cc = best[1]
-            counts[cc] += 1
-            acc = sums[cc]
-            for i, x in enumerate(vec):
-                acc[i] += float(x)
-        for c in cents:
-            if counts[c]:
-                cents[c] = [s / counts[c] for s in sums[c]]
-    return cents
-
-
-def ann_ivf_topk(
-    embeddings: DataFrame,
-    query_vec_id: int = 0,
-    k: int = 10,
-    nlist: int = 16,
-    nprobe: int = 4,
-    keep: list | None = None,
-    quantizer: str = "first",
-    train_n: int = 256,
-    kmeans_iters: int = 5,
-) -> DataFrame:
-    """IVF (inverted-file) ANN: the corpus is coarse-quantized into ``nlist``
-    posting lists (nearest centroid by cosine), the query probes its
-    ``nprobe`` nearest lists, and exact cosine re-ranks inside them — the
-    classic IVF structure (public: Sivic & Zisserman 2003 'Video Google';
-    FAISS IVF family), complementing the sign-LSH variant.
-
-    Two coarse quantizers, same plan shape (the quantizer only changes the
-    literal centroid matrix):
-
-    * ``quantizer='first'`` — centroids are the embeddings of
-      ``vec_id < nlist``: zero training, fully deterministic.
-    * ``quantizer='kmeans'`` — centroids from deterministic driver-side
-      Lloyd k-means (``kmeans_centroids``) trained on the ``vec_id <
-      train_n`` sample (sample-based IVF training is the standard public
-      construction — FAISS trains its quantizer on a corpus sample; at
-      10^10 vectors the sample read is one pruned scan of ~train_n rows).
-
-    Either way the centroids are collected once as a driver-side dim
-    (nlist-row — robots-table-sized) and inlined as literals, so list
-    assignment is a PURE PROJECTION: no shuffle, no join, whole-stage
-    codegen.
-
-    Scale shape (10^10 vectors): ``list_id`` is the corpus partition key, so
-    a query's candidate read touches only ~nprobe/nlist of the data
-    (partition pruning on the broadcast probe join); scoring + top-k reuse
-    the no-global-window _rank_topk. Expected recall follows the probed
-    mass; exact on corpora whose near neighbors share the query's coarse
-    cell (pinned by test_ann_ivf_recall).
-    """
-    import math
-
-    if quantizer == "kmeans":
-        sample_rows = (
-            embeddings.filter(F.col("vec_id") < train_n)
-            .select("vec_id", "embedding")
-            .collect()
-        )
-        sample = [(int(r["vec_id"]), [float(x) for x in r["embedding"]])
-                  for r in sample_rows]
-        cents = kmeans_centroids(sample, nlist, kmeans_iters)
-    elif quantizer == "first":
-        cent_rows = (
-            embeddings.filter(F.col("vec_id") < nlist)
-            .select("vec_id", "embedding")
-            .collect()
-        )
-        cents = {int(r["vec_id"]): [float(x) for x in r["embedding"]]
-                 for r in cent_rows}
-    else:
-        raise ValueError(f"unknown quantizer {quantizer!r} (use 'first' or 'kmeans')")
-    cent_ids = sorted(cents)
-    dims = len(cents[cent_ids[0]])
-    # centroid norms are driver-side literals — the fixture mirror computes
-    # them with the SAME python expression, so the division is bit-identical
-    cnorm = {c: math.sqrt(sum(x * x for x in cents[c])) for c in cent_ids}
-
-    def cell_scores(vec):
-        # all nlist dot products in ONE aggregate pass over the vector with a
-        # dim×cell literal matrix (the _projections_expr idiom — per-centroid
-        # cosine_expr calls re-ran the |v| norm fold nlist times per row).
-        # Cell ranking only needs a per-row monotone transform of cosine, so
-        # score = dot/|centroid| and |v| never enters. f64 products
-        # (float value auto-widened × double literal), mirrored exactly by
-        # plain python float arithmetic in tools/make_fixtures.py.
-        w_matrix = F.array(
-            *[F.array(*[F.lit(cents[c][i]) for c in cent_ids]) for i in range(dims)]
-        )
-        indexed = F.transform(vec, lambda v, i: F.struct(v.alias("v"), i.alias("i")))
-        acc0 = F.array(*[F.lit(0.0)] * len(cent_ids))
-        dots = F.aggregate(
-            indexed,
-            acc0,
-            lambda acc, d: F.zip_with(
-                acc, F.element_at(w_matrix, d["i"] + 1), lambda a, w: a + d["v"] * w
-            ),
-        )
-        return _bind_once(
-            dots,
-            lambda ds: F.array(
-                *[
-                    F.struct(
-                        (F.element_at(ds, j + 1) / F.lit(cnorm[c])).alias("score"),
-                        F.lit(c).alias("c"),
-                    )
-                    for j, c in enumerate(cent_ids)
-                ]
-            ),
-        )
-
-    # corpus-side list assignment via posexplode + COMPILED sum aggregates
-    # (the _banded_sketch_sums shape — the interpreted dims×nlist HOF fold
-    # was the assignment pass's cost; rounds 3-5 used a per-row aggregate
-    # argmax over cell_scores). Same ascending-dim f64 fold order
-    # (posexplode order + one partial per group), same score expression
-    # dot/|centroid|, and the argmax keeps the fold's tie rule: the maximum
-    # wins and among equal scores the FIRST-listed centroid (equality picks
-    # the earliest match; Spark orders NaN largest on both paths). The
-    # centroid table stays a driver-side literal dim; the one exchange +
-    # vec-keyed join added are vector-count-sized. cell_scores remains the
-    # single-row/query-side form used by the probe branch below.
-    ex = embeddings.select("vec_id", F.posexplode("embedding").alias("_i", "_v"))
-    dots_tab = ex.groupBy("vec_id").agg(
-        *[
-            F.sum(
-                F.col("_v")
-                * F.element_at(
-                    F.array(*[F.lit(cents[c][i]) for i in range(dims)]),
-                    F.col("_i") + 1,
-                )
-            ).alias(f"_d{j}")
-            for j, c in enumerate(cent_ids)
-        ]
-    )
-    score_cols = [
-        (F.col(f"_d{j}") / F.lit(cnorm[c])) for j, c in enumerate(cent_ids)
-    ]
-    mx = F.greatest(*score_cols) if len(score_cols) > 1 else score_cols[0]
-    pick = None
-    for j, c in enumerate(cent_ids):
-        pick = (
-            F.when(score_cols[j] == mx, F.lit(c))
-            if pick is None
-            else pick.when(score_cols[j] == mx, F.lit(c))
-        )
-    assigned = embeddings.select("vec_id", "embedding").join(
-        dots_tab.select("vec_id", pick.alias("list_id")), "vec_id"
-    )
-    q = embeddings.filter(F.col("vec_id") == query_vec_id).select(
-        F.col("embedding").alias("qvec")
-    )
-    # the query's nprobe nearest lists, in-frame (no driver collect of the
-    # query vector): sort cells asc by (cos, c), reverse, take nprobe
-    probes = (
-        q.select(
-            "qvec",
-            F.explode(
-                F.slice(F.reverse(F.array_sort(cell_scores(F.col("qvec")))), 1, nprobe)
-            ).alias("p"),
-        )
-        .select("qvec", F.col("p.c").alias("list_id"))
-    )
-    cand = assigned.join(F.broadcast(probes), "list_id").filter(
-        F.col("vec_id") != query_vec_id
-    )
-    scored = cand.select(
-        "vec_id", cosine_expr(F.col("embedding"), F.col("qvec")).alias("cos")
-    )
-    return _rank_topk(scored, k, keep)
-
-
-def ann_knn_join_bruteforce(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
-    """Exact batch k-NN join: top-k cosine neighbors in ``corpus`` for EVERY
-    query vector — the all-queries generalization of ann_bruteforce_topk.
-
-    The query set is a broadcast dim (a retrieval batch is small relative to
-    a 10^10-vector corpus); scoring is one corpus scan; ranking is a window
-    PARTITIONED by query id (per-partition rows = corpus candidates for one
-    query — never a global single-partition window)."""
-    q = queries.select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("qvec"))
-    scored = (
-        corpus.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id", cosine_expr(F.col("embedding"), F.col("qvec")).alias("cos"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "vec_id", "rank")
-    )
-
-
-def ann_knn_join_lsh(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    planes: int = 8,
-    probe_hamming: int = 1,
-) -> DataFrame:
-    """Scale-path batch k-NN join: corpus sketched ONCE (the sketch is the
-    corpus partition key at 10^10 vectors), each query probes its own bucket
-    plus hamming<=r neighbors; exact cosine re-scoring + per-query window
-    rank inside the probed buckets only. Same recall contract as
-    ann_lsh_topk: exact on high-cosine (near-duplicate) neighbor structure
-    (pinned by test_ann_knn_join_lsh_recall), approximate on isotropic
-    corpora."""
-    from itertools import combinations
-
-    sk_c = corpus.withColumn("sketch", sign_sketch_expr(F.col("embedding"), planes))
-    sk_q = queries.select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("qvec"),
-        sign_sketch_expr(F.col("embedding"), planes).alias("qsketch"),
-    )
-    masks = [
-        sum(1 << p for p in bits)
-        for r in range(probe_hamming + 1)
-        for bits in combinations(range(planes), r)
-    ]
-    probes = sk_q.select(
-        "q_id",
-        "qvec",
-        F.explode(
-            F.array(*[F.col("qsketch").bitwiseXOR(F.lit(m).cast("long")) for m in masks])
-        ).alias("sketch"),
-    )
-    cand = sk_c.join(F.broadcast(probes), "sketch").filter(F.col("vec_id") != F.col("q_id"))
-    scored = cand.select(
-        "q_id", "vec_id", cosine_expr(F.col("embedding"), F.col("qvec")).alias("cos")
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "vec_id", "rank")
-    )
-
-
-def _banded_sketch_sums(
-    embeddings: DataFrame,
-    bands: int,
-    planes_per_band: int,
-    dims: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, sketches) — banded_sketch_expr's values computed via posexplode +
-    COMPILED sum aggregates instead of the interpreted HOF projection fold
-    (the simhash lesson: whole-stage codegen runs the same arithmetic 3-6x
-    faster; A/B-measured 6.3 s → 2.0 s for the 4×16-plane sketch pass on the
-    10x profiling corpus, zero sketch mismatches).
-
-    Bit-parity argument: each plane's projection is Σ_i v_i·w_ip with i
-    ascending — posexplode emits positions in order within the vector's
-    (narrow-dependency) partition, and the hash aggregate folds a group's
-    rows in arrival order with a single partial per group, so every f64
-    addition happens in the same order as the HOF fold. (The fold seeds 0.0
-    and sum seeds the first term — indistinguishable through the sign
-    comparison that builds the bits.) NULL vectors drop on both paths; a
-    ZERO-LENGTH vector produced an all-zero sketch on the old path and is
-    absent here — indistinguishable in near-dup output, since empty-vector
-    cosines are NaN and never pass the threshold filter.
-
-    The one exchange added is VECTOR-count-sized (map-side combine), the
-    same order of bytes as the sketch frame itself."""
-    ex = embeddings.select(id_col, F.posexplode(vec_col).alias("_i", "_v"))
-    aggs = [
-        F.sum(
-            F.col("_v")
-            * F.element_at(
-                F.array(*[F.lit(_plane_weight(i, p)) for i in range(dims)]),
-                F.col("_i") + 1,
-            )
-        ).alias(f"_p{p}")
-        for p in range(bands * planes_per_band)
-    ]
-    sums = ex.groupBy(id_col).agg(*aggs)
-
-    def band_long(b: int):
-        out = None
-        for bit in range(planes_per_band):
-            p = b * planes_per_band + bit
-            term = F.shiftleft(
-                F.when(F.col(f"_p{p}") > 0, F.lit(1).cast("long")).otherwise(
-                    F.lit(0).cast("long")
-                ),
-                bit,
-            )
-            out = term if out is None else out.bitwiseXOR(term)
-        return out
-
-    return sums.select(
-        id_col, F.array(*[band_long(b) for b in range(bands)]).alias("sketches")
-    )
-
-
-def embedding_near_dup_pairs(
-    embeddings: DataFrame,
-    threshold: float = 0.95,
-    bands: int = 4,
-    planes_per_band: int = 16,
-    keep: list | None = None,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (a<b). Candidates via BANDED
-    sign-sketches (any of ``bands`` 16-plane sketches equal ⇒ candidate — the
-    same O(near-dups) shape as MinHash-LSH; a single flat 8-plane bucket join
-    degraded to O(n²/256) within giant buckets at 10^10 vectors), verified by
-    exact cosine ≥ threshold."""
-    sk = _banded_sketch_sums(embeddings, bands, planes_per_band)
-    # the bucket shuffle carries ONLY (vec_id, band, sketch); embeddings are
-    # re-read for the surviving pair ids via keyed joins — at 10^10 vectors
-    # dragging the float arrays through collect_list/dedup would dominate the
-    # shuffle
-    banded = sk.select("vec_id", F.posexplode("sketches").alias("band", "sketch")).persist()
-    # ^ persisted: both bucket_pairs branches read it — unpersisted they each
-    # re-run the 64-projection sketch pass. 20 bytes × bands per vector.
-    if keep is not None:
-        keep.append(banded)
-    # distinct BEFORE the verify joins: a multi-band candidate (near-exact
-    # dups share all `bands` buckets) would otherwise drag its two float
-    # arrays through the joins and pay the cosine fold once PER SHARED BAND.
-    # The dedup exchange carries only 16-byte id pairs — far cheaper than
-    # the duplicated verifies it removes (measured 50.8 s → see
-    # OPTIMIZATION_r06.md on the 10x profiling corpus).
-    pairs = bucket_pairs(banded, ["band", "sketch"], "vec_id", distinct=True)
-    # norms precomputed ONCE per vector and carried through the joins: the
-    # per-pair verify is then a single dot-product fold instead of three
-    # (dot + both norms). cos = dot / (na * nb) is the exact expression
-    # cosine_expr builds — same folds over the same arrays — so every
-    # verified cosine is bit-identical.
-    nrm = F.sqrt(F.aggregate("embedding", F.lit(0.0), lambda acc, v: acc + v * v))
-    vecs = embeddings.select("vec_id", "embedding", nrm.alias("_nrm"))
-    # no broadcast hint: the pair set is O(near-dups) — gigabytes at 10^10
-    # vectors with realistic dup rates — so these are plain keyed joins on the
-    # ids (AQE still picks broadcast itself when the set really is tiny)
-    cand = (
-        pairs
-        .join(vecs.select(F.col("vec_id").alias("a"), F.col("embedding").alias("ea"),
-                          F.col("_nrm").alias("_na")), "a")
-        .join(vecs.select(F.col("vec_id").alias("b"), F.col("embedding").alias("eb"),
-                          F.col("_nrm").alias("_nb")), "b")
-    )
-    dot = F.aggregate(
-        F.zip_with("ea", "eb", lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
-    )
-    cos = dot / (F.col("_na") * F.col("_nb"))
-    return cand.filter(cos >= threshold).select("a", "b").dropDuplicates(["a", "b"])
-
-
-# ---------------------------------------------------------------------------
 # text analysis
 # ---------------------------------------------------------------------------
 
@@ -1488,158 +911,8 @@ def split_assign(documents: DataFrame, val_pct: int = 5,
     )
 
 # ---------------------------------------------------------------------------
-# repetition filters, PII redaction, sequence packing
+# PII redaction, sequence packing, substring dedup
 # ---------------------------------------------------------------------------
-
-def repetition_rules(
-    documents: DataFrame,
-    max_dup_line_frac: float = 0.30,
-    max_dup_line_char_frac: float = 0.20,
-    max_top2gram_char_frac: float = 0.20,
-    max_top3gram_char_frac: float = 0.18,
-) -> DataFrame:
-    """Gopher-style repetition gates (Rae et al. 2021 §A1.2, public rule
-    family): duplicate-line fraction, duplicate-line CHARACTER fraction, and
-    the character coverage of the most-repeated word 2-gram / 3-gram.
-
-    Scale shape — SHUFFLE-FREE: the textbook implementation explodes lines /
-    n-grams and re-aggregates by (doc_id, value), a corpus-sized exchange.
-    Here every feature folds over a per-doc ``array_sort``-ed array (equal
-    values become adjacent, so duplicate counting is one zip of the array
-    against itself shifted by one, and the top n-gram is a longest-equal-run
-    fold) — O(n log n) per document inside whole-stage codegen, ZERO
-    exchanges at any corpus size. Each sorted array feeds exactly one
-    expression (HOF columns get no subexpression elimination — the
-    _bind_once rule), and the per-doc features are built as ONE struct then
-    expanded in a separate projection (CollapseProject keeps non-cheap
-    producers un-inlined, so the struct is evaluated once).
-
-    Definitions (pinned so the DuckDB oracle matches bit-for-bit):
-    duplicate line = any occurrence beyond a line's first (frac over total
-    lines; char frac over total line chars); top n-gram coverage =
-    max over grams occurring >= 2 times of count*len(gram) / len(text)
-    (0 when nothing repeats, the doc has fewer than n words, or is empty —
-    a gram seen once is not repetition). Ratios rounded to 6 places like
-    gopher_quality_rules."""
-
-    def _dup_line_struct(s):
-        # s = sorted line array: occurrence i>1 of a line sits next to i-1
-        n = F.size(s)
-        rep = F.zip_with(
-            F.slice(s, 1, F.greatest(n - 1, F.lit(0))),
-            F.slice(s, 2, F.greatest(n - 1, F.lit(0))),
-            lambda a, b: F.struct(
-                F.when(a == b, 1).otherwise(0).alias("c"),
-                F.when(a == b, F.length(b)).otherwise(0).alias("ch"),
-            ),
-        )
-        zero = F.struct(F.lit(0).cast("long").alias("c"),
-                        F.lit(0).cast("long").alias("ch"))
-        tot = F.aggregate(
-            rep, zero,
-            lambda acc, x: F.struct((acc["c"] + x["c"]).alias("c"),
-                                    (acc["ch"] + x["ch"]).alias("ch")),
-        )
-        chars = F.aggregate(s, F.lit(0).cast("long"),
-                            lambda acc, x: acc + F.length(x))
-        return F.struct(
-            n.cast("long").alias("n_lines"),
-            tot["c"].alias("dup_lines"),
-            tot["ch"].alias("dup_line_chars"),
-            chars.alias("line_chars"),
-        )
-
-    def _top_run_chars(s):
-        # longest equal-run fold over the sorted gram array, scored by
-        # run_length * len(gram) for runs of length >= 2 ONLY (a gram seen
-        # once is not repetition — without this, every short doc's longest
-        # single gram fails the gate); returns max score (0 for empty array)
-        zero = F.struct(
-            F.lit("").alias("prev"), F.lit(0).cast("long").alias("run"),
-            F.lit(0).cast("long").alias("best"),
-        )
-        fold = F.aggregate(
-            s, zero,
-            lambda acc, x: F.struct(
-                x.alias("prev"),
-                F.when(x == acc["prev"], acc["run"] + 1)
-                .otherwise(F.lit(1).cast("long")).alias("run"),
-                F.greatest(
-                    acc["best"],
-                    F.when(x == acc["prev"],
-                           (acc["run"] + 1) * F.length(x))
-                    .otherwise(F.lit(0).cast("long")),
-                ).alias("best"),
-            ),
-        )
-        return fold["best"]
-
-    def _top_gram_struct(words):
-        # BOTH gram families from one BOUND token array: a lambda body
-        # re-evaluates any outer (non-lambda-var) expression per element, so
-        # building grams from a free-standing F.split would re-split the
-        # text once PER GRAM — O(n^2) splitting (measured ~6x slowdown on
-        # the sf0.1 battery before binding).
-        def grams(n):
-            # strict n-grams: EMPTY array (not the whole-text fallback)
-            # below n words, so short docs score 0 repetition rather than 1.0
-            k = F.size(words) - (n - 1)
-            return F.when(
-                k >= 1,
-                F.transform(
-                    F.sequence(F.lit(0), k - 1),
-                    lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)),
-                ),
-            ).otherwise(F.array().cast("array<string>"))
-
-        return F.struct(
-            _top_run_chars(F.array_sort(grams(2))).alias("g2"),
-            _top_run_chars(F.array_sort(grams(3))).alias("g3"),
-        )
-
-    feats = F.struct(
-        _bind_once(F.array_sort(F.split(F.col("text"), "\n")),
-                   _dup_line_struct).alias("ln"),
-        _bind_once(F.split(F.col("text"), " "), _top_gram_struct).alias("g"),
-        F.length("text").cast("long").alias("n_chars"),
-    )
-    # explode(array(feats)) routes the struct through a Generate, which
-    # evaluates it ONCE per row into a bound attribute. A plain projection
-    # alias does NOT survive: SimplifyExtractValueOps inlines GetStructField
-    # over CreateNamedStruct, so each of the ~12 downstream references would
-    # re-run its sort+fold (HOFs get no subexpression elimination — measured
-    # 6-7x slower on the sf0.1 battery before this barrier).
-    base = documents.select("doc_id", F.explode(F.array(feats)).alias("_r"))
-
-    r = F.col("_r")
-    dup_line_frac = F.round(r["ln"]["dup_lines"] / r["ln"]["n_lines"], 6)
-    dup_char_frac = F.round(
-        F.when(r["ln"]["line_chars"] > 0,
-               r["ln"]["dup_line_chars"] / r["ln"]["line_chars"])
-        .otherwise(0.0), 6)
-    top2 = F.round(
-        F.when(r["n_chars"] > 0, r["g"]["g2"] / r["n_chars"]).otherwise(0.0), 6)
-    top3 = F.round(
-        F.when(r["n_chars"] > 0, r["g"]["g3"] / r["n_chars"]).otherwise(0.0), 6)
-    ok_dl = dup_line_frac <= max_dup_line_frac
-    ok_dc = dup_char_frac <= max_dup_line_char_frac
-    ok_g2 = top2 <= max_top2gram_char_frac
-    ok_g3 = top3 <= max_top3gram_char_frac
-    return base.select(
-        "doc_id",
-        r["ln"]["n_lines"].alias("n_lines"),
-        r["ln"]["dup_lines"].alias("dup_lines"),
-        dup_line_frac.alias("dup_line_frac"),
-        dup_char_frac.alias("dup_line_char_frac"),
-        top2.alias("top2gram_char_frac"),
-        top3.alias("top3gram_char_frac"),
-        ok_dl.alias("ok_dup_lines"),
-        ok_dc.alias("ok_dup_line_chars"),
-        ok_g2.alias("ok_top2gram"),
-        ok_g3.alias("ok_top3gram"),
-        (ok_dl & ok_dc & ok_g2 & ok_g3).alias("keep"),
-    )
-
 
 PII_EMAIL = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 PII_IPV4 = r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b"
@@ -1833,149 +1106,6 @@ def substring_dedup(
 
 
 # --------------------------------------------------------------------------
-# bigram language-model likelihood (CCNet-style quality signal)
-# --------------------------------------------------------------------------
-
-def lm_likelihood(documents: DataFrame, scale: int = 10**9) -> DataFrame:
-    """Corpus-trained add-one bigram LM likelihood per document — the
-    public CCNet recipe (Wenzek et al. 2020 filter Common Crawl by LM
-    score; KenLM there, an in-corpus add-one bigram model here so the
-    whole computation is one Spark job with no external model file).
-
-    Per bigram occurrence (w1, w2) the add-one likelihood is
-    ``(c2(w1,w2) + 1) / (c1(w1) + V)``; a document's score is the sum of
-    its bigrams' likelihoods. Everything stays on an INTEGER fixed-point
-    axis (each term is ``(c2+1)*scale  div  (c1+V)``, summed as longs):
-    long sums are associative, so the result is bit-identical at any
-    parallelism and a DuckDB oracle reproduces it exactly — the reason
-    logs/doubles are avoided (libm vs JVM ``log`` differ in ulps; float
-    sums depend on partition order). Higher = more predictable text.
-
-    Scale shape: the bigram fact is built once and persisted; context and
-    bigram counts are two map-side-combinable aggregations over it; the
-    probe re-joins counts by key (stopword-headed keys are skewed — AQE
-    skew-join splits them; at petabyte scale broadcast the top-K frequent
-    bigrams and shuffle only the tail). Vocabulary size rides a 1-row
-    broadcast. With per-shard counts ≤ ~1e9, ``(c2+1)*scale`` fits a
-    long; beyond that lower ``scale`` or move the ratio to decimal(38).
-
-    Output: (doc_id, n_bigrams, lm_score_sum, lm_score_mean) — longs;
-    docs with <2 tokens keep zeros.
-    """
-    toks = documents.select(
-        "doc_id", F.split(F.lower(F.col("text")), " ").alias("w")
-    )
-    n = F.size("w")
-    bigrams = (
-        toks.select(
-            "doc_id",
-            F.explode(
-                F.zip_with(
-                    F.slice("w", 1, n - 1),
-                    F.slice("w", 2, n - 1),
-                    lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-                )
-            ).alias("bg"),
-        )
-        .select("doc_id", "bg.w1", "bg.w2")
-        .persist()
-    )
-    # c1 = Σ_w2 c2 derives from the already-aggregated c2 (one combinable
-    # pass over the distinct-bigram frame instead of a second pass over raw
-    # occurrences), and the per-bigram likelihood TERM is assembled on the
-    # aggregated frames (c2 ⋈ c1, both distinct-bigram-sized) BEFORE the
-    # occurrence probe — the occurrence-cardinality frame is shuffled ONCE
-    # (the terms join) instead of twice (the former ⋈c2 then ⋈c1 chain).
-    # Same integer term per (w1, w2), same per-occurrence sum — identical.
-    c2 = bigrams.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2"))
-    c1 = c2.groupBy("w1").agg(F.sum("c2").alias("c1"))
-    vocab = toks.select(F.explode("w").alias("tok")).agg(
-        F.countDistinct("tok").alias("v")
-    )
-    terms = (
-        c2.join(c1, ["w1"])
-        .crossJoin(F.broadcast(vocab))
-        .select(
-            "w1", "w2",
-            F.expr(f"(c2 + 1) * CAST({scale} AS BIGINT) div (c1 + v)").alias("lik"),
-        )
-    )
-    agg = (
-        bigrams.join(terms, ["w1", "w2"])
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_bigrams"), F.sum("lik").alias("s"))
-    )
-    return documents.select("doc_id").join(agg, "doc_id", "left").select(
-        "doc_id",
-        F.coalesce("n_bigrams", F.lit(0)).cast("long").alias("n_bigrams"),
-        F.coalesce("s", F.lit(0)).cast("long").alias("lm_score_sum"),
-        F.coalesce(
-            F.expr("s div n_bigrams"), F.lit(0)
-        ).cast("long").alias("lm_score_mean"),
-    )
-
-
-def lm_buckets(
-    documents: DataFrame,
-    lang_col: str = "lang",
-    quant: int = 10**5,
-    scale: int = 10**9,
-) -> DataFrame:
-    """CCNet head/middle/tail partition by LM score within each language
-    (Wenzek et al. 2020 §4.3 bucket Common Crawl into thirds by per-lang
-    perplexity; higher likelihood == lower perplexity == 'head').
-
-    Scale-first construction: a per-language GLOBAL sort/window over the
-    corpus would funnel each language through one partition chain — at
-    100 TB the few-big-languages skew makes that the whole job. Instead the
-    score axis is quantized (``lm_score_mean div quant``) and classes are
-    cut on the QUANTIZED HISTOGRAM: one map-side-combinable
-    groupBy(lang, q) whose result is bounded by the score range (~1e4 rows
-    per lang at the defaults), a histogram-sized window to accumulate
-    descending counts, and a broadcast-sized join back. Docs sharing a
-    quantum share a class (CCNet's cutoffs are approximate by design);
-    classes are exact integer functions of the histogram, so a DuckDB
-    oracle reproduces them bit-for-bit.
-
-    A bucket whose first doc sits at descending-rank position p (0-based,
-    p = count of docs in strictly-higher quanta) is 'head' when 3p < n,
-    'middle' when 3p < 2n, else 'tail'.
-
-    Output: (doc_id, lang, lm_score_mean, ppl_bucket).
-    """
-    from pyspark.sql import Window
-
-    scored = lm_likelihood(documents, scale=scale).join(
-        documents.select("doc_id", F.col(lang_col).alias("lang")), "doc_id"
-    )
-    qd = scored.select(
-        "doc_id", "lang", "lm_score_mean",
-        F.expr(f"lm_score_mean div {quant}").alias("q"),
-    )
-    hist = qd.groupBy("lang", "q").agg(F.count(F.lit(1)).alias("c"))
-    w_desc = (
-        Window.partitionBy("lang")
-        .orderBy(F.col("q").desc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_lang = Window.partitionBy("lang")
-    cuts = hist.select(
-        "lang", "q",
-        F.coalesce(F.sum("c").over(w_desc), F.lit(0)).alias("above"),
-        F.sum("c").over(w_lang).alias("n"),
-    ).select(
-        "lang", "q",
-        F.when(F.col("above") * 3 < F.col("n"), F.lit("head"))
-        .when(F.col("above") * 3 < F.col("n") * 2, F.lit("middle"))
-        .otherwise(F.lit("tail"))
-        .alias("ppl_bucket"),
-    )
-    return qd.join(cuts, ["lang", "q"]).select(
-        "doc_id", "lang", "lm_score_mean", "ppl_bucket"
-    )
-
-
-# --------------------------------------------------------------------------
 # HTML → text extraction and term postings (search-side surfaces)
 # --------------------------------------------------------------------------
 
@@ -2019,8 +1149,8 @@ def term_postings(documents: DataFrame) -> DataFrame:
     """Exact TF/DF postings over the corpus — the inverted-index fact table
     (and the exact-integer core of TF-IDF: weights need only ln(n_docs/df),
     which the CONSUMER applies so every stored number stays an associative
-    long and a DuckDB oracle matches bit-for-bit; same reasoning as
-    lm_likelihood's fixed-point axis).
+    long, so the sums are associative and order-independent and a DuckDB
+    oracle matches bit-for-bit).
 
     Tokens are lowercase ``[a-z0-9]+`` runs. Scale shape: tf is one
     map-side-combinable groupBy(term, doc) over the exploded tokens; df

@@ -171,10 +171,8 @@ class Warehouse:
             if round_ not in t["rounds"]:
                 t["rounds"].append(round_)
 
-        import time as _time
         from concurrent.futures import ThreadPoolExecutor
 
-        timing = os.environ.get("CRAWLSPARK_TIMING") == "1"
         jobs = [
             (kind, name, df)
             for kind, tables in (("snapshot", snapshots or {}), ("append", appends or {}))
@@ -183,7 +181,6 @@ class Warehouse:
 
         def write_one(job):
             kind, name, df = job
-            t0 = _time.time()
             final = self._round_dir(name, round_)
             staging = final.parent / f"_staging_r{round_:06d}"
             if staging.exists():
@@ -193,10 +190,6 @@ class Warehouse:
             if final.exists():  # crashed post-rename pre-manifest: replace
                 shutil.rmtree(final)
             os.rename(staging, final)
-            if timing:
-                import sys as _sys
-
-                _sys.stderr.write(f"[timing commit] {name}: {_time.time() - t0:.2f}s\n")
             return kind, name, final
 
         if len(jobs) > 1:

@@ -159,6 +159,10 @@ def test_kill_and_resume_exact(spark, synth_dfs, full_run, tmp_path):
     _, wh_part, res1 = run_crawler(spark, synth_dfs, tmp_path / "whB", max_rounds=1)
     assert len(res1) == 1
     _, wh_part, _ = run_crawler(spark, synth_dfs, tmp_path / "whB")
+    # a third run on the drained warehouse is a no-op: no round, no commit
+    last = wh_part.last_round()
+    _, wh_part, res3 = run_crawler(spark, synth_dfs, tmp_path / "whB")
+    assert res3 == [] and wh_part.last_round() == last
 
     a = collect_state(spark, wh_full)
     b = collect_state(spark, wh_part)
@@ -168,6 +172,18 @@ def test_kill_and_resume_exact(spark, synth_dfs, full_run, tmp_path):
     ua = sorted(map(tuple, wh_full.read_appends(spark, "units").collect()))
     ub = sorted(map(tuple, wh_part.read_appends(spark, "units").collect()))
     assert ua == ub
+
+
+def test_empty_frontier_runs_no_round(spark, synth_dfs, tmp_path):
+    """An empty seed frontier runs zero rounds and commits nothing."""
+    pages, frontier, robots, cache_df = synth_dfs
+    wh = Warehouse(tmp_path / "whE")
+    crawler = Crawler(
+        spark, Settings.new(), wh, synth.golden_fields(), pages, robots,
+        frontier.limit(0), cache_df,
+    )
+    assert crawler.run() == []
+    assert wh.last_round() == -1
 
 
 def test_idempotent_recommit(spark, synth_dfs, tmp_path):

@@ -1,13 +1,10 @@
-"""Training-data ops: dedup / similarity / text analysis."""
+"""Training-data ops: dedup / text analysis / corpus curation."""
 
 import pytest
 
 from pyspark.sql import functions as F
 
 from crawlspark.textops import (
-    ann_bruteforce_topk,
-    ann_lsh_topk,
-    embedding_near_dup_pairs,
     exact_dedup_groups,
     lang_id_heuristic,
     minhash_lsh_pairs,
@@ -107,109 +104,6 @@ def test_simhash_identical_and_near(docs):
         assert pairs[(1, 3)] > 0
 
 
-def test_ann_bruteforce_self_vector(spark):
-    rows = [
-        (0, [1.0, 0.0, 0.0]),
-        (1, [1.0, 0.0, 0.0]),     # identical to query
-        (2, [0.0, 1.0, 0.0]),
-        (3, [0.9, 0.1, 0.0]),
-        (4, [-1.0, 0.0, 0.0]),
-    ]
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    top = sorted(ann_bruteforce_topk(df, query_vec_id=0, k=3).collect(),
-                 key=lambda r: r["rank"])
-    assert [r["vec_id"] for r in top] == [1, 3, 2]
-
-
-def test_ann_lsh_contains_identical(spark):
-    rows = [(i, [float((i * 7 + j * 3) % 11 - 5) for j in range(8)]) for i in range(1, 40)]
-    rows.append((0, rows[4][1]))  # query identical to vec_id 5
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    top = sorted(ann_lsh_topk(df, query_vec_id=0, k=5, planes=4).collect(),
-                 key=lambda r: r["rank"])
-    assert top and top[0]["vec_id"] == 5  # bucket shares the identical vector
-
-
-def test_ann_lsh_recall(spark):
-    """LSH's retrieval contract, quantified: on a corpus with PLANTED
-    high-cosine neighbors (the structure LSH exists for), hamming-1
-    multi-probe at planes=6 recovers the exact brute-force top-k — recall
-    1.0. (On isotropic random vectors no sublinear probe can do this; see
-    ann_lsh_topk docstring for the measured numbers.)"""
-    import random
-
-    rng = random.Random(7)
-    dims = 16
-    base = [rng.uniform(-1, 1) for _ in range(dims)]
-    rows = [(0, base)]
-    for i in range(1, 11):  # 10 planted neighbors: tiny perturbations
-        rows.append((i, [x + rng.uniform(-0.01, 0.01) for x in base]))
-    for i in range(11, 200):  # background: random directions
-        rows.append((i, [rng.uniform(-1, 1) for _ in range(dims)]))
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-
-    bf = {r["vec_id"] for r in ann_bruteforce_topk(df, 0, 10).collect()}
-    lsh = {r["vec_id"] for r in ann_lsh_topk(df, 0, 10, planes=6, probe_hamming=1).collect()}
-    recall = len(lsh & bf) / len(bf)
-    assert recall == 1.0, f"recall {recall}: missed {bf - lsh}"
-
-
-def test_embedding_near_dup(spark):
-    rows = [
-        (1, [1.0, 2.0, 3.0]),
-        (2, [1.0, 2.0, 3.0]),
-        (3, [3.0, -1.0, 0.5]),
-    ]
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    pairs = {(r["a"], r["b"]) for r in embedding_near_dup_pairs(df, threshold=0.999).collect()}
-    assert pairs == {(1, 2)}
-
-
-def test_ann_knn_join_matches_per_query(spark):
-    """Batch k-NN join == per-query brute-force top-k, query by query."""
-    from crawlspark.textops import ann_knn_join_bruteforce
-
-    rows = [(i, [float((i * 7 + j * 3) % 11 - 5) for j in range(8)]) for i in range(30)]
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    got = {}
-    for r in ann_knn_join_bruteforce(df, df.filter(F.col("vec_id") < 3), k=4).collect():
-        got.setdefault(r["q_id"], {})[r["rank"]] = r["vec_id"]
-    for qid in range(3):
-        per_query = sorted(
-            ann_bruteforce_topk(df, query_vec_id=qid, k=4).collect(),
-            key=lambda r: r["rank"],
-        )
-        assert [r["vec_id"] for r in per_query] == [got[qid][k] for k in sorted(got[qid])]
-
-
-def test_ann_knn_join_lsh_recall(spark):
-    """LSH-bucketed batch k-NN join recovers the exact top-k on planted
-    high-cosine neighbor structure (the LSH retrieval contract)."""
-    import random
-
-    from crawlspark.textops import ann_knn_join_bruteforce, ann_knn_join_lsh
-
-    rng = random.Random(11)
-    dims = 16
-    rows = []
-    vid = 0
-    for cl in range(4):  # 4 clusters x 6 near-copies
-        base = [rng.uniform(-1, 1) for _ in range(dims)]
-        for _ in range(6):
-            rows.append((vid, [x + rng.uniform(-0.005, 0.005) for x in base]))
-            vid += 1
-    for _ in range(120):  # background
-        rows.append((vid, [rng.uniform(-1, 1) for _ in range(dims)]))
-        vid += 1
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    queries = df.filter(F.col("vec_id").isin(0, 6, 12, 18))  # one per cluster
-    exact = {(r["q_id"], r["vec_id"]) for r in ann_knn_join_bruteforce(df, queries, k=5).collect()}
-    lsh = {(r["q_id"], r["vec_id"]) for r in
-           ann_knn_join_lsh(df, queries, k=5, planes=6, probe_hamming=1).collect()}
-    recall = len(lsh & exact) / len(exact)
-    assert recall == 1.0, f"recall {recall}"
-
-
 def test_winnow_fingerprints(spark):
     """Winnowing guarantee: docs sharing a run of >= window+n-1 words share
     at least one fingerprint; disjoint texts share none. Values pinned by an
@@ -269,37 +163,6 @@ def test_quality_and_tokens(docs):
     assert q[1]["stopword_hits"] == 4  # 'the' x3 + 'and' x1
     t = {r["doc_id"]: r for r in token_count(docs).collect()}
     assert t[1]["ws_tokens"] == 10
-
-
-def test_embed_neardup_recall_vs_bruteforce(spark):
-    """Banded-sketch candidates must recover the full exact pair set on a
-    clustered corpus (near-dups = tiny perturbations -> same sign pattern in
-    at least one band with overwhelming probability)."""
-    import itertools
-    import math
-
-    base = [[float((i * 13 + j * 5) % 17 - 8) for j in range(16)] for i in range(12)]
-    rows = []
-    vid = 0
-    for b in base:
-        for rep in range(3):  # 3 near-copies per cluster
-            rows.append((vid, [x + rep * 1e-6 for x in b]))
-            vid += 1
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-
-    def cos(a, b):
-        dot = sum(x * y for x, y in zip(a, b))
-        return dot / (math.sqrt(sum(x * x for x in a)) * math.sqrt(sum(y * y for y in b)))
-
-    exact = {
-        (a, b)
-        for (a, va), (b, vb) in itertools.combinations(rows, 2)
-        if cos(va, vb) >= 0.9999
-    }
-    got = {(r["a"], r["b"]) for r in embedding_near_dup_pairs(df, threshold=0.9999).collect()}
-    assert got <= exact          # verification step guarantees no false positives
-    recall = len(got & exact) / len(exact)
-    assert recall == 1.0, f"recall {recall}: {exact - got}"
 
 
 def test_dedup_clusters_nonconvergence_raises(spark):
@@ -376,73 +239,6 @@ def test_minhash_cross_class_cap_routing(spark, caplog):
           for r in dedup_clusters(pairs).collect()}
     assert all(cl[i] == (0, i == 0) for i in range(nA))
     assert all(cl[1000 + j] == (0, False) for j in range(nB))
-
-
-def test_ann_ivf_recall(spark):
-    """IVF retrieval contract: planted near-neighbors share the query's
-    coarse cell, so nprobe>=1 recovers the exact brute-force top-k."""
-    import random
-
-    from crawlspark.textops import ann_ivf_topk
-
-    rng = random.Random(11)
-    dims = 16
-    # background FIRST: ids < nlist become the coarse centroids (spread-out
-    # directions); the query + planted cluster live at high ids and all fall
-    # into the same coarse cell
-    rows = [(i, [rng.uniform(-1, 1) for _ in range(dims)]) for i in range(100)]
-    base = [rng.uniform(-1, 1) for _ in range(dims)]
-    rows.append((100, base))
-    for i in range(101, 109):  # planted neighbors of the query
-        rows.append((i, [x + rng.uniform(-0.01, 0.01) for x in base]))
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    bf = {r["vec_id"] for r in ann_bruteforce_topk(df, 100, 8).collect()}
-    ivf = {r["vec_id"] for r in ann_ivf_topk(df, 100, 8, nlist=8, nprobe=2).collect()}
-    assert len(ivf & bf) / len(bf) == 1.0, f"missed {bf - ivf}"
-
-
-def test_ann_ivf_kmeans_recall(spark):
-    """Trained quantizer contract (round-4 verdict #4): deterministic
-    k-means centroids must retrieve at least as well as the untrained
-    first-nlist quantizer on the planted-neighbor corpus."""
-    import random
-
-    from crawlspark.textops import ann_ivf_topk
-
-    rng = random.Random(11)
-    dims = 16
-    rows = [(i, [rng.uniform(-1, 1) for _ in range(dims)]) for i in range(100)]
-    base = [rng.uniform(-1, 1) for _ in range(dims)]
-    rows.append((100, base))
-    for i in range(101, 109):
-        rows.append((i, [x + rng.uniform(-0.01, 0.01) for x in base]))
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    bf = {r["vec_id"] for r in ann_bruteforce_topk(df, 100, 8).collect()}
-    first = {r["vec_id"]
-             for r in ann_ivf_topk(df, 100, 8, nlist=8, nprobe=2).collect()}
-    km = {r["vec_id"]
-          for r in ann_ivf_topk(df, 100, 8, nlist=8, nprobe=2,
-                                quantizer="kmeans", train_n=64).collect()}
-    assert len(km & bf) / len(bf) >= len(first & bf) / len(bf)
-    # and the trained path is deterministic: same call, same result set
-    km2 = {r["vec_id"]
-           for r in ann_ivf_topk(df, 100, 8, nlist=8, nprobe=2,
-                                 quantizer="kmeans", train_n=64).collect()}
-    assert km == km2
-
-
-def test_ann_ivf_probe_fraction(spark):
-    """The probe set really prunes: candidates scored = vectors whose
-    assigned list is probed, not the whole corpus (checked via the
-    assignment closed over a tiny corpus)."""
-    from crawlspark.textops import ann_ivf_topk
-
-    rows = [(i, [float((i * 13 + j * 7) % 19 - 9) for j in range(8)]) for i in range(60)]
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    got = ann_ivf_topk(df, query_vec_id=0, k=60, nlist=8, nprobe=2).collect()
-    # k=60 asks for everything retrievable: fewer than the full corpus comes
-    # back because unprobed lists are never scored
-    assert 0 < len(got) < 59
 
 
 def test_line_dedup(spark):
@@ -564,76 +360,8 @@ def test_split_assign_deterministic_and_partition_invariant(spark):
 
 
 # ---------------------------------------------------------------------------
-# repetition rules / PII redaction / sequence packing
+# PII redaction / sequence packing / substring dedup
 # ---------------------------------------------------------------------------
-
-def test_repetition_rules_features(spark):
-    from crawlspark.textops import repetition_rules
-
-    docs = spark.createDataFrame(
-        [
-            # 4 lines, "dup" 3× → dup_lines=2, dup chars 6/ (3+5+3+3)=14
-            (1, "dup\nfresh\ndup\ndup"),
-            (2, "a perfectly normal line\nanother normal line"),
-            # "spam ham" 2-gram repeats: words s h s h s h → top 2-gram
-            # "spam ham" count 3 (overlapping), len 8 → 24/26 chars
-            (3, "spam ham spam ham spam ham"),
-            (4, "one"),       # <2 words: no grams, frac 0
-            (5, ""),          # empty: all fracs 0
-        ],
-        ["doc_id", "text"],
-    )
-    got = {r["doc_id"]: r.asDict() for r in repetition_rules(docs).collect()}
-    r1 = got[1]
-    assert r1["n_lines"] == 4 and r1["dup_lines"] == 2
-    assert r1["dup_line_frac"] == 0.5
-    assert r1["dup_line_char_frac"] == round(6 / 14, 6)
-    assert not r1["ok_dup_lines"] and not r1["keep"]
-    r2 = got[2]
-    assert r2["dup_lines"] == 0 and r2["dup_line_frac"] == 0.0
-    assert r2["keep"]
-    r3 = got[3]
-    assert r3["top2gram_char_frac"] == round(3 * len("spam ham") / 26, 6)
-    assert not r3["ok_top2gram"] and not r3["keep"]
-    assert got[4]["top2gram_char_frac"] == 0.0 and got[4]["keep"]
-    r5 = got[5]
-    assert r5["n_lines"] == 1 and r5["dup_line_char_frac"] == 0.0
-    assert r5["top2gram_char_frac"] == 0.0 and r5["keep"]
-
-
-def test_repetition_rules_python_mirror(spark):
-    """Textbook counter-based recomputation must agree with the sorted-array
-    folds on varied synthetic docs (the oracle's formulation)."""
-    from collections import Counter
-    from crawlspark.textops import repetition_rules
-
-    rows = []
-    for i in range(40):
-        words = [f"w{(i * j) % 7}" for j in range(i % 13)]
-        lines = [" ".join(words[k:k + 3]) for k in range(0, len(words), 2)]
-        rows.append((i, "\n".join(lines)))
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    got = {r["doc_id"]: r.asDict() for r in repetition_rules(docs).collect()}
-    for i, text in rows:
-        lines = text.split("\n")
-        lc = Counter(lines)
-        dup_lines = sum(c - 1 for c in lc.values())
-        line_chars = sum(len(x) for x in lines)
-        dup_chars = sum((c - 1) * len(x) for x, c in lc.items())
-        w = text.split(" ")
-        for n, col in [(2, "top2gram_char_frac"), (3, "top3gram_char_frac")]:
-            grams = [" ".join(w[k:k + n]) for k in range(len(w) - n + 1)]
-            best = max(
-                (c * len(g) for g, c in Counter(grams).items() if c >= 2),
-                default=0,
-            )
-            want = round(best / len(text), 6) if len(text) else 0.0
-            assert got[i][col] == want, (i, col)
-        assert got[i]["dup_lines"] == dup_lines, i
-        assert got[i]["dup_line_char_frac"] == (
-            round(dup_chars / line_chars, 6) if line_chars else 0.0
-        ), i
-
 
 def test_pii_redact(spark):
     from crawlspark.textops import pii_redact
@@ -754,75 +482,6 @@ def test_substring_dedup_python_mirror(spark):
         assert got[i]["n_tokens"] == len(w), i
         assert got[i]["n_removed"] == len(w) - len(kept), i
         assert got[i]["n_dup_windows"] == len(dws), i
-
-
-def test_lm_likelihood_hand_computed(spark):
-    """Add-one bigram LM on a 3-doc corpus small enough to verify by hand;
-    includes a 1-token doc (no bigrams -> zeros)."""
-    from crawlspark.textops import lm_likelihood
-
-    docs = spark.createDataFrame(
-        [(0, "a b a b"), (1, "a b"), (2, "x")], ["doc_id", "text"]
-    )
-    got = {r["doc_id"]: r.asDict() for r in lm_likelihood(docs).collect()}
-    # bigrams: doc0 -> (a,b) (b,a) (a,b); doc1 -> (a,b)
-    # c1: a=3, b=1 ; c2: (a,b)=3, (b,a)=1 ; V = |{a,b,x}| = 3
-    S = 10**9
-    ab = (3 + 1) * S // (3 + 3)    # 666666666
-    ba = (1 + 1) * S // (1 + 3)    # 500000000
-    assert got[0] == {
-        "doc_id": 0, "n_bigrams": 3, "lm_score_sum": 2 * ab + ba,
-        "lm_score_mean": (2 * ab + ba) // 3,
-    }
-    assert got[1] == {
-        "doc_id": 1, "n_bigrams": 1, "lm_score_sum": ab, "lm_score_mean": ab,
-    }
-    assert got[2] == {
-        "doc_id": 2, "n_bigrams": 0, "lm_score_sum": 0, "lm_score_mean": 0,
-    }
-
-
-def test_lm_likelihood_parallelism_invariant(spark):
-    """Integer fixed-point axis: identical output at 1 and 32 shuffle
-    partitions (the reason the op avoids float log-sums)."""
-    from crawlspark.textops import lm_likelihood
-
-    docs = spark.createDataFrame(
-        [(i, f"w{i % 5} common w{(i * 3) % 7} tail common w{i % 5}")
-         for i in range(60)],
-        ["doc_id", "text"],
-    )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "1")
-        a = sorted(map(tuple, lm_likelihood(docs).collect()))
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
-        b = sorted(map(tuple, lm_likelihood(docs).collect()))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    assert a == b
-
-
-def test_lm_buckets_thirds_and_tie_sharing(spark):
-    """quant=1 -> every distinct score is its own histogram bucket: 6 docs
-    with strictly increasing scores split into exact CCNet thirds; docs
-    sharing a score share a class even when the cut lands between them."""
-    from crawlspark.textops import lm_buckets
-
-    # doc i = token 'w{i}' repeated k times: its only bigram (w_i, w_i) has
-    # c1 = c2 = k-1, so score rises with k and docs never interact
-    rows = [(i, " ".join([f"w{i}"] * k), "xx") for i, k in enumerate([2, 3, 4, 5, 6, 7])]
-    docs = spark.createDataFrame(rows, ["doc_id", "text", "lang"])
-    got = {r["doc_id"]: r["ppl_bucket"] for r in lm_buckets(docs, quant=1).collect()}
-    # k: 2 3 4 5 6 7 -> score ascending -> head = k in {7, 6}
-    assert got == {5: "head", 4: "head", 3: "middle", 2: "middle", 1: "tail", 0: "tail"}
-
-    # tie: three docs with identical score (same k, disjoint vocab) — all
-    # land in ONE bucket whose start position is 0 -> everyone 'head'
-    rows2 = [(i, " ".join([f"v{i}"] * 4), "yy") for i in range(3)]
-    docs2 = spark.createDataFrame(rows2, ["doc_id", "text", "lang"])
-    got2 = {r["doc_id"]: r["ppl_bucket"] for r in lm_buckets(docs2, quant=1).collect()}
-    assert set(got2.values()) == {"head"}
 
 
 def test_html_to_text_strips_boilerplate(spark):

@@ -12,13 +12,12 @@ fixtures (/root/reference/src/abcd/abcd_parser.rs:232-298):
 * dedup_minhash     — pure-Python xxhash64 (canonical.xxhash64_py) MinHash
   signatures + banding + exact-Jaccard verify.
 * dedup_simhash     — pure-Python SimHash votes + chunk pigeonhole + hamming.
-* ann_lsh           — numpy-free sign-sketch + cosine mirror with Spark's
-  exact float semantics (float32 products, float64 accumulation, array-order
-  folds).
-* embed_neardup     — banded sign-sketches + cosine ≥ threshold mirror.
+* fingerprint_winnow — pure-Python xxhash64 of word 3-grams + winnowing
+  (window-4 minima).
+* pipeline_curate   — the composed curation chain mirrored end to end.
 
 Integer ops mirror Spark's non-ANSI Java semantics: 64-bit wrap-around adds /
-multiplies, truncated (sign-of-dividend) %, arithmetic shifts.
+multiplies, arithmetic shifts.
 
 Run from the repo root:  python tools/make_fixtures.py
 Outputs land in tests/fixtures/oracle_sf001/*.parquet (committed).
@@ -26,8 +25,6 @@ Outputs land in tests/fixtures/oracle_sf001/*.parquet (committed).
 
 from __future__ import annotations
 
-import math
-import struct
 import sys
 from decimal import ROUND_HALF_UP, Decimal
 from pathlib import Path
@@ -53,12 +50,6 @@ def i64(x: int) -> int:
     return x - _M64 if x >= (1 << 63) else x
 
 
-def jmod(h: int, m: int) -> int:
-    """Java % : remainder with the sign of the dividend."""
-    r = abs(h) % m
-    return r if h >= 0 else -r
-
-
 def round6(x: float) -> float:
     """Spark F.round — HALF_UP decimal rounding (python round is banker's)."""
     return float(Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP))
@@ -67,16 +58,6 @@ def round6(x: float) -> float:
 def load_documents() -> list[tuple[int, str]]:
     t = pq.read_table(f"{SF_DIR}/documents.parquet", columns=["doc_id", "text"])
     return list(zip(t["doc_id"].to_pylist(), t["text"].to_pylist()))
-
-
-def load_embeddings() -> list[tuple[int, list[float]]]:
-    t = pq.read_table(f"{SF_DIR}/embeddings.parquet", columns=["vec_id", "embedding"])
-    return list(zip(t["vec_id"].to_pylist(), t["embedding"].to_pylist()))
-
-
-def f32(x: float) -> float:
-    """Round a python float to float32 precision (Spark FloatType value)."""
-    return struct.unpack("f", struct.pack("f", x))[0]
 
 
 # ---------------------------------------------------------------------------
@@ -312,204 +293,13 @@ def simhash_fixture(docs) -> pa.Table:
     )
 
 
-# ---------------------------------------------------------------------------
-# sign sketches / cosine (Spark float semantics: float32 products, float64
-# accumulation in array order)
-# ---------------------------------------------------------------------------
-
-def plane_weight(i: int, p: int) -> float:
-    return float(jmod(xxhash64_py(f"{i}_{p}"), 1000)) / 500.0 - 1.0
-
-
-def sign_sketch(vec: list[float], planes: int, offset: int = 0) -> int:
-    out = 0
-    for p in range(planes):
-        acc = 0.0
-        for i, v in enumerate(vec):
-            acc += v * plane_weight(i, offset + p)
-        if acc > 0:
-            out |= 1 << p
-    return out
-
-
-def cosine(a: list[float], b: list[float]) -> float:
-    dot = 0.0
-    for x, y in zip(a, b):
-        dot += f32(x * y)
-    na = 0.0
-    for x in a:
-        na += f32(x * x)
-    nb = 0.0
-    for y in b:
-        nb += f32(y * y)
-    return dot / (math.sqrt(na) * math.sqrt(nb))
-
-
-def ann_lsh_fixture(embs) -> pa.Table:
-    # mirrors textops.ann_lsh_topk with multi_probe=True: candidate buckets
-    # are the query's sketch plus its `planes` hamming-1 neighbors
-    planes, k, qid = 6, 10, 0
-    sk = {vid: sign_sketch(vec, planes) for vid, vec in embs}
-    vecs = dict(embs)
-    probes = {sk[qid]} | {sk[qid] ^ (1 << p) for p in range(planes)}
-    scored = [
-        (cosine(vecs[vid], vecs[qid]), vid)
-        for vid, s in sk.items()
-        if vid != qid and s in probes
-    ]
-    scored.sort(key=lambda t: (-t[0], t[1]))
-    top = scored[:k]
-    return pa.table(
-        {
-            "vec_id": pa.array([vid for _, vid in top], pa.int64()),
-            "rank": pa.array(list(range(1, len(top) + 1)), pa.int32()),
-        }
-    )
-
-
-def ann_ivf_fixture(embs) -> pa.Table:
-    """Mirror of textops.ann_ivf_topk: centroids = vec_id < nlist, cell
-    score = f64 dot / driver-computed centroid norm (the same python
-    expression the implementation inlines as a literal), strict-> argmax
-    assignment, (score, c)-sorted reversed nprobe probe, exact cosine
-    re-rank (f32-product / f64-fold semantics via cosine())."""
-    nlist, nprobe, k, qid = 16, 4, 10, 0
-    vecs = dict(embs)
-    cents = {c: vecs[c] for c in range(nlist)}
-    cnorm = {c: math.sqrt(sum(x * x for x in cents[c])) for c in cents}
-
-    def cell_score(v, c):
-        dot = 0.0
-        for x, w in zip(v, cents[c]):
-            dot += x * w
-        return dot / cnorm[c]
-
-    def assign(v):
-        best = (float("-inf"), -1)
-        for c in sorted(cents):
-            s = cell_score(v, c)
-            if s > best[0]:
-                best = (s, c)
-        return best[1]
-
-    qscores = sorted((cell_score(vecs[qid], c), c) for c in cents)
-    probe_set = {c for _, c in list(reversed(qscores))[:nprobe]}
-    cand = [
-        (cosine(v, vecs[qid]), vid)
-        for vid, v in embs
-        if vid != qid and assign(v) in probe_set
-    ]
-    cand.sort(key=lambda t: (-t[0], t[1]))
-    top = cand[:k]
-    return pa.table(
-        {
-            "vec_id": pa.array([vid for _, vid in top], pa.int64()),
-            "rank": pa.array(list(range(1, len(top) + 1)), pa.int32()),
-        }
-    )
-
-
-def ann_ivf_kmeans_fixture(embs) -> pa.Table:
-    """Mirror of textops.ann_ivf_topk(quantizer='kmeans'): deterministic
-    Lloyd k-means (init = first nlist sample vectors, fixed 5 iterations,
-    members folded in vec_id order, dot/|centroid| strict-> argmax
-    assignment, empty cluster keeps its centroid) trained on the
-    vec_id < 256 sample, then the same probe + exact-cosine re-rank as
-    ann_ivf_fixture over the trained centroids."""
-    nlist, nprobe, k, qid, train_n, iters = 16, 4, 10, 0, 256, 5
-    vecs = dict(embs)
-    sample = sorted((vid, v) for vid, v in embs if vid < train_n)
-    cents = {c: [float(x) for x in sample[c][1]] for c in range(nlist)}
-    for _ in range(iters):
-        norm = {c: math.sqrt(sum(x * x for x in cents[c])) for c in cents}
-        sums = {c: [0.0] * len(cents[c]) for c in cents}
-        counts = {c: 0 for c in cents}
-        for _vid, vec in sample:
-            best = (float("-inf"), -1)
-            for c in range(nlist):
-                dot = 0.0
-                for x, w in zip(vec, cents[c]):
-                    dot += x * w
-                s = dot / norm[c]
-                if s > best[0]:
-                    best = (s, c)
-            cc = best[1]
-            counts[cc] += 1
-            acc = sums[cc]
-            for i, x in enumerate(vec):
-                acc[i] += float(x)
-        for c in cents:
-            if counts[c]:
-                cents[c] = [s / counts[c] for s in sums[c]]
-
-    cnorm = {c: math.sqrt(sum(x * x for x in cents[c])) for c in cents}
-
-    def cell_score(v, c):
-        dot = 0.0
-        for x, w in zip(v, cents[c]):
-            dot += x * w
-        return dot / cnorm[c]
-
-    def assign(v):
-        best = (float("-inf"), -1)
-        for c in sorted(cents):
-            s = cell_score(v, c)
-            if s > best[0]:
-                best = (s, c)
-        return best[1]
-
-    qscores = sorted((cell_score(vecs[qid], c), c) for c in cents)
-    probe_set = {c for _, c in list(reversed(qscores))[:nprobe]}
-    cand = [
-        (cosine(v, vecs[qid]), vid)
-        for vid, v in embs
-        if vid != qid and assign(v) in probe_set
-    ]
-    cand.sort(key=lambda t: (-t[0], t[1]))
-    top = cand[:k]
-    return pa.table(
-        {
-            "vec_id": pa.array([vid for _, vid in top], pa.int64()),
-            "rank": pa.array(list(range(1, len(top) + 1)), pa.int32()),
-        }
-    )
-
-
-def embed_neardup_fixture(embs) -> pa.Table:
-    bands, ppb, thr = 4, 16, 0.999
-    d = embs + [(vid + 1000000, vec) for vid, vec in embs if vid % 25 == 0]
-    vecs = dict(d)
-    buckets: dict[tuple[int, int], list[int]] = {}
-    for vid, vec in d:
-        for b in range(bands):
-            buckets.setdefault((b, sign_sketch(vec, ppb, b * ppb)), []).append(vid)
-    pairs = set()
-    for ids in buckets.values():
-        ids = sorted(ids)
-        for x in range(len(ids)):
-            for y in range(x + 1, len(ids)):
-                pairs.add((ids[x], ids[y]))
-    rows = [(a, b) for a, b in sorted(pairs) if cosine(vecs[a], vecs[b]) >= thr]
-    return pa.table(
-        {
-            "a": pa.array([r[0] for r in rows], pa.int64()),
-            "b": pa.array([r[1] for r in rows], pa.int64()),
-        }
-    )
-
-
 def main() -> None:
     OUT.mkdir(parents=True, exist_ok=True)
     docs = load_documents()
-    embs = load_embeddings()
     tables = {
         "extraction_units": extraction_units_fixture(),
         "dedup_minhash": minhash_fixture(docs),
         "dedup_simhash": simhash_fixture(docs),
-        "ann_lsh": ann_lsh_fixture(embs),
-        "ann_ivf": ann_ivf_fixture(embs),
-        "ann_ivf_kmeans": ann_ivf_kmeans_fixture(embs),
-        "embed_neardup": embed_neardup_fixture(embs),
         "fingerprint_winnow": winnow_fixture(docs),
         "pipeline_curate": pipeline_curate_fixture(docs),
     }

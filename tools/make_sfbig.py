@@ -3,10 +3,10 @@
 
 The driver's round-end MEASUREMENT runs the battery at a larger, driver-
 generated scale factor (BENCH_r05.json: sf=1.0), while local testdata stops
-at sf0.1. This script replicates every sf0.1 table 10x with shifted keys and
-per-replica text/vector perturbation (so replicas are NOT exact duplicates —
-the dedup operators see a realistic unique-text workload, matching the
-driver's generated corpus shape, not a degenerate 10-copy corpus).
+at sf0.1. This script replicates every sf0.1 table the battery reads 10x with
+shifted keys and per-replica text perturbation (so replicas are NOT exact
+duplicates — the dedup operators see a realistic unique-text workload, like
+the generated sf1.0 corpus, not a degenerate 10-copy corpus).
 
 Output: $OUT (default /root/repo/BENCH/sfbig). Profiling-only — never read
 by bench.py or any declared query; correctness does not depend on it.
@@ -26,7 +26,6 @@ K = int(os.environ.get("SFBIG_K", "10"))
 
 SHIFTS = {
     "documents": ("doc_id", 5000),
-    "embeddings": ("vec_id", 2000),
     "lineitem": ("l_orderkey", 600000),
     "orders": ("o_orderkey", 150000),
     "events": ("event_id", 100000),
@@ -60,20 +59,6 @@ def main() -> None:
                     pa.array([f"r{k}"] * r.num_rows), r.column("text"), " "
                 )
                 r = r.set_column(r.schema.get_field_index("text"), "text", txt)
-            if name == "embeddings" and k > 0:
-                # perturb first component so replicas are not exact dups
-                emb = r.column("embedding").combine_chunks()
-                vals = pc.list_flatten(emb).to_numpy(zero_copy_only=False)
-                offs = emb.offsets
-                import numpy as np
-
-                vals = vals.copy()
-                starts = offs.to_numpy(zero_copy_only=False)[:-1]
-                vals[starts] += np.float32(0.001 * k)
-                emb2 = pa.ListArray.from_arrays(offs, pa.array(vals, pa.float32()))
-                r = r.set_column(
-                    r.schema.get_field_index("embedding"), "embedding", emb2
-                )
             reps.append(r)
         big = pa.concat_tables(reps)
         pq.write_table(big, f"{OUT}/{name}.parquet")

@@ -106,7 +106,7 @@ def main() -> None:
 
     # 7. minhash LSH: bucket-grouped candidates, no self-join of the
     #    signature subtree, no cartesian anywhere
-    from crawlspark.textops import ann_bruteforce_topk, embedding_near_dup_pairs, minhash_lsh_pairs
+    from crawlspark.textops import minhash_lsh_pairs
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     q = minhash_lsh_pairs(docs, jaccard_threshold=0.8)
@@ -123,30 +123,7 @@ def main() -> None:
            "ResolvedHint" not in analyzed)])
     )
 
-    # 8. ANN top-k: TakeOrderedAndProject, no global Window
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    q = ann_bruteforce_topk(emb, 0, 10)
-    p = fmt(q)
-    sections.append(
-        ("ANN brute-force top-k: TakeOrderedAndProject, no Window", p,
-         [("TakeOrderedAndProject", "TakeOrderedAndProject" in p),
-          ("no Window operator", "Window" not in p)])
-    )
-
-    # 9. embedding near-dup: banded bucket aggregation, no n² join
-    q = embedding_near_dup_pairs(emb, threshold=0.999)
-    p = fmt(q)
-    analyzed = q._jdf.queryExecution().analyzed().toString()
-    sections.append(
-        ("Embedding near-dup: banded sketches, bucket agg, no cartesian", p,
-         [("no CartesianProduct/BroadcastNestedLoop", "CartesianProduct" not in p
-           and "BroadcastNestedLoop" not in p),
-          ("posexplode of band sketches present", "Generate" in p),
-          ("no forced broadcast of the candidate-pair set",
-           "ResolvedHint" not in analyzed)])
-    )
-
-    # 10. distributed bloom build: executor-side cogroup, no driver collect
+    # 8. distributed bloom build: executor-side cogroup, no driver collect
     from crawlspark.seen import distributed_bloom_update
 
     hashes = spark.range(1000).select(F.xxhash64(F.col("id").cast("string")).alias("url_hash"))
@@ -157,7 +134,7 @@ def main() -> None:
          [("FlatMapCoGroupsInPandas operator", "FlatMapCoGroupsInPandas" in p)])
     )
 
-    # 11. routed bloom probe: per-bucket cogroup, no whole-filter broadcast
+    # 9. routed bloom probe: per-bucket cogroup, no whole-filter broadcast
     from crawlspark.seen import bloom_probe_routed
 
     bloom_df = distributed_bloom_update(hashes, None, 1 << 16, 5, 32)
@@ -170,22 +147,7 @@ def main() -> None:
           ("no broadcast of the bitmap table", "BroadcastExchange" not in p)])
     )
 
-    # 12. batch k-NN join: per-query window (never a global single-partition
-    #     window), query set broadcast (a true small dim)
-    from crawlspark.textops import ann_knn_join_bruteforce
-
-    q = ann_knn_join_bruteforce(emb, emb.filter(F.col("vec_id") < 8), k=5)
-    p = fmt(q)
-    sections.append(
-        ("Batch k-NN join: per-query window, broadcast query dim", p,
-         [("window partitioned by q_id (no global window)",
-           "windowspecdefinition(q_id" in p),
-          ("WindowGroupLimit pushes the rank<=k limit below the sort",
-           "WindowGroupLimit" in p),
-          ("query set broadcast", "BroadcastExchange" in p or "BroadcastNestedLoop" in p)])
-    )
-
-    # 13. cuckoo build/probe (deletable seen filter): same per-bucket cogroup
+    # 10. cuckoo build/probe (deletable seen filter): same per-bucket cogroup
     #     shape as bloom — table never collected or broadcast
     from crawlspark.seen import cuckoo_probe_routed, distributed_cuckoo_update
 
@@ -202,7 +164,7 @@ def main() -> None:
         ("Cuckoo filter (deletable seen prefilter): build + probe cogroups", p + "\n" + p2, checks)
     )
 
-    # 14. pipeline_curate: the composed curation chain — final plan reads the
+    # 11. pipeline_curate: the composed curation chain — final plan reads the
     #     gated corpus from cache and cluster labels from the checkpoint; no
     #     file scan is recomputed across stage boundaries
     q = em.q_pipeline_curate(spark, SF)
@@ -232,28 +194,7 @@ def main() -> None:
            and "BroadcastNestedLoop" not in p)])
     )
 
-    # 15. IVF ANN: posting-list assignment is a pure projection (no shuffle,
-    #     no join, no Python); the probe side is a broadcast
-    from crawlspark.textops import ann_ivf_topk
-
-    q = ann_ivf_topk(emb, query_vec_id=0, k=10)
-    p = fmt(q)
-    sections.append(
-        ("IVF ANN: projection-only list assignment, broadcast probe", p,
-         [("no Python/Arrow operator", "MapInPandas" not in p and "ArrowEval" not in p
-           and "BatchEvalPython" not in p),
-          ("candidate join is a broadcast HASH join on list_id",
-           "BroadcastHashJoin" in p),
-          # the only nested-loop allowed is _rank_topk's k-row rank self-join
-          # (inequality condition over the cached top-k — k² with k<=10, by
-          # design); a Cross BNLJ or CartesianProduct would mean the corpus
-          # itself went through an unkeyed join
-          ("no cartesian / no cross nested-loop over the corpus",
-           "CartesianProduct" not in p
-           and "BroadcastNestedLoopJoin Cross" not in p)])
-    )
-
-    # 16. robots.txt parse: one Catalyst fold per body — single projection
+    # 12. robots.txt parse: one Catalyst fold per body — single projection
     from crawlspark.robots import parse_robots_txt
 
     bodies = spark.createDataFrame(
@@ -268,7 +209,7 @@ def main() -> None:
           ("no exchange (pure projection)", "Exchange" not in p)])
     )
 
-    # 17. fused outlink discovery: the discover-links round reads the payload
+    # 13. fused outlink discovery: the discover-links round reads the payload
     #     ONCE — href extraction is a JVM regex in the projection feeding the
     #     extraction UDF, and the 'links' rows ride the same single
     #     MapInPandas output (round-4 verdict #2 done-criterion)
@@ -307,23 +248,7 @@ def main() -> None:
            len(html_scans) == 1)])
     )
 
-    # 18. IVF ANN with the TRAINED k-means quantizer: training is driver-side
-    #     on a pruned sample scan; the per-row plan is IDENTICAL to the
-    #     'first' quantizer — projection-only assignment, broadcast probe
-    q = ann_ivf_topk(emb, query_vec_id=0, k=10, quantizer="kmeans")
-    p = fmt(q)
-    sections.append(
-        ("IVF ANN (kmeans quantizer): same projection-only plan as 'first'", p,
-         [("no Python/Arrow operator", "MapInPandas" not in p and "ArrowEval" not in p
-           and "BatchEvalPython" not in p),
-          ("candidate join is a broadcast HASH join on list_id",
-           "BroadcastHashJoin" in p),
-          ("no cartesian / no cross nested-loop over the corpus",
-           "CartesianProduct" not in p
-           and "BroadcastNestedLoopJoin Cross" not in p)])
-    )
-
-    # 19. benchmark decontamination: benchmark gram set broadcast, corpus side
+    # 14. benchmark decontamination: benchmark gram set broadcast, corpus side
     #     map-only up to the id-only distinct (no corpus-sized shuffle)
     from crawlspark.textops import decontaminate, domain_quota, split_assign
 
@@ -339,7 +264,7 @@ def main() -> None:
           ("no cartesian product", "CartesianProduct" not in p)])
     )
 
-    # 20. domain quota: two-phase salted top-k — no single-partition exchange
+    # 15. domain quota: two-phase salted top-k — no single-partition exchange
     q = domain_quota(docs, k=20)
     p = fmt(q)
     sections.append(
@@ -350,7 +275,7 @@ def main() -> None:
           ("no Python operator", "MapInPandas" not in p and "BatchEvalPython" not in p)])
     )
 
-    # 21. split assignment: pure projection — zero exchanges
+    # 16. split assignment: pure projection — zero exchanges
     q = split_assign(docs)
     p = fmt(q)
     sections.append(
@@ -359,21 +284,9 @@ def main() -> None:
           ("whole-stage codegen", "codegen id" in p)])
     )
 
-    # 22. repetition gates: sorted-array folds — ZERO exchanges at any
-    #     corpus size (the textbook explode+regroup shape would shuffle the
-    #     whole corpus on (doc_id, line))
-    from crawlspark.textops import pack_sequences, pii_redact, repetition_rules
+    # 17. PII redaction: pure regexp projection
+    from crawlspark.textops import pack_sequences, pii_redact
 
-    q = repetition_rules(docs)
-    p = fmt(q)
-    sections.append(
-        ("Repetition gates: shuffle-free per-doc sorted-array folds", p,
-         [("no Exchange anywhere", "Exchange" not in p),
-          ("no Python operator",
-           "MapInPandas" not in p and "BatchEvalPython" not in p)])
-    )
-
-    # 23. PII redaction: pure regexp projection
     q = pii_redact(docs)
     p = fmt(q)
     sections.append(
@@ -382,7 +295,7 @@ def main() -> None:
           ("whole-stage codegen", "codegen id" in p)])
     )
 
-    # 24. sequence packing AT SCALE (small_threshold=0 forces the range
+    # 18. sequence packing AT SCALE (small_threshold=0 forces the range
     #     path): per-partition running sums + triangular metadata offsets —
     #     no global single-partition window over the corpus
     q = pack_sequences(docs, ctx=2048, small_threshold=0)
@@ -396,7 +309,7 @@ def main() -> None:
            "MapInPandas" not in p and "BatchEvalPython" not in p)])
     )
 
-    # 25. substring dedup: the only corpus-wide exchanges carry (md5, ids) —
+    # 19. substring dedup: the only corpus-wide exchanges carry (md5, ids) —
     #     TEXT never shuffles (reassembly joins dup window ids back by
     #     doc_id); keeper choice is a hash aggregate, not a window
     from crawlspark.textops import substring_dedup
@@ -412,7 +325,7 @@ def main() -> None:
            "HashAggregate" in p and "Exchange SinglePartition" not in p)])
     )
 
-    # 26. host rank: one PageRank iteration — dangling mass rides a 1-row
+    # 20. host rank: one PageRank iteration — dangling mass rides a 1-row
     #     broadcast, contributions are a map-side-combinable long sum
     from crawlspark.hostrank import host_rank
 
@@ -430,7 +343,7 @@ def main() -> None:
           ("inflow is a partial-aggregated long sum", "HashAggregate" in p)])
     )
 
-    # 27. sitemap parse: pure regexp projection + explode — zero exchanges
+    # 21. sitemap parse: pure regexp projection + explode — zero exchanges
     from crawlspark.sitemap import parse_sitemap
 
     q = parse_sitemap(
@@ -445,7 +358,7 @@ def main() -> None:
            "MapInPandas" not in p and "BatchEvalPython" not in p)])
     )
 
-    # 28. WARC ingestion: the mapInPandas MUST sit on an exchange, never
+    # 22. WARC ingestion: the mapInPandas MUST sit on an exchange, never
     #     directly on the scan (Spark 4.1 PythonRunner selector-spin)
     from crawlspark.warc import parse_warc
 
@@ -462,25 +375,7 @@ def main() -> None:
            "Exchange" in p)])
     )
 
-    # 29. bigram LM likelihood: counts are map-side-combinable hash aggs,
-    #     the probe is keyed joins (never broadcast of data-scale counts),
-    #     and everything stays JVM-side
-    from crawlspark.textops import lm_likelihood
-
-    q = lm_likelihood(docs)
-    p = fmt(q)
-    sections.append(
-        ("Bigram LM likelihood: combinable count aggs + keyed probe joins", p,
-         [("map-side partial aggregation on the count tables",
-           "partial_count" in p or "HashAggregate" in p),
-          ("vocabulary scalar rides a broadcast", "BroadcastNestedLoopJoin" in p
-           or "BroadcastExchange" in p),
-          ("no Python operator",
-           "MapInPandas" not in p and "BatchEvalPython" not in p),
-          ("no cartesian product", "CartesianProduct" not in p)])
-    )
-
-    # 30. crawl-trap signals: one combinable groupBy(host) — the per-URL
+    # 23. crawl-trap signals: one combinable groupBy(host) — the per-URL
     #     feature extraction is pure projection
     from crawlspark.canonical import url_trap_signals
 
@@ -500,25 +395,7 @@ def main() -> None:
            "MapInPandas" not in p and "BatchEvalPython" not in p)])
     )
 
-    # 31. CCNet buckets: the class cut runs on the quantized HISTOGRAM — the
-    #     only Window in the plan consumes an aggregated frame, never the
-    #     data-scale doc rows
-    from crawlspark.textops import lm_buckets
-
-    q = lm_buckets(docs)
-    p = fmt(q)
-    sections.append(
-        ("CCNet thirds: histogram-cut window (no data-scale sort)", p,
-         [("window present for the histogram cumulation", "Window" in p),
-          ("histogram aggregate feeds the window (HashAggregate below)",
-           "HashAggregate" in p),
-          ("no single-partition exchange",
-           "Exchange SinglePartition" not in p),
-          ("no Python operator",
-           "MapInPandas" not in p and "BatchEvalPython" not in p)])
-    )
-
-    # 32. anchor-text index: data-scale rows pass only through combinable
+    # 24. anchor-text index: data-scale rows pass only through combinable
     #     aggregations; the top-anchor window sits on the (url, anchor)
     #     aggregate
     from crawlspark.canonical import anchor_text_index
@@ -543,7 +420,7 @@ def main() -> None:
            "MapInPandas" not in p and "BatchEvalPython" not in p)])
     )
 
-    # 33. freshness recrawl: the lag window partitions by url (bounded by
+    # 25. freshness recrawl: the lag window partitions by url (bounded by
     #     round count per partition), aggregation is combinable, no Python
     from crawlspark.freshness import change_rates, recrawl_priorities
 
@@ -564,7 +441,7 @@ def main() -> None:
            "MapInPandas" not in p and "BatchEvalPython" not in p)])
     )
 
-    # 34. WET text extraction: one shuffle-free regexp projection
+    # 26. WET text extraction: one shuffle-free regexp projection
     from crawlspark.textops import html_to_text, term_postings
 
     q = html_to_text(docs.select("doc_id", F.col("text").alias("payload")))
@@ -577,7 +454,7 @@ def main() -> None:
            "MapInPandas" not in p and "BatchEvalPython" not in p)])
     )
 
-    # 35. term postings: df aggregates the AGGREGATED tf table; n_docs is a
+    # 27. term postings: df aggregates the AGGREGATED tf table; n_docs is a
     #     1-row broadcast; no Python, no cartesian
     q = term_postings(docs)
     p = fmt(q)
@@ -591,7 +468,7 @@ def main() -> None:
            "MapInPandas" not in p and "BatchEvalPython" not in p)])
     )
 
-    # 36. WARC→WET→gates composed pipeline: exactly ONE Python operator
+    # 28. WARC→WET→gates composed pipeline: exactly ONE Python operator
     #     (the WARC byte walk), an exchange below it (selector-spin guard),
     #     everything downstream pure Catalyst
     q = em.q_pipeline_warc_wet(spark, SF)
