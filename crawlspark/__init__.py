@@ -27,7 +27,6 @@ Architecture (Spark-first, not a port):
 * ``warc``        — WARC/1.0 archive ingestion → records + the PAGES load edge
 * ``hostrank``    — fixed-point host-graph PageRank → frontier priority tiers
 * ``freshness``   — change-rate estimation → recrawl tiers (feeds ``Crawler.evict``)
-* ``streaming``   — Structured-Streaming variant of the discovery stage
 * ``report``      — metrics digest render of the per-round counters
 * ``listing``     — dataset_listing semi-join view (src/storage/database_sink.rs:492-558)
 * ``csvsink``     — --file-to-csv parity surface (src/main.rs:54-115)
@@ -38,8 +37,8 @@ Architecture (Spark-first, not a port):
 
 Everything is DataFrame-API; RDDs are never used; Python touches data only
 through Arrow-vectorized pandas UDFs: the ``extract`` and ``warc`` byte walks,
-the per-bucket seen-filter cogroups in ``seen``, bench-scale ``synth``
-generation and the stateful host stream in ``streaming``.
+the per-bucket seen-filter cogroups in ``seen`` and bench-scale ``synth``
+generation.
 """
 
 __version__ = "0.1.0"

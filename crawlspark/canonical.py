@@ -344,8 +344,8 @@ def xxhash64_py(s: str, seed: int = 42) -> int:
 def extract_links_expr(html: Column, base_url: Column) -> Column:
     """Array of canonical outlink URLs from an html payload — the frontier's
     DISCOVERY edge (the reference crawls a curated seed list and discovers
-    nothing, src/main.rs:154-267; a Common-Crawl-style frontier grows from
-    fetched pages, so the engine offers this as an opt-in operator).
+    nothing, src/main.rs:154-267; here it builds the link graph of
+    ``hostrank.host_graph_from_pages``).
 
     JVM-side end to end: binary→UTF-8 cast, one ``regexp_extract_all`` over
     ``href="…"`` attributes, then per-link RFC-3986 reference resolution for
@@ -396,8 +396,7 @@ def url_trap_signals(
     segment repeats ``> max_seg_repeat`` times within the SAME path
     (/a/b/a/b/a/...), or it carries ``> max_params`` query parameters. A
     host is flagged when more than ``trap_pct`` percent of its URLs are
-    trap-like (integer cross-multiply — no float ratio), feeding the
-    politeness budget (a flagged host's ``max_per_round`` drops).
+    trap-like (integer cross-multiply — no float ratio).
 
     Pure Catalyst string/array expressions, exact integer outputs. One
     map-side-combinable groupBy(host) shuffle; the per-URL segment-repeat

@@ -45,7 +45,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType, DoubleType, IntegerType, StringType, StructField, StructType,
+    DoubleType, IntegerType, StringType, StructField, StructType,
 )
 
 from .fields import AbcdFields, FieldSpec
@@ -316,10 +316,8 @@ META_COLS = [
 ]
 
 
-def output_schema(fields: AbcdFields, with_outlinks: bool = False) -> StructType:
+def output_schema(fields: AbcdFields) -> StructType:
     cols = [StructField(n, t, True) for n, t in META_COLS]
-    if with_outlinks:
-        cols.append(StructField("outlinks", ArrayType(StringType()), True))
     for f_ in fields:
         cols.append(StructField(f_.hash, DoubleType() if f_.numeric else StringType(), True))
     return StructType(cols)
@@ -330,24 +328,13 @@ def extract_pages(
     fields: AbcdFields,
     landing_page_field: str,
     landing_base_url: str = "https://landing.example/landingpage.php",
-    with_outlinks: bool = False,
 ) -> DataFrame:
     """One ``mapInPandas`` over (url, html, provider?) → long extraction frame.
 
     ``landing_base_url`` mirrors propose_landing_page (main.rs:355-364):
     proposal = f"{base}?archive={url}".
-
-    ``with_outlinks=True`` fuses frontier discovery into this SINGLE payload
-    pass: the input must carry an ``outlinks`` array column (computed
-    JVM-side via canonical.extract_links_expr in the projection feeding the
-    UDF — the regex never runs in Python), and the UDF emits one extra
-    ``kind='links'`` row per input page that carries the array through to the
-    persisted extraction output. The scheduler's discover-links round then
-    reads outlinks from that cache instead of re-running the fetch join — one
-    pages-index payload join per round, as a 10^10-URL deployment requires.
-    Default off: the parity-critical schema/byte-identical path is unchanged.
     """
-    schema = output_schema(fields, with_outlinks)
+    schema = output_schema(fields)
     spec_cols = [(f_.name, f_.hash, f_.numeric) for f_ in fields]
     out_names = [f.name for f in schema.fields]
     lpf = landing_page_field
@@ -359,19 +346,11 @@ def extract_pages(
     ]
 
     has_provider = "provider" in df.columns
-    src_cols = [
+    src = df.select(
         F.col("url"),
         F.col("html"),
         (F.col("provider") if has_provider else F.lit("")).alias("provider"),
-    ]
-    if with_outlinks:
-        if "outlinks" not in df.columns:
-            raise ValueError(
-                "with_outlinks=True requires an 'outlinks' array column "
-                "(compute it with canonical.extract_links_expr)"
-            )
-        src_cols.append(F.col("outlinks"))
-    src = df.select(*src_cols)
+    )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from .fields import AbcdFields as AF
@@ -411,22 +390,7 @@ def extract_pages(
                             r[h] = vals[name]
                 rows.append(r)
 
-            links_col = (
-                pdf["outlinks"] if with_outlinks else pd.Series([None] * len(pdf))
-            )
-            for url, html, provider, ol in zip(
-                pdf["url"], pdf["html"], pdf["provider"], links_col
-            ):
-                if with_outlinks:
-                    # one 'links' row per input page, parse outcome
-                    # irrespective — same coverage as the pre-fusion second
-                    # payload pass (links were extracted from every fetched
-                    # payload, even ones whose archive parse fails)
-                    r = dict.fromkeys(out_names)
-                    r.update(url=url, member_index=-1, kind="links",
-                             unit_index=-1, status="ok", provider=provider,
-                             outlinks=list(ol) if ol is not None else [])
-                    rows.append(r)
+            for url, html, provider in zip(pdf["url"], pdf["html"], pdf["provider"]):
                 proposal = f"{landing_base_url}?archive={url}"
                 if html is None:
                     emit(url, provider, -1, "error", -1, "zip_error", "empty payload")

@@ -43,8 +43,10 @@ Scale notes:
   never passes through one task whole. Both phases are filters on eligible
   rows only, so the result is exactly the unsalted top-k.
 * the only driver-side loop is over rounds; everything inside a round is
-  DataFrame ops with one mapInPandas (extraction) and one optional vectorized
-  Bloom probe. Counters are computed with one aggregate per cached branch.
+  DataFrame ops plus the Python UDFs: one mapInPandas (extraction), the
+  seen-set prefilter probe (broadcast, or a per-bucket cogroup in routed
+  mode) and the per-bucket filter-update cogroup. All round counters come
+  from ONE grouped aggregate over a union of the cached branches.
 """
 
 from __future__ import annotations
@@ -72,7 +74,7 @@ from .warehouse import Warehouse
 ORDER = ["priority", "warc_ts", "curl", "url"]  # the canonical tie-break chain
 FRONTIER_COLS = [f.name for f in schemas.FRONTIER.fields]
 # frontier *state* carries the canonical columns: canonicalization runs once
-# per url at seed/discovery time, not once per round (deferred/retried rows
+# per url at seed/requeue time, not once per round (deferred/retried rows
 # keep their computed values through warehouse snapshots)
 ENRICHED_COLS = FRONTIER_COLS + ["curl", "url_hash", "chost", "path"]
 
@@ -420,30 +422,6 @@ class Crawler:
         else:
             budget = F.coalesce(F.col("max_per_round"), F.lit(s.default_host_budget))
 
-        # opt-in trap derating (settings.crawl.trap_detect): flag hosts whose
-        # candidate URL shapes look like crawler traps and divide their
-        # budget. The host-level trap frame is one combinable agg over the
-        # cached batch; the join re-keys the batch by chost — an extra
-        # data-scale shuffle, which is why the knob defaults OFF and the
-        # derate runs only when the politeness windows run at all (not bulk)
-        if s.trap_detect and s.budget_override is None:
-            from .canonical import url_trap_signals
-
-            traps = url_trap_signals(
-                base.select(F.col("curl").alias("url"), F.col("chost").alias("host"))
-            ).select(F.col("host").alias("chost"), "trap")
-            # the persisted batch must stay reachable for the end-of-round
-            # unpersist — rebinding `base` to the (un-cached) join would
-            # leak one batch cache per round
-            _pins.append(base)
-            base = base.join(traps, "chost", "left")
-            budget = F.when(
-                F.coalesce(F.col("trap"), F.lit(False)),
-                F.greatest(
-                    F.floor(budget / F.lit(s.trap_budget_divisor)), F.lit(1)
-                ).cast("int"),
-            ).otherwise(budget)
-
         # 4. politeness: two-phase exact per-host top-k over ELIGIBLE rows only
         #    (windows must see only eligible rows — a masked row_number would
         #    still count ineligible partition members)
@@ -458,7 +436,7 @@ class Crawler:
             defer_salt = elig.filter(F.lit(False))
             defer_host = defer_salt
         else:
-            salt_n = s.salt_partitions or int(sp.conf.get("spark.sql.shuffle.partitions"))
+            salt_n = int(sp.conf.get("spark.sql.shuffle.partitions"))
             w_salt = Window.partitionBy(
                 "chost", F.pmod(F.col("url_hash"), F.lit(salt_n))
             ).orderBy(*[F.col(c).asc() for c in ORDER])
@@ -546,32 +524,18 @@ class Crawler:
         feed_x = feed.select(F.col("curl").alias("url"), "html", "provider").repartition(
             int(sp.conf.get("spark.sql.shuffle.partitions")) * 3
         )
-        if s.discover_links:
-            # FUSED discovery (round-4 verdict #2): href extraction runs
-            # JVM-side (canonical.extract_links_expr) in the projection
-            # feeding the extraction UDF — post-shuffle, same stage — and the
-            # UDF threads the array through to a per-page 'links' row in the
-            # persisted extraction output. ONE pages-index payload join per
-            # round; the frontier union below reads the cache, not the join.
-            from .canonical import extract_links_expr
-
-            feed_x = feed_x.withColumn(
-                "outlinks", extract_links_expr(F.col("html"), F.col("url"))
-            )
         extracted = extract_pages(
             feed_x,
             self.fields,
             self.settings.abcd.landing_page_field,
             self.landing_base_url,
-            with_outlinks=s.discover_links,
         ).persist()
 
         # 5. crawl order seq + 7. dense surrogate keys — skew-robust global
         #    numbering via ONE fused range repartition (seen.rank_and_key);
-        #    the host-partitioned two-level variant is equivalent but would
-        #    put the skewed host's whole batch in one task. ``ranked`` is
-        #    persisted and force-materialized INSIDE the counters action
-        #    below: its four consumers (crawl_log, seen, both key_map joins)
+        #    partitioning by host instead would put the skewed host's whole
+        #    batch in one task. ``ranked`` is persisted and force-materialized
+        #    INSIDE the counters action below: its four consumers (crawl_log, seen, both key_map joins)
         #    run as concurrent commit writes, and a lazily-materialized cache
         #    would serialize them on the cache-fill lock.
         ranked = rank_and_key(
@@ -681,28 +645,6 @@ class Crawler:
             .select(*ENRICHED_COLS)
         )
         new_frontier = deferred.unionByName(retried_rows)
-        if s.discover_links:
-            # opt-in frontier growth: outlinks of this round's fetched pages
-            # become next-round candidates (next round's seen/dup machinery
-            # filters re-discoveries exactly — no pre-filter needed here).
-            # Reads the per-page 'links' rows from the PERSISTED extraction
-            # output — the payload was read exactly once, in the fused
-            # extraction pass above.
-            discovered = (
-                enrich(
-                    extracted.filter(F.col("kind") == "links")
-                    .select(F.explode("outlinks").alias("url"))
-                    .withColumn("host", F.lit(None).cast("string"))
-                    .withColumn("priority", F.lit(s.discovered_priority).cast("int"))
-                    .withColumn("warc_ts", F.lit(None).cast("timestamp"))
-                    .withColumn("provider", F.lit("discovered"))
-                    .withColumn("discovered_round", F.lit(round_).cast("int"))
-                    .withColumn("retries", F.lit(0).cast("int"))
-                )
-                .withColumn("host", F.col("chost"))
-                .select(*ENRICHED_COLS)
-            )
-            new_frontier = new_frontier.unionByName(discovered)
         new_seen_all = seen.unionByName(new_seen)
 
         # update the prefilter with this round's new hashes — EXECUTOR-side
@@ -735,8 +677,7 @@ class Crawler:
                 "units": units.sortWithinPartitions("surrogate_key"),
             },
             local_appends={"metrics": metrics_tbl},
-            stats_cols={"datasets": ["surrogate_key"], "units": ["surrogate_key"],
-                        "frontier": []},
+            stats_cols={"datasets": ["surrogate_key"], "units": ["surrogate_key"]},
         )
 
         for df in (base, elig, cand, statused, extracted, *_pins):
@@ -751,15 +692,6 @@ class Crawler:
         frontier2 = self.wh.read_state(sp, "frontier", schemas.FRONTIER)
         seen2 = self.wh.read_state(sp, "seen", schemas.SEEN)
 
-        if s.discover_links:
-            # discovered rows ride the committed frontier snapshot; its
-            # parquet-footer row count (already in the manifest — no extra
-            # job) is the exact frontier size including discoveries
-            frontier_left = self.wh.manifest()["tables"]["frontier"]["stats"][
-                str(round_)
-            ]["rows"]
-        else:
-            frontier_left = n_deferred + n_retried
         rr = RoundResult(
             round=round_,
             fetched=n_fetched,
@@ -770,6 +702,6 @@ class Crawler:
             new_urls=n_fetched,
             datasets=n_datasets,
             units=n_units,
-            frontier_left=frontier_left,
+            frontier_left=n_deferred + n_retried,
         )
         return rr, frontier2, seen2, bloom, next_key + n_fetched

@@ -51,7 +51,6 @@ class CrawlSettings:
     bloom_bits: int = 1 << 20           # per-run bloom sizing (scaled up at 10^10)
     bloom_hashes: int = 5
     seen_buckets: int = 32              # hash-range partitions of the seen table
-    salt_partitions: int = 0            # 0 = spark.sql.shuffle.partitions
     # probe routing: 'broadcast' ships the whole filter to every executor
     # (local-mode / small-filter only), 'routed' cogroups each batch bucket
     # with ONLY its bitmap row (the 10^10-URL path: a useful bloom is 10+ GB
@@ -65,18 +64,6 @@ class CrawlSettings:
     seen_filter: str = "bloom"
     cuckoo_entries: int = 1 << 14   # cuckoo buckets per hash-range partition
     cuckoo_slots: int = 4           # fingerprints per cuckoo bucket
-    # opt-in frontier growth: extract outlinks from fetched pages and enqueue
-    # them (canonical.extract_links_expr). Default OFF — the reference crawls
-    # a fixed seed list, and the crawl-order/seen-set parity oracle
-    # (tests/oracle_sim.py) models exactly that
-    discover_links: bool = False
-    discovered_priority: int = 1    # priority for discovered urls (seed = 0)
-    # opt-in crawl-trap derating: score each round's candidate URL shapes
-    # (canonical.url_trap_signals) and divide a flagged host's politeness
-    # budget by trap_budget_divisor (floor 1). Default OFF — same
-    # oracle-parity reasoning as discover_links
-    trap_detect: bool = False
-    trap_budget_divisor: int = 4
 
 
 @dataclass

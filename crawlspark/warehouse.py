@@ -40,9 +40,9 @@ class Warehouse:
     @contextmanager
     def _manifest_lock(self):
         """Exclusive advisory lock serializing manifest read-modify-write
-        cycles (two streams starting concurrently, or a stream committing
-        while the batch loop does, must not lose each other's updates).
-        flock is per-open-fd, so one lockfile guards across processes too."""
+        cycles (concurrent ``commit_round`` / ``write_once`` callers must not
+        lose each other's updates). flock is per-open-fd, so one lockfile
+        guards across processes too."""
         import fcntl
 
         with open(self.path / ".manifest.lock", "w") as f:
@@ -66,51 +66,6 @@ class Warehouse:
 
     def last_round(self) -> int:
         return self.manifest()["last_round"]
-
-    def stream_epoch(self, checkpoint_key: str, query_id: str | None = None) -> int:
-        """Base round for a streaming query, persisted ON FIRST START keyed by
-        its checkpoint location.
-
-        Batch-id-keyed idempotent commits need ``round = epoch + batch_id + 1``
-        with an epoch that is stable across stream RESTARTS: re-reading
-        ``last_round()`` on every start would re-base a redelivered batch
-        (committed here but not yet recorded in Spark's checkpoint when the
-        stream died) onto a fresh round number, bypassing commit_round's
-        idempotent no-op and appending it twice.
-
-        ``query_id`` (the stream's id from the checkpoint's metadata file)
-        guards the OPPOSITE failure: a user deletes the Spark checkpoint but
-        keeps the warehouse. The restarted stream gets a NEW query id and its
-        batch 0 would map onto an already-committed round — commit_round
-        no-ops and new input is silently dropped. A query-id mismatch
-        therefore fails loudly instead. Pass the id once it exists (it is
-        written at stream start, so resolve on the first micro-batch — see
-        streaming.discovered_urls_stream).
-        """
-        with self._manifest_lock():
-            m = self.manifest()
-            epochs = m.setdefault("stream_epochs", {})
-            rec = epochs.get(checkpoint_key)
-            if rec is not None:
-                if isinstance(rec, int):  # pre-query-id manifest record
-                    rec = {"epoch": rec, "query_id": None}
-                    epochs[checkpoint_key] = rec
-                if query_id is not None and rec["query_id"] not in (None, query_id):
-                    raise RuntimeError(
-                        f"streaming checkpoint {checkpoint_key!r} was deleted and "
-                        f"re-created (stream id {query_id} != recorded "
-                        f"{rec['query_id']}): its batch ids restart at 0 and would "
-                        "map onto already-committed rounds, silently dropping new "
-                        "input. Use a fresh checkpoint location (fresh epoch), or "
-                        "restore the original checkpoint."
-                    )
-                if query_id is not None and rec["query_id"] is None:
-                    rec["query_id"] = query_id
-                    self._write_manifest(m)
-                return rec["epoch"]
-            epochs[checkpoint_key] = {"epoch": m["last_round"], "query_id": query_id}
-            self._write_manifest(m)
-            return m["last_round"]
 
     # -- commit ------------------------------------------------------------
     def commit_round(
@@ -139,8 +94,8 @@ class Warehouse:
 
         Returns False (no-op) if the round is already committed — idempotent
         re-commit for resume. The whole commit holds the manifest lock, so
-        concurrent committers (two streams, or a stream plus the batch loop)
-        serialize instead of losing each other's manifest updates.
+        concurrent committers serialize instead of losing each other's
+        manifest updates.
         """
         with self._manifest_lock():
             return self._commit_round_locked(

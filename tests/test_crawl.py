@@ -242,97 +242,3 @@ def test_evict_recrawl(spark, synth_dfs, tmp_path, overrides):
     # fresh keys continue from the current max (first-seen-wins is per-life)
     max_kept = max(v for u, v in seen_before.items() if u not in victims)
     assert all(seen_after[u] > max_kept for u in victims)
-
-
-def test_discovery_crawl_follows_links(spark, tmp_path):
-    """Opt-in frontier growth: seed ONE url; each fetched page links to the
-    next (and the last links BACK to the first — the cycle must terminate
-    via the seen set). The crawl follows the chain across rounds."""
-    import datetime
-
-    urls = [f"https://site.example/p/{i}" for i in range(4)]
-    ts = datetime.datetime(2024, 1, 1)
-    pages = spark.createDataFrame(
-        [
-            (u, ts, bytearray(f'<a href="{urls[(i + 1) % len(urls)]}">next</a>'.encode()),
-             None, None)
-            for i, u in enumerate(urls)
-        ],
-        schemas.PAGES,
-    )
-    frontier = spark.createDataFrame(
-        [(urls[0], "site.example", 0, ts, "seed", 0, 0)], schemas.FRONTIER
-    )
-    robots = spark.createDataFrame([], schemas.ROBOTS)
-    settings = Settings.new(
-        overrides={"crawl": {"discover_links": True, "max_retries": 0}}
-    )
-    wh = Warehouse(tmp_path / "whD")
-    results = Crawler(
-        spark, settings, wh, synth.golden_fields(), pages, robots, frontier
-    ).run()
-    assert sum(r.fetched for r in results) == len(urls)      # whole chain crawled
-    assert results[-1].frontier_left == 0                    # cycle terminated
-    log, seen, _ = collect_state(spark, wh)
-    assert set(seen) == set(urls)
-    # one url per round, in chain order (each link discovered the next round)
-    assert [u for _, _, u in log] == urls
-
-
-def test_trap_detect_derates_flagged_host_budget(spark, tmp_path):
-    """crawl.trap_detect: a host whose candidate URLs look like traps
-    (repeated segments) gets its politeness budget divided; the clean host
-    keeps the full budget; with the knob OFF both hosts fetch alike."""
-    from crawlspark import schemas, synth
-    from crawlspark.scheduler import Crawler
-    from crawlspark.settings import Settings
-    from crawlspark.warehouse import Warehouse
-
-    trap_h, clean_h = "traphost.example.org", "cleanhost.example.org"
-
-    def mk_rows(host, shape):
-        pages, frontier = [], []
-        for i in range(8):
-            url = f"https://{host}{shape(i)}"
-            pr = synth.page_row(i, 2)
-            pr["url"] = url
-            pages.append(pr)
-            frontier.append({
-                "url": url, "host": host, "priority": 0,
-                "warc_ts": synth.warc_ts(i), "provider": "seed",
-                "discovered_round": 0, "retries": 0,
-            })
-        return pages, frontier
-
-    tp, tf = mk_rows(trap_h, lambda i: f"/a/b/a/b/a/b/{i}")
-    cp, cf = mk_rows(clean_h, lambda i: f"/p/{i}")
-    pages = spark.createDataFrame(tp + cp, schemas.PAGES)
-    frontier = spark.createDataFrame(tf + cf, schemas.FRONTIER)
-    robots = spark.createDataFrame(
-        [{"host": h, "disallow_prefixes": [], "crawl_delay_s": 1.0,
-          "max_per_round": 4} for h in (trap_h, clean_h)],
-        schemas.ROBOTS,
-    )
-
-    def fetched_per_host(settings, wdir):
-        wh = Warehouse(str(tmp_path / wdir))
-        Crawler(
-            spark, settings, wh, synth.golden_fields(), pages, robots,
-            frontier, None,
-        ).run(max_rounds=1)
-        log = wh.read_appends(spark, "crawl_log", schemas.CRAWL_LOG)
-        rows = [r for r in log.collect() if r["fetched"]]
-        return {
-            h: sum(1 for r in rows if r["host"] == h)
-            for h in (trap_h, clean_h)
-        }
-
-    on = fetched_per_host(
-        Settings.new(overrides={"crawl": {"trap_detect": True,
-                                          "trap_budget_divisor": 4}}),
-        "wh_on",
-    )
-    assert on == {trap_h: 1, clean_h: 4}   # 4 div 4 = 1 vs full budget
-
-    off = fetched_per_host(Settings.new(), "wh_off")
-    assert off == {trap_h: 4, clean_h: 4}  # default path untouched

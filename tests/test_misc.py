@@ -1,4 +1,4 @@
-"""Settings layering, CSV parity surface, streaming discovery."""
+"""Settings layering, CSV parity surface, robots, digest, freshness."""
 
 import textwrap
 
@@ -56,193 +56,6 @@ def test_file_to_csv_golden(spark, tmp_path):
     # one unit row: dataset-level fields empty; floats via Rust Display
     assert lines[1] == ",,,UNIT ID,10.911,49.911,TECHNICAL WGS84 EMAIL"
     assert lines[2] == ""
-
-
-def test_streaming_discovery(spark, tmp_path):
-    import time
-
-    from crawlspark import schemas, synth
-    from crawlspark.streaming import discovered_urls_stream
-    from crawlspark.warehouse import Warehouse
-
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    rows = synth.frontier_rows(40, 5)
-    spark.createDataFrame(rows, schemas.FRONTIER).write.mode("overwrite").parquet(
-        str(in_dir / "drop1")
-    )
-    robots = spark.createDataFrame(synth.robots_rows(5), schemas.ROBOTS)
-    wh = Warehouse(tmp_path / "wh")
-
-    q = discovered_urls_stream(
-        spark, str(in_dir / "drop1"), wh, robots, str(tmp_path / "ckpt")
-    )
-    q.awaitTermination(120)
-    time.sleep(0.5)
-
-    out = wh.read_appends(spark, "discovered").collect()
-    assert out
-    # canonical urls, robots-blocked host3 '/p/9*' paths excluded, unique hashes
-    hashes = [r["url_hash"] for r in out]
-    assert len(hashes) == len(set(hashes))
-    assert all(r["curl"].startswith("https://host") for r in out)
-
-    # RESTART with the same checkpoint: nothing new to read, and the
-    # persisted stream epoch keeps every batch-id → round mapping stable, so
-    # no batch can be re-appended
-    q2 = discovered_urls_stream(
-        spark, str(in_dir / "drop1"), wh, robots, str(tmp_path / "ckpt")
-    )
-    q2.awaitTermination(120)
-    time.sleep(0.5)
-    out2 = wh.read_appends(spark, "discovered").collect()
-    assert sorted(map(tuple, out2)) == sorted(map(tuple, out))
-
-
-def test_stateful_host_stream(spark, tmp_path):
-    """applyInPandasWithState: per-host counters accumulate across
-    micro-batches AND across a stream restart (state from the checkpoint)."""
-    import time
-
-    from crawlspark import schemas, synth
-    from crawlspark.streaming import host_crawl_state_stream
-
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    rows = synth.frontier_rows(40, 5)
-    cut = len(rows) * 2 // 3  # uneven halves so the two batches differ
-    spark.createDataFrame(rows[:cut], schemas.FRONTIER).write.parquet(str(in_dir / "d1"))
-
-    q = host_crawl_state_stream(spark, str(in_dir / "*"), out_dir, ckpt)
-    q.awaitTermination(120)
-    time.sleep(0.5)
-    first = spark.read.parquet(out_dir).collect()
-    assert sum(r["batch_rows"] for r in first) == cut
-    assert all(r["batch_rows"] == r["cumulative_rows"] for r in first)
-
-    # second drop + RESTARTED stream, same checkpoint: cumulative continues
-    spark.createDataFrame(rows[cut:], schemas.FRONTIER).write.parquet(str(in_dir / "d2"))
-    q2 = host_crawl_state_stream(spark, str(in_dir / "*"), out_dir, ckpt)
-    q2.awaitTermination(120)
-    time.sleep(0.5)
-    all_rows = spark.read.parquet(out_dir).collect()
-    assert sum(r["batch_rows"] for r in all_rows) == len(rows)
-    # per host: the max cumulative equals the total rows ever seen for it
-    from pyspark.sql import functions as F
-
-    from crawlspark.scheduler import enrich
-
-    enr = enrich(spark.createDataFrame(rows, schemas.FRONTIER))
-    per_host = {
-        r["chost"]: r["cnt"]
-        for r in enr.groupBy("chost").agg(F.count("*").alias("cnt")).collect()
-    }
-    got = {}
-    for r in all_rows:
-        got[r["host"]] = max(got.get(r["host"], 0), r["cumulative_rows"])
-    assert got == per_host
-
-
-def test_stream_epoch_stable_across_restarts(tmp_path):
-    """The redelivery hole ADVICE flagged: a batch committed to the warehouse
-    but not yet in Spark's checkpoint is redelivered with the SAME batch_id
-    after a restart — it must map to the SAME round (idempotent no-op), even
-    though last_round() has advanced in between."""
-    import pyarrow as pa
-
-    from crawlspark.warehouse import Warehouse
-
-    wh = Warehouse(tmp_path / "wh")
-    epoch = wh.stream_epoch("ckpt-A")
-    assert epoch == -1
-    # batch 0 commits round epoch+0+1, then the stream dies pre-checkpoint
-    r0 = epoch + 0 + 1
-    assert wh.commit_round(r0, local_appends={"t": pa.table({"x": [1]})}) is True
-
-    # restart: fresh Warehouse object, same checkpoint location
-    wh2 = Warehouse(tmp_path / "wh")
-    assert wh2.stream_epoch("ckpt-A") == epoch          # NOT re-based
-    # redelivered batch 0 maps to the same round -> idempotent no-op
-    assert wh2.commit_round(epoch + 0 + 1, local_appends={"t": pa.table({"x": [1]})}) is False
-    # a different checkpoint (new stream) gets its own epoch
-    assert wh2.stream_epoch("ckpt-B") == wh2.last_round()
-
-
-def test_stream_epoch_detects_recreated_checkpoint(tmp_path):
-    """Deleting the Spark checkpoint while keeping the warehouse restarts
-    batch ids at 0 — the new stream's query id mismatches the recorded one
-    and stream_epoch fails loudly instead of silently no-opping."""
-    import pyarrow as pa
-    import pytest
-
-    from crawlspark.warehouse import Warehouse
-
-    wh = Warehouse(tmp_path / "wh")
-    assert wh.stream_epoch("ckpt-X", query_id="q-original") == -1
-    wh.commit_round(0, local_appends={"t": pa.table({"x": [1]})})
-    # same id (true restart): stable epoch
-    assert wh.stream_epoch("ckpt-X", query_id="q-original") == -1
-    # recreated checkpoint → new query id → loud failure
-    with pytest.raises(RuntimeError, match="deleted and re-created"):
-        wh.stream_epoch("ckpt-X", query_id="q-fresh")
-    # a late-arriving id on a legacy (id-less) record is adopted, not refused
-    assert wh.stream_epoch("ckpt-Y") == 0
-    assert wh.stream_epoch("ckpt-Y", query_id="q-late") == 0
-    with pytest.raises(RuntimeError):
-        wh.stream_epoch("ckpt-Y", query_id="q-other")
-
-
-def test_streaming_discovery_matches_batch_eligibility(spark, tmp_path):
-    """Cross-surface semantic pin (round-3 VERDICT #8): the streaming
-    discovery stage (canonicalize → robots → seen/dup filter) must admit
-    EXACTLY the url set the batch round loop deems eligible on the same
-    input — the two surfaces claim one semantics."""
-    import time
-
-    from crawlspark import schemas, synth
-    from crawlspark.scheduler import Crawler
-    from crawlspark.settings import Settings
-    from crawlspark.streaming import discovered_urls_stream
-    from crawlspark.warehouse import Warehouse
-
-    n, n_hosts = 60, 5
-    rows = synth.frontier_rows(n, n_hosts)
-    frontier = spark.createDataFrame(rows, schemas.FRONTIER)
-    robots = spark.createDataFrame(synth.robots_rows(n_hosts), schemas.ROBOTS)
-
-    # streaming surface
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    frontier.write.parquet(str(in_dir / "d1"))
-    wh_s = Warehouse(tmp_path / "whS")
-    q = discovered_urls_stream(
-        spark, str(in_dir / "d1"), wh_s, robots, str(tmp_path / "ckpt")
-    )
-    q.awaitTermination(120)
-    time.sleep(0.5)
-    stream_urls = {
-        r["curl"] for r in wh_s.read_appends(spark, "discovered").collect()
-    }
-
-    # batch surface: bulk mode (unbounded budget) makes selected == eligible,
-    # so round-1 crawl_log is precisely the batch loop's eligibility verdict
-    pages = spark.createDataFrame(
-        [synth.page_row(i, n_hosts) for i in range(n)], schemas.PAGES
-    )
-    settings = Settings.new(
-        overrides={"crawl": {"budget_override": 10**9, "max_retries": 0}}
-    )
-    wh_b = Warehouse(tmp_path / "whB")
-    Crawler(
-        spark, settings, wh_b, synth.golden_fields(), pages, robots, frontier
-    ).run(max_rounds=1)
-    batch_urls = {
-        r["url"]
-        for r in wh_b.read_appends(spark, "crawl_log").filter("round = 0").collect()
-    }
-    assert stream_urls == batch_urls
 
 
 def test_robots_parser(spark):

@@ -32,21 +32,34 @@ def test_bloom_roundtrip_serialization():
     assert bl2.bits == bl.bits and bl2.k == bl.k and bl2.n_buckets == bl.n_buckets
 
 
-def test_split_new_vs_seen_exact(spark):
+# even u{i} are seen; "u0-collision" shares u0's url_hash (an xxhash64
+# collision) but is a different URL, so it must come back NEW: membership is
+# confirmed on the URL string, not the hash alone
+EXPECTED_SEEN = {f"u{i}": i % 2 == 0 for i in range(20)} | {"u0-collision": False}
+
+
+def _batch_and_seen(spark):
     batch = spark.createDataFrame(
-        [(i, f"u{i}") for i in range(20)], ["url_hash", "url"]
+        [(i, f"u{i}") for i in range(20)] + [(0, "u0-collision")], ["url_hash", "url"]
     )
     seen = spark.createDataFrame(
         [(i, f"u{i}", i, 0) for i in range(0, 20, 2)],
         ["url_hash", "url", "surrogate_key", "first_round"],
     )
+    return batch, seen
+
+
+def _is_seen_by_url(df):
+    return {r["url"]: r["is_seen"] for r in df.collect()}
+
+
+def test_split_new_vs_seen_exact(spark):
+    batch, seen = _batch_and_seen(spark)
     bl = PartitionedBloom(1 << 10, 3, 2)
     bl.add(np.arange(0, 20, 2, dtype=np.int64))
-    out = {r["url_hash"]: r["is_seen"] for r in split_new_vs_seen(batch, seen, bl).collect()}
-    assert all(out[i] == (i % 2 == 0) for i in range(20))
+    assert _is_seen_by_url(split_new_vs_seen(batch, seen, bl)) == EXPECTED_SEEN
     # and without bloom (exact-only path)
-    out2 = {r["url_hash"]: r["is_seen"] for r in split_new_vs_seen(batch, seen, None).collect()}
-    assert out == out2
+    assert _is_seen_by_url(split_new_vs_seen(batch, seen, None)) == EXPECTED_SEEN
 
 
 def test_routed_probe_matches_broadcast(spark):
@@ -85,21 +98,12 @@ def test_split_new_vs_seen_routed_df(spark):
     """split_new_vs_seen with the warehouse DataFrame form of the bloom."""
     from crawlspark.seen import distributed_bloom_update
 
-    batch = spark.createDataFrame(
-        [(i, f"u{i}") for i in range(20)], ["url_hash", "url"]
-    )
-    seen = spark.createDataFrame(
-        [(i, f"u{i}", i, 0) for i in range(0, 20, 2)],
-        ["url_hash", "url", "surrogate_key", "first_round"],
-    )
+    batch, seen = _batch_and_seen(spark)
     bloom_df = distributed_bloom_update(
         seen.select("url_hash"), None, 1 << 10, 3, 4
     )
-    out = {
-        r["url_hash"]: r["is_seen"]
-        for r in split_new_vs_seen(batch, seen, bloom_df, bloom_buckets=4).collect()
-    }
-    assert all(out[i] == (i % 2 == 0) for i in range(20))
+    out = split_new_vs_seen(batch, seen, bloom_df, bloom_buckets=4)
+    assert _is_seen_by_url(out) == EXPECTED_SEEN
 
 
 @pytest.mark.parametrize("small_threshold", [None, 0], ids=["window", "range"])
@@ -267,21 +271,13 @@ def test_split_new_vs_seen_cuckoo(spark):
     """split_new_vs_seen accepts cuckoo state in both transports."""
     from crawlspark.seen import PartitionedCuckoo, distributed_cuckoo_update
 
-    batch = spark.createDataFrame([(i, f"u{i}") for i in range(20)], ["url_hash", "url"])
-    seen = spark.createDataFrame(
-        [(i, f"u{i}", i, 0) for i in range(0, 20, 2)],
-        ["url_hash", "url", "surrogate_key", "first_round"],
-    )
+    batch, seen = _batch_and_seen(spark)
     ck = PartitionedCuckoo(1 << 10, 4, 4)
     ck.add(np.arange(0, 20, 2, dtype=np.int64))
-    out = {r["url_hash"]: r["is_seen"] for r in split_new_vs_seen(batch, seen, ck).collect()}
-    assert all(out[i] == (i % 2 == 0) for i in range(20))
+    assert _is_seen_by_url(split_new_vs_seen(batch, seen, ck)) == EXPECTED_SEEN
     ck_df = distributed_cuckoo_update(seen.select("url_hash"), None, 1 << 10, 4, 4)
-    out2 = {
-        r["url_hash"]: r["is_seen"]
-        for r in split_new_vs_seen(batch, seen, ck_df, bloom_buckets=4).collect()
-    }
-    assert out == out2
+    out = split_new_vs_seen(batch, seen, ck_df, bloom_buckets=4)
+    assert _is_seen_by_url(out) == EXPECTED_SEEN
 
 
 def test_cuckoo_overfull_raises():

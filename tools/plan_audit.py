@@ -209,46 +209,7 @@ def main() -> None:
           ("no exchange (pure projection)", "Exchange" not in p)])
     )
 
-    # 13. fused outlink discovery: the discover-links round reads the payload
-    #     ONCE — href extraction is a JVM regex in the projection feeding the
-    #     extraction UDF, and the 'links' rows ride the same single
-    #     MapInPandas output (round-4 verdict #2 done-criterion)
-    import tempfile
-
-    from crawlspark.canonical import extract_links_expr
-
-    pages_dir = tempfile.mkdtemp(prefix="plan_audit_pages_")
-    spark.createDataFrame(
-        [(r["url"], r["html"], "p") for r in rows], ["url", "html", "provider"]
-    ).write.mode("overwrite").parquet(pages_dir)
-    pages_src = spark.read.parquet(pages_dir)
-    keys = pages_src.select("url").limit(3)
-    feed = (
-        keys.join(pages_src.select(F.col("url").alias("p_url"), "html", "provider"),
-                  keys["url"] == F.col("p_url")).drop("p_url")
-        .withColumn("outlinks", extract_links_expr(F.col("html"), F.col("url")))
-    )
-    q = extract_pages(feed, synth.golden_fields(), synth.LANDING_PAGE_FIELD,
-                      with_outlinks=True)
-    p = fmt(q)
-    scan_blocks = [
-        b for b in p.split("\n\n")
-        if "Scan parquet" in b and "plan_audit_pages_" in b
-    ]
-    html_scans = [b for b in scan_blocks if "html" in b]
-    sections.append(
-        ("Fused discovery: ONE payload pass (links extracted in the extraction stage)", p,
-         [("exactly one MapInPandas operator", p.count("MapInPandas (") == 1),
-          ("href extraction is JVM-side (regexp_extract_all below the UDF)",
-           "regexp_extract_all" in p),
-          # the key side is column-pruned (url only), so exactly ONE scan in
-          # the whole plan carries the html payload — the fused extraction
-          # feed; a second payload pass would show a second html ReadSchema
-          ("a single payload-carrying (html) scan of the pages source",
-           len(html_scans) == 1)])
-    )
-
-    # 14. benchmark decontamination: benchmark gram set broadcast, corpus side
+    # 13. benchmark decontamination: benchmark gram set broadcast, corpus side
     #     map-only up to the id-only distinct (no corpus-sized shuffle)
     from crawlspark.textops import decontaminate, domain_quota, split_assign
 
@@ -264,7 +225,7 @@ def main() -> None:
           ("no cartesian product", "CartesianProduct" not in p)])
     )
 
-    # 15. domain quota: two-phase salted top-k — no single-partition exchange
+    # 14. domain quota: two-phase salted top-k — no single-partition exchange
     q = domain_quota(docs, k=20)
     p = fmt(q)
     sections.append(
@@ -275,7 +236,7 @@ def main() -> None:
           ("no Python operator", "MapInPandas" not in p and "BatchEvalPython" not in p)])
     )
 
-    # 16. split assignment: pure projection — zero exchanges
+    # 15. split assignment: pure projection — zero exchanges
     q = split_assign(docs)
     p = fmt(q)
     sections.append(
@@ -284,7 +245,7 @@ def main() -> None:
           ("whole-stage codegen", "codegen id" in p)])
     )
 
-    # 17. PII redaction: pure regexp projection
+    # 16. PII redaction: pure regexp projection
     from crawlspark.textops import pack_sequences, pii_redact
 
     q = pii_redact(docs)
@@ -295,7 +256,7 @@ def main() -> None:
           ("whole-stage codegen", "codegen id" in p)])
     )
 
-    # 18. sequence packing AT SCALE (small_threshold=0 forces the range
+    # 17. sequence packing AT SCALE (small_threshold=0 forces the range
     #     path): per-partition running sums + triangular metadata offsets —
     #     no global single-partition window over the corpus
     q = pack_sequences(docs, ctx=2048, small_threshold=0)
@@ -309,7 +270,7 @@ def main() -> None:
            "MapInPandas" not in p and "BatchEvalPython" not in p)])
     )
 
-    # 19. substring dedup: the only corpus-wide exchanges carry (md5, ids) —
+    # 18. substring dedup: the only corpus-wide exchanges carry (md5, ids) —
     #     TEXT never shuffles (reassembly joins dup window ids back by
     #     doc_id); keeper choice is a hash aggregate, not a window
     from crawlspark.textops import substring_dedup
@@ -325,7 +286,7 @@ def main() -> None:
            "HashAggregate" in p and "Exchange SinglePartition" not in p)])
     )
 
-    # 20. host rank: one PageRank iteration — dangling mass rides a 1-row
+    # 19. host rank: one PageRank iteration — dangling mass rides a 1-row
     #     broadcast, contributions are a map-side-combinable long sum
     from crawlspark.hostrank import host_rank
 
@@ -343,7 +304,7 @@ def main() -> None:
           ("inflow is a partial-aggregated long sum", "HashAggregate" in p)])
     )
 
-    # 21. sitemap parse: pure regexp projection + explode — zero exchanges
+    # 20. sitemap parse: pure regexp projection + explode — zero exchanges
     from crawlspark.sitemap import parse_sitemap
 
     q = parse_sitemap(
@@ -358,7 +319,7 @@ def main() -> None:
            "MapInPandas" not in p and "BatchEvalPython" not in p)])
     )
 
-    # 22. WARC ingestion: the mapInPandas MUST sit on an exchange, never
+    # 21. WARC ingestion: the mapInPandas MUST sit on an exchange, never
     #     directly on the scan (Spark 4.1 PythonRunner selector-spin)
     from crawlspark.warc import parse_warc
 
@@ -375,7 +336,7 @@ def main() -> None:
            "Exchange" in p)])
     )
 
-    # 23. crawl-trap signals: one combinable groupBy(host) — the per-URL
+    # 22. crawl-trap signals: one combinable groupBy(host) — the per-URL
     #     feature extraction is pure projection
     from crawlspark.canonical import url_trap_signals
 
@@ -395,7 +356,7 @@ def main() -> None:
            "MapInPandas" not in p and "BatchEvalPython" not in p)])
     )
 
-    # 24. anchor-text index: data-scale rows pass only through combinable
+    # 23. anchor-text index: data-scale rows pass only through combinable
     #     aggregations; the top-anchor window sits on the (url, anchor)
     #     aggregate
     from crawlspark.canonical import anchor_text_index
@@ -420,7 +381,7 @@ def main() -> None:
            "MapInPandas" not in p and "BatchEvalPython" not in p)])
     )
 
-    # 25. freshness recrawl: the lag window partitions by url (bounded by
+    # 24. freshness recrawl: the lag window partitions by url (bounded by
     #     round count per partition), aggregation is combinable, no Python
     from crawlspark.freshness import change_rates, recrawl_priorities
 
@@ -441,7 +402,7 @@ def main() -> None:
            "MapInPandas" not in p and "BatchEvalPython" not in p)])
     )
 
-    # 26. WET text extraction: one shuffle-free regexp projection
+    # 25. WET text extraction: one shuffle-free regexp projection
     from crawlspark.textops import html_to_text, term_postings
 
     q = html_to_text(docs.select("doc_id", F.col("text").alias("payload")))
@@ -454,7 +415,7 @@ def main() -> None:
            "MapInPandas" not in p and "BatchEvalPython" not in p)])
     )
 
-    # 27. term postings: df aggregates the AGGREGATED tf table; n_docs is a
+    # 26. term postings: df aggregates the AGGREGATED tf table; n_docs is a
     #     1-row broadcast; no Python, no cartesian
     q = term_postings(docs)
     p = fmt(q)
@@ -468,7 +429,7 @@ def main() -> None:
            "MapInPandas" not in p and "BatchEvalPython" not in p)])
     )
 
-    # 28. WARC→WET→gates composed pipeline: exactly ONE Python operator
+    # 27. WARC→WET→gates composed pipeline: exactly ONE Python operator
     #     (the WARC byte walk), an exchange below it (selector-spin guard),
     #     everything downstream pure Catalyst
     q = em.q_pipeline_warc_wet(spark, SF)
