@@ -425,71 +425,6 @@ def q_extraction_version(spark, sf):
 # training-data ops
 # ---------------------------------------------------------------------------
 
-def q_dedup_exact(spark, sf):
-    from crawlspark.textops import exact_dedup_groups
-
-    d = _t(spark, sf, "documents")
-    # inject deterministic duplicates (testdata has none): every 10th doc twice
-    dups = d.filter(F.col("doc_id") % 10 == 0).withColumn(
-        "doc_id", F.col("doc_id") + 1000000
-    )
-    return exact_dedup_groups(d.unionByName(dups)).orderBy("keep_doc_id")
-
-
-def q_line_dedup(spark, sf):
-    # corpus-level line dedup (C4 §2.2 / RefinedWeb line-wise): a corpus
-    # where each doc carries unique body lines plus injected shared
-    # boilerplate lines; the op must strip exactly the boilerplate and
-    # reassemble the unique lines in order. Body lines are made provably
-    # unique by prefixing doc_id, so the expected output is a closed form.
-    from crawlspark.textops import line_dedup
-
-    d = _t(spark, sf, "documents").filter(F.col("doc_id") < 2000)
-    did = F.col("doc_id").cast("string")
-    a = F.concat(did, F.lit(":"), F.substring("text", 1, 40))
-    b = F.concat(did, F.lit("~"), F.substring("text", 41, 40))
-    text = F.concat(
-        a, F.lit(". THIS SITE USES COOKIES. "), b,
-        F.when(F.col("doc_id") % 2 == 0, F.lit(". SHARED FOOTER NAVIGATION")).otherwise(F.lit("")),
-    )
-    return line_dedup(d.select("doc_id", text.alias("text"))).orderBy("doc_id")
-
-
-def q_dedup_minhash(spark, sf):
-    from crawlspark.textops import minhash_lsh_pairs
-
-    d = _t(spark, sf, "documents")
-    dups = d.filter(F.col("doc_id") % 25 == 0).withColumn(
-        "doc_id", F.col("doc_id") + 1000000
-    )
-    return minhash_lsh_pairs(d.unionByName(dups), jaccard_threshold=0.8).orderBy("a", "b")
-
-
-def q_dedup_simhash(spark, sf):
-    from crawlspark.textops import simhash_near_pairs
-
-    d = _t(spark, sf, "documents")
-    dups = d.filter(F.col("doc_id") % 25 == 0).withColumn(
-        "doc_id", F.col("doc_id") + 1000000
-    )
-    return simhash_near_pairs(d.unionByName(dups), max_hamming=3).orderBy("a", "b")
-
-
-def q_dedup_clusters(spark, sf):
-    # connected components (iterative min-label propagation) over a chain
-    # graph derived from doc_ids: chains i→i+1→i+2→i+3 for i%10==0 — the
-    # closed form (cluster = node - node%10) gives an exact SQL oracle for
-    # an iterative algorithm; transitivity over REAL minhash pairs is pinned
-    # in tests/test_textops.py
-    from crawlspark.textops import dedup_clusters
-
-    d = _t(spark, sf, "documents").select("doc_id")
-    edges = d.filter(F.col("doc_id") % 10 < 3).select(
-        F.col("doc_id").alias("a"), (F.col("doc_id") + 1).alias("b")
-    )
-    return dedup_clusters(edges).orderBy("doc_id")
-
-
 def q_ngram_jaccard(spark, sf):
     # word-set jaccard of consecutive doc pairs (SQL-expressible)
     d = _t(spark, sf, "documents").select("doc_id", "text")
@@ -603,33 +538,6 @@ def q_pack_sequences(spark, sf):
     from crawlspark.textops import pack_sequences
 
     return pack_sequences(_t(spark, sf, "documents"), ctx=2048).orderBy("doc_id")
-
-
-def q_substring_dedup(spark, sf):
-    # Lee et al. 2021 ExactSubstr (window relaxation, keep-first): corpus
-    # with doc-unique prefixes of varying length (12-14 tokens, so the shared
-    # span lands at three different window alignments) plus a 14-token span
-    # shared by every doc_id%5==0 document — long enough (>= window+stride-1)
-    # that EVERY alignment contains duplicated windows. The oracle recomputes
-    # the whole construction the textbook way (unnest + window functions).
-    from crawlspark.textops import substring_dedup
-
-    d = _t(spark, sf, "documents").filter(F.col("doc_id") < 600)
-    did = F.col("doc_id").cast("string")
-    uniq = F.concat_ws(
-        " ",
-        F.transform(
-            F.sequence(F.lit(0), F.lit(11) + F.col("doc_id") % 3),
-            lambda j: F.concat(F.lit("u"), did, F.lit("x"), j.cast("string")),
-        ),
-    )
-    shared = F.lit(" ".join(f"s{k}" for k in range(14)))
-    text = F.when(
-        F.col("doc_id") % 5 == 0, F.concat(uniq, F.lit(" "), shared)
-    ).otherwise(uniq)
-    return substring_dedup(
-        d.select("doc_id", text.alias("text")), window=8, stride=4
-    ).orderBy("doc_id")
 
 
 def q_crawl_trap_detect(spark, sf):
@@ -938,15 +846,14 @@ def q_pipeline_warc_wet(spark, sf):
 
 
 def q_pipeline_training_set(spark, sf):
-    # SECOND COMPOSED PIPELINE, fully SQL-oracle-expressible end-to-end:
+    # COMPOSED PIPELINE, fully SQL-oracle-expressible end-to-end:
     # the "raw corpus → training set" chain a 100 TB curation run executes —
     # Gopher quality gates → exact content dedup (first-seen keeper) →
     # benchmark decontamination (broadcast 5-gram overlap vs the eval set)
     # → per-domain quota cap (top-20 by length, salted two-phase) →
-    # deterministic md5-bucket train/val/test assignment. Unlike
-    # pipeline_curate (whose minhash stage needs a fixture mirror), every
-    # stage here has exact ANSI-SQL semantics, so the ORACLE IS THE WHOLE
-    # CHAIN — one DuckDB WITH-query validates the composition itself.
+    # deterministic md5-bucket train/val/test assignment. Every stage has
+    # exact ANSI-SQL semantics, so the ORACLE IS THE WHOLE CHAIN — one
+    # DuckDB WITH-query validates the composition itself.
     from crawlspark.textops import (
         decontaminate,
         domain_quota,
@@ -957,7 +864,7 @@ def q_pipeline_training_set(spark, sf):
     d = _t(spark, sf, "documents")
     bench = d.filter(F.col("doc_id") % 97 == 0).select("doc_id", "text")
     # gated corpus persisted once: consumed by the keeper aggregation AND the
-    # survivor semi-join (same pattern as pipeline_curate, PLANS.md §pipeline)
+    # survivor semi-join, so the scan and the gates run once
     gated = d.join(
         gopher_quality_rules(d).filter("keep").select("doc_id"), "doc_id"
     ).persist()
@@ -980,34 +887,6 @@ def q_pipeline_training_set(spark, sf):
         .select("doc_id", "domain", "split")
         .orderBy("doc_id")
     )
-
-
-def q_pipeline_curate(spark, sf):
-    # FLAGSHIP COMPOSED PIPELINE: the actual LLM-curation chain, one plan —
-    # gopher quality gates → MinHash-LSH near-dup pairs → connected-components
-    # keepers → token counts on the surviving corpus. Each stage has its own
-    # battery entry; this row proves they compose without stage-boundary plan
-    # regressions (gated corpus persisted once, consumed by the signature
-    # pass AND the survivor anti-join — no recomputed scans; PLANS.md §pipeline)
-    from crawlspark.textops import (
-        dedup_clusters,
-        gopher_quality_rules,
-        minhash_lsh_pairs,
-        token_count,
-    )
-
-    d = _t(spark, sf, "documents")
-    dups = d.filter(F.col("doc_id") % 25 == 0).withColumn(
-        "doc_id", F.col("doc_id") + 1000000
-    )
-    corpus = d.unionByName(dups).select("doc_id", "text")
-    gated = corpus.join(
-        gopher_quality_rules(corpus).filter("keep").select("doc_id"), "doc_id"
-    ).persist()
-    pairs = minhash_lsh_pairs(gated, jaccard_threshold=0.8)
-    losers = dedup_clusters(pairs).filter(~F.col("is_keeper")).select("doc_id")
-    survivors = gated.join(losers, "doc_id", "left_anti")
-    return token_count(survivors)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -1038,13 +917,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "crawl_link_extract": q_crawl_link_extract,
         "extraction_units": q_extraction_units,
         "extraction_version": q_extraction_version,
-        "dedup_exact": q_dedup_exact,
-        "line_dedup": q_line_dedup,
-        "dedup_minhash": q_dedup_minhash,
-        "dedup_simhash": q_dedup_simhash,
-        "dedup_clusters": q_dedup_clusters,
         "ngram_jaccard": q_ngram_jaccard,
-        "pipeline_curate": q_pipeline_curate,
         "pipeline_training_set": q_pipeline_training_set,
         "gopher_quality": q_gopher_quality,
         "lang_id": q_lang_id,
@@ -1056,7 +929,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "split_assign": q_split_assign,
         "pii_redact": q_pii_redact,
         "pack_sequences": q_pack_sequences,
-        "substring_dedup": q_substring_dedup,
         "crawl_trap_detect": q_crawl_trap_detect,
         "anchor_text_index": q_anchor_text_index,
         "crawl_robots_sitemaps": q_crawl_robots_sitemaps,
@@ -1322,39 +1194,6 @@ def oracle_sql() -> dict[str, str]:
             FROM documents, unnest(['/p/9', '/admin' || doc_id]) AS t(p)
             WHERE doc_id < 500
         """,
-        # closed form: body lines are doc_id-prefixed (provably unique ⇒
-        # always kept, in order); the two injected boilerplate lines are
-        # shared corpus-wide ⇒ always removed. Raw texts contain no '. '
-        # (checked), so the line structure is exactly as constructed.
-        "line_dedup": """
-            SELECT doc_id,
-                   doc_id || ':' || substr(text, 1, 40) || '. ' ||
-                   doc_id || '~' || substr(text, 41, 40) AS text,
-                   CAST(CASE WHEN doc_id % 2 = 0 THEN 4 ELSE 3 END AS bigint) AS n_lines,
-                   CAST(CASE WHEN doc_id % 2 = 0 THEN 2 ELSE 1 END AS bigint) AS n_removed
-            FROM documents WHERE doc_id < 2000
-        """,
-        "dedup_exact": """
-            SELECT md5(text) AS text_hash, min(doc_id) AS keep_doc_id,
-                   count(*) AS n_copies
-            FROM (
-              SELECT doc_id, text FROM documents
-              UNION ALL
-              SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 10 = 0
-            )
-            GROUP BY md5(text) HAVING count(*) > 1
-            ORDER BY keep_doc_id
-        """,
-        "dedup_clusters": """
-            SELECT doc_id, cluster_id, (doc_id = cluster_id) AS is_keeper FROM (
-              SELECT DISTINCT node AS doc_id, node - (node % 10) AS cluster_id
-              FROM (
-                SELECT doc_id AS node FROM documents WHERE doc_id % 10 < 3
-                UNION
-                SELECT doc_id + 1 FROM documents WHERE doc_id % 10 < 3
-              )
-            )
-        """,
         "ngram_jaccard": """
             SELECT a.doc_id AS a_id,
                    len(list_intersect(list_distinct(string_split(a.text, ' ')),
@@ -1608,83 +1447,9 @@ def oracle_sql() -> dict[str, str]:
             ) AS t(url, abcd_version)
             ORDER BY url
         """,
-        "dedup_minhash": f"""
-            SELECT a, b, jaccard FROM read_parquet('{_FIXTURES}/dedup_minhash.parquet')
-        """,
-        "dedup_simhash": f"""
-            SELECT a, b, hamming FROM read_parquet('{_FIXTURES}/dedup_simhash.parquet')
-        """,
         "fingerprint_winnow": f"""
             SELECT doc_id, fp FROM read_parquet('{_FIXTURES}/fingerprint_winnow.parquet')
         """,
-        # the composed curation chain is mirrored END-TO-END in pure Python
-        # (tools/make_fixtures.py pipeline_curate_fixture: gopher gates →
-        # minhash pairs → union-find CC → survivors → token counts)
-        "pipeline_curate": f"""
-            SELECT doc_id, ws_tokens, bpe_est_tokens
-            FROM read_parquet('{_FIXTURES}/pipeline_curate.parquet')
-        """,
-        # full textbook recomputation of the window-relaxed ExactSubstr
-        # dedup: same text construction, same md5 window hashes, keeper =
-        # first (doc_id, widx) per duplicated hash via row_number
-        "substring_dedup": """
-            WITH base AS (
-                SELECT doc_id,
-                       CASE WHEN doc_id % 5 = 0
-                            THEN uniq || ' ' || '{shared}'
-                            ELSE uniq END AS text
-                FROM (
-                    SELECT doc_id, array_to_string(list_transform(
-                        generate_series(0, 11 + CAST(doc_id % 3 AS BIGINT)),
-                        j -> 'u' || CAST(doc_id AS VARCHAR) || 'x'
-                             || CAST(j AS VARCHAR)), ' ') AS uniq
-                    FROM documents WHERE doc_id < 600
-                )
-            ),
-            toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM base),
-            wins AS (
-                SELECT doc_id, CAST(i AS INT) AS widx,
-                       md5(array_to_string(
-                           list_slice(w, i * 4 + 1, i * 4 + 8), ' ')) AS h
-                FROM toks,
-                     unnest(generate_series(0, (len(w) - 8) // 4)) AS t(i)
-                WHERE len(w) >= 8
-            ),
-            marked AS (
-                SELECT doc_id, widx,
-                       row_number() OVER (PARTITION BY h
-                                          ORDER BY doc_id, widx) AS rn,
-                       count(*) OVER (PARTITION BY h) AS c
-                FROM wins
-            ),
-            dups AS (SELECT doc_id, widx FROM marked WHERE c >= 2 AND rn > 1),
-            flags AS (
-                SELECT t.doc_id, t.pos, t.tok,
-                       EXISTS (SELECT 1 FROM dups d
-                               WHERE d.doc_id = t.doc_id
-                                 AND d.widx * 4 <= t.pos
-                                 AND t.pos < d.widx * 4 + 8) AS rm
-                FROM (
-                    SELECT doc_id, CAST(j - 1 AS INT) AS pos,
-                           w[CAST(j AS INT)] AS tok
-                    FROM toks, unnest(generate_series(1, len(w))) AS u(j)
-                ) t
-            ),
-            agg AS (
-                SELECT doc_id,
-                       COALESCE(string_agg(tok, ' ' ORDER BY pos)
-                                FILTER (WHERE NOT rm), '') AS text,
-                       CAST(count(*) AS BIGINT) AS n_tokens,
-                       CAST(count(*) FILTER (WHERE rm) AS BIGINT) AS n_removed
-                FROM flags GROUP BY doc_id
-            ),
-            dwc AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_dup_windows
-                    FROM dups GROUP BY doc_id)
-            SELECT a.doc_id, a.text, a.n_tokens, a.n_removed,
-                   COALESCE(w.n_dup_windows, CAST(0 AS BIGINT)) AS n_dup_windows
-            FROM agg a LEFT JOIN dwc w ON w.doc_id = a.doc_id
-            ORDER BY a.doc_id
-        """.replace("{shared}", " ".join(f"s{k}" for k in range(14))),
         # identical regexp chain over the same synthesized HTML (patterns
         # stay in the Java-RE2 common subset; e'\n' = the literal newline
         # Spark's replacement strings produce; chr(39) = the apostrophe)

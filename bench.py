@@ -139,7 +139,6 @@ def crawl_worker(cpus: int, n_pages: int | None = None) -> None:
             "crawl": {
                 "budget_override": 10**9,
                 "max_retries": 0,
-                "bloom_enabled": True,
                 "bloom_bits": 1 << 21,
                 "max_rounds": 4,
             }
@@ -492,8 +491,8 @@ def write_baseline_md(crawl: dict, timings: dict[str, float]) -> None:
         "   at 16 cores is ±20-40% (noisy neighbors).",
         "On a real N→4N-executor cluster none of these apply: executors are",
         "whole machines, the per-round serial fraction (~3-5 s of plan compile",
-        "+ commit publish — the only true Amdahl term, measured via",
-        "CRAWLSPARK_TIMING=1 laps) is amortized over 10^7+-URL rounds, and",
+        "+ commit publish — the only true Amdahl term) is amortized over",
+        "10^7+-URL rounds, and",
         "every per-round plan is partition-parallel (plan audit: PLANS.md).",
         "",
         "## Query battery (sf0.1, local[{}])".format(CPUS),
@@ -505,7 +504,7 @@ def write_baseline_md(crawl: dict, timings: dict[str, float]) -> None:
         "stall). Session-config independence: the whole battery also runs",
         "green under a Spark-4-default ANSI-enabled session",
         "(tests/test_ansi.py runs every query with spark.sql.ansi.enabled",
-        "= true and pins dedup_minhash value-equality across both modes).",
+        "= true).",
         "",
         "| query | sec |",
         "|---|---|",

@@ -31,8 +31,9 @@ Scale shape: per-iteration cost is one hash join (ranks ⋈ edges on src) and
 one long-sum aggregation keyed by dst — map-side combinable, skew limited to
 genuinely high-in-degree hosts (the same hosts AQE skew-split handles). The
 dangling total rides a 1-row broadcast, never a driver collect. Each
-iteration ends in an eager ``localCheckpoint`` (the dedup_clusters pattern:
-lineage stays one step deep; superseded checkpoints are released)."""
+iteration ends in an eager ``localCheckpoint``: each step reads the previous
+ranks twice, so an uncut lineage would double the plan every iteration; the
+checkpoint keeps it one step deep, and superseded checkpoints are released."""
 
 from __future__ import annotations
 
@@ -118,8 +119,8 @@ def host_rank(
             )
         )
         if checkpoint:
-            # dedup_clusters pattern: lineage stays one step deep, the
-            # superseded checkpoint's blocks are released
+            # cut the lineage to one step (an uncut plan grows with every
+            # iteration); the superseded checkpoint's blocks are released
             new_ranks = new_ranks.localCheckpoint(eager=True)
             ranks.unpersist()
         ranks = new_ranks

@@ -346,7 +346,8 @@ class Crawler:
     def run(self, max_rounds: int | None = None) -> list[RoundResult]:
         """Crawl until the frontier drains (or max_rounds). Resumable: picks up
         from the last committed round."""
-        max_rounds = max_rounds or self.settings.crawl.max_rounds
+        if max_rounds is None:
+            max_rounds = self.settings.crawl.max_rounds
         frontier, seen, bloom, next_key, round_ = self._load_state()
         results: list[RoundResult] = []
         if frontier.isEmpty():  # only the resume/seed boundary needs a probe
@@ -412,7 +413,7 @@ class Crawler:
         # filters) or the warehouse DataFrame (bucket-routed cogroup probe,
         # the 10^10-URL path; settings.bloom_probe)
         base = split_new_vs_seen(
-            base, seen, bloom if s.bloom_enabled else None,
+            base, seen, bloom,
             bloom_buckets=s.seen_buckets,
             keep=_pins,
         ).persist()

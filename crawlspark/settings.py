@@ -45,7 +45,6 @@ class CrawlSettings:
 
     default_host_budget: int = 8        # politeness: max fetches per host per round
     budget_override: int | None = None  # bulk/bench mode: ignore robots budgets
-    bloom_enabled: bool = True          # bloom prefilter before the exact anti-join
     max_retries: int = 1                # fetch-miss re-enqueue attempts (src/main.rs:190-203 analog)
     max_rounds: int = 64
     bloom_bits: int = 1 << 20           # per-run bloom sizing (scaled up at 10^10)
@@ -101,8 +100,12 @@ class Settings:
 
     @classmethod
     def _from_dict(cls, data: dict[str, Any]) -> "Settings":
+        sections = dataclasses.fields(cls)
+        unknown = set(data) - {f_.name for f_ in sections}
+        if unknown:
+            raise ValueError(f"unknown settings sections: {sorted(unknown)}")
         kwargs = {}
-        for f_ in dataclasses.fields(cls):
+        for f_ in sections:
             section_cls = f_.default_factory  # type: ignore[union-attr]
             section_data = data.get(f_.name, {})
             known = {x.name for x in dataclasses.fields(section_cls)}

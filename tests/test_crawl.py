@@ -174,15 +174,20 @@ def test_kill_and_resume_exact(spark, synth_dfs, full_run, tmp_path):
     assert ua == ub
 
 
-def test_empty_frontier_runs_no_round(spark, synth_dfs, tmp_path):
-    """An empty seed frontier runs zero rounds and commits nothing."""
+@pytest.mark.parametrize("empty_seed, max_rounds", [
+    (True, None),   # empty seed frontier
+    (False, 0),     # full seed frontier, zero rounds asked for
+], ids=["empty_frontier", "max_rounds_0"])
+def test_empty_frontier_runs_no_round(spark, synth_dfs, tmp_path, empty_seed, max_rounds):
+    """An empty seed frontier, or max_rounds=0, runs zero rounds and commits
+    nothing."""
     pages, frontier, robots, cache_df = synth_dfs
     wh = Warehouse(tmp_path / "whE")
     crawler = Crawler(
         spark, Settings.new(), wh, synth.golden_fields(), pages, robots,
-        frontier.limit(0), cache_df,
+        frontier.limit(0) if empty_seed else frontier, cache_df,
     )
-    assert crawler.run() == []
+    assert crawler.run(max_rounds=max_rounds) == []
     assert wh.last_round() == -1
 
 

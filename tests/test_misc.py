@@ -25,12 +25,19 @@ def test_settings_layering(tmp_path):
 
 
 def test_settings_rejects_unknown_keys(tmp_path):
-    p = tmp_path / "s.toml"
-    p.write_text("[crawl]\nnot_a_knob = 1\n")
     import pytest
 
-    with pytest.raises(ValueError):
-        Settings.new(p)
+    # an unknown key in a known section, and a misspelled section
+    for toml, override in [
+        ("[crawl]\nnot_a_knob = 1\n", {"crawl": {"not_a_knob": 1}}),
+        ("[crawll]\nmax_rounds = 2\n", {"crawll": {"max_rounds": 2}}),
+    ]:
+        p = tmp_path / "s.toml"
+        p.write_text(toml)
+        with pytest.raises(ValueError):
+            Settings.new(p)
+        with pytest.raises(ValueError):
+            Settings.new(overrides=override)
 
 
 def test_file_to_csv_golden(spark, tmp_path):

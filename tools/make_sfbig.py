@@ -54,7 +54,7 @@ def main() -> None:
             r = r.set_column(idx, key, shifted)
             if name == "documents" and k > 0:
                 # per-replica unique prefix: replicas are near- but not
-                # exact-duplicates (realistic for dedup/minhash profiling)
+                # exact-duplicates (realistic for near-dup profiling)
                 txt = pc.binary_join_element_wise(
                     pa.array([f"r{k}"] * r.num_rows), r.column("text"), " "
                 )

@@ -104,26 +104,7 @@ def main() -> None:
          [("exactly one MapInPandas operator", p.count("(2) MapInPandas") >= 1 and p.count("MapInPandas (") == 1)])
     )
 
-    # 7. minhash LSH: bucket-grouped candidates, no self-join of the
-    #    signature subtree, no cartesian anywhere
-    from crawlspark.textops import minhash_lsh_pairs
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    q = minhash_lsh_pairs(docs, jaccard_threshold=0.8)
-    p = fmt(q)
-    analyzed = q._jdf.queryExecution().analyzed().toString()
-    sections.append(
-        ("MinHash LSH: bucket groupBy candidates (no self-join, no cartesian)", p,
-         [("no CartesianProduct / BroadcastNestedLoop on the candidate path",
-           "CartesianProduct" not in p),
-          ("signature subtree evaluated once (single ObjectHashAggregate/"
-           "HashAggregate pair over the banded explode)", "Generate" in p),
-          ("no forced broadcast of the candidate-pair set (no hint in the "
-           "analyzed plan; O(near-dups) is not broadcast-sized at 10^10 docs)",
-           "ResolvedHint" not in analyzed)])
-    )
-
-    # 8. distributed bloom build: executor-side cogroup, no driver collect
+    # 7. distributed bloom build: executor-side cogroup, no driver collect
     from crawlspark.seen import distributed_bloom_update
 
     hashes = spark.range(1000).select(F.xxhash64(F.col("id").cast("string")).alias("url_hash"))
@@ -134,7 +115,7 @@ def main() -> None:
          [("FlatMapCoGroupsInPandas operator", "FlatMapCoGroupsInPandas" in p)])
     )
 
-    # 9. routed bloom probe: per-bucket cogroup, no whole-filter broadcast
+    # 8. routed bloom probe: per-bucket cogroup, no whole-filter broadcast
     from crawlspark.seen import bloom_probe_routed
 
     bloom_df = distributed_bloom_update(hashes, None, 1 << 16, 5, 32)
@@ -147,7 +128,7 @@ def main() -> None:
           ("no broadcast of the bitmap table", "BroadcastExchange" not in p)])
     )
 
-    # 10. cuckoo build/probe (deletable seen filter): same per-bucket cogroup
+    # 9. cuckoo build/probe (deletable seen filter): same per-bucket cogroup
     #     shape as bloom — table never collected or broadcast
     from crawlspark.seen import cuckoo_probe_routed, distributed_cuckoo_update
 
@@ -164,37 +145,7 @@ def main() -> None:
         ("Cuckoo filter (deletable seen prefilter): build + probe cogroups", p + "\n" + p2, checks)
     )
 
-    # 11. pipeline_curate: the composed curation chain — final plan reads the
-    #     gated corpus from cache and cluster labels from the checkpoint; no
-    #     file scan is recomputed across stage boundaries
-    q = em.q_pipeline_curate(spark, SF)
-    p = fmt(q)
-    # ("Scan parquet" DOES appear in the formatted text — inside the
-    # InMemoryRelation's one-time cache-FILL plan, already executed during the
-    # clusters stage; the live operators are the cache scan + checkpoint RDD.
-    # Structural check: every parquet scan line is indented strictly deeper
-    # than the InMemoryRelation node, i.e. inside its fill subtree.)
-    tree = p.split("\n(1)")[0].splitlines()
-    rel_indent = min(
-        (len(l) - len(l.lstrip(" :+-"))) for l in tree if "InMemoryRelation" in l
-    )
-    scans_inside = all(
-        (len(l) - len(l.lstrip(" :+-"))) > rel_indent
-        for l in tree
-        if "Scan parquet" in l
-    )
-    sections.append(
-        ("pipeline_curate: composed gates→dedup→clusters→tokens, one connected plan", p,
-         [("survivor corpus read from cache (InMemoryTableScan)", "InMemoryTableScan" in p),
-          ("cluster labels read from the localCheckpoint RDD, not recomputed",
-           "ExistingRDD" in p),
-          ("every parquet scan sits inside the one-time cache-fill subtree",
-           scans_inside),
-          ("no cartesian anywhere", "CartesianProduct" not in p
-           and "BroadcastNestedLoop" not in p)])
-    )
-
-    # 12. robots.txt parse: one Catalyst fold per body — single projection
+    # 10. robots.txt parse: one Catalyst fold per body — single projection
     from crawlspark.robots import parse_robots_txt
 
     bodies = spark.createDataFrame(
@@ -209,7 +160,7 @@ def main() -> None:
           ("no exchange (pure projection)", "Exchange" not in p)])
     )
 
-    # 13. benchmark decontamination: benchmark gram set broadcast, corpus side
+    # 11. benchmark decontamination: benchmark gram set broadcast, corpus side
     #     map-only up to the id-only distinct (no corpus-sized shuffle)
     from crawlspark.textops import decontaminate, domain_quota, split_assign
 
@@ -225,7 +176,7 @@ def main() -> None:
           ("no cartesian product", "CartesianProduct" not in p)])
     )
 
-    # 14. domain quota: two-phase salted top-k — no single-partition exchange
+    # 12. domain quota: two-phase salted top-k — no single-partition exchange
     q = domain_quota(docs, k=20)
     p = fmt(q)
     sections.append(
@@ -236,7 +187,7 @@ def main() -> None:
           ("no Python operator", "MapInPandas" not in p and "BatchEvalPython" not in p)])
     )
 
-    # 15. split assignment: pure projection — zero exchanges
+    # 13. split assignment: pure projection — zero exchanges
     q = split_assign(docs)
     p = fmt(q)
     sections.append(
@@ -245,7 +196,7 @@ def main() -> None:
           ("whole-stage codegen", "codegen id" in p)])
     )
 
-    # 16. PII redaction: pure regexp projection
+    # 14. PII redaction: pure regexp projection
     from crawlspark.textops import pack_sequences, pii_redact
 
     q = pii_redact(docs)
@@ -256,7 +207,7 @@ def main() -> None:
           ("whole-stage codegen", "codegen id" in p)])
     )
 
-    # 17. sequence packing AT SCALE (small_threshold=0 forces the range
+    # 15. sequence packing AT SCALE (small_threshold=0 forces the range
     #     path): per-partition running sums + triangular metadata offsets —
     #     no global single-partition window over the corpus
     q = pack_sequences(docs, ctx=2048, small_threshold=0)
@@ -270,23 +221,7 @@ def main() -> None:
            "MapInPandas" not in p and "BatchEvalPython" not in p)])
     )
 
-    # 18. substring dedup: the only corpus-wide exchanges carry (md5, ids) —
-    #     TEXT never shuffles (reassembly joins dup window ids back by
-    #     doc_id); keeper choice is a hash aggregate, not a window
-    from crawlspark.textops import substring_dedup
-
-    q = substring_dedup(docs, window=16, stride=8)
-    p = fmt(q)
-    sections.append(
-        ("Substring (duplicated-span) dedup: id-only exchange", p,
-         [("no Python operator",
-           "MapInPandas" not in p and "BatchEvalPython" not in p),
-          ("no cartesian product", "CartesianProduct" not in p),
-          ("keeper via hash aggregate (no global window)",
-           "HashAggregate" in p and "Exchange SinglePartition" not in p)])
-    )
-
-    # 19. host rank: one PageRank iteration — dangling mass rides a 1-row
+    # 16. host rank: one PageRank iteration — dangling mass rides a 1-row
     #     broadcast, contributions are a map-side-combinable long sum
     from crawlspark.hostrank import host_rank
 
@@ -304,7 +239,7 @@ def main() -> None:
           ("inflow is a partial-aggregated long sum", "HashAggregate" in p)])
     )
 
-    # 20. sitemap parse: pure regexp projection + explode — zero exchanges
+    # 17. sitemap parse: pure regexp projection + explode — zero exchanges
     from crawlspark.sitemap import parse_sitemap
 
     q = parse_sitemap(
@@ -319,7 +254,7 @@ def main() -> None:
            "MapInPandas" not in p and "BatchEvalPython" not in p)])
     )
 
-    # 21. WARC ingestion: the mapInPandas MUST sit on an exchange, never
+    # 18. WARC ingestion: the mapInPandas MUST sit on an exchange, never
     #     directly on the scan (Spark 4.1 PythonRunner selector-spin)
     from crawlspark.warc import parse_warc
 
@@ -336,7 +271,7 @@ def main() -> None:
            "Exchange" in p)])
     )
 
-    # 22. crawl-trap signals: one combinable groupBy(host) — the per-URL
+    # 19. crawl-trap signals: one combinable groupBy(host) — the per-URL
     #     feature extraction is pure projection
     from crawlspark.canonical import url_trap_signals
 
@@ -356,7 +291,7 @@ def main() -> None:
            "MapInPandas" not in p and "BatchEvalPython" not in p)])
     )
 
-    # 23. anchor-text index: data-scale rows pass only through combinable
+    # 20. anchor-text index: data-scale rows pass only through combinable
     #     aggregations; the top-anchor window sits on the (url, anchor)
     #     aggregate
     from crawlspark.canonical import anchor_text_index
@@ -381,7 +316,7 @@ def main() -> None:
            "MapInPandas" not in p and "BatchEvalPython" not in p)])
     )
 
-    # 24. freshness recrawl: the lag window partitions by url (bounded by
+    # 21. freshness recrawl: the lag window partitions by url (bounded by
     #     round count per partition), aggregation is combinable, no Python
     from crawlspark.freshness import change_rates, recrawl_priorities
 
@@ -402,7 +337,7 @@ def main() -> None:
            "MapInPandas" not in p and "BatchEvalPython" not in p)])
     )
 
-    # 25. WET text extraction: one shuffle-free regexp projection
+    # 22. WET text extraction: one shuffle-free regexp projection
     from crawlspark.textops import html_to_text, term_postings
 
     q = html_to_text(docs.select("doc_id", F.col("text").alias("payload")))
@@ -415,7 +350,7 @@ def main() -> None:
            "MapInPandas" not in p and "BatchEvalPython" not in p)])
     )
 
-    # 26. term postings: df aggregates the AGGREGATED tf table; n_docs is a
+    # 23. term postings: df aggregates the AGGREGATED tf table; n_docs is a
     #     1-row broadcast; no Python, no cartesian
     q = term_postings(docs)
     p = fmt(q)
@@ -429,7 +364,7 @@ def main() -> None:
            "MapInPandas" not in p and "BatchEvalPython" not in p)])
     )
 
-    # 27. WARC→WET→gates composed pipeline: exactly ONE Python operator
+    # 24. WARC→WET→gates composed pipeline: exactly ONE Python operator
     #     (the WARC byte walk), an exchange below it (selector-spin guard),
     #     everything downstream pure Catalyst
     q = em.q_pipeline_warc_wet(spark, SF)
