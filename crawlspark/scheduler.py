@@ -46,7 +46,14 @@ Scale notes:
   DataFrame ops plus the Python UDFs: one mapInPandas (extraction), the
   seen-set prefilter probe (broadcast, or a per-bucket cogroup in routed
   mode) and the per-bucket filter-update cogroup. All round counters come
-  from ONE grouped aggregate over a union of the cached branches.
+  from ONE grouped aggregate over a union of the cached branches, and that
+  aggregate's counts also pick rank_and_key's path (no separate count job).
+* every Python-worker task pays a fixed start-up cost (~0.3 s on a 4-core
+  host) even when it gets no rows, so a round crosses into Python only where
+  it has rows: extraction runs one wave (one task per shuffle partition), and
+  data-free frames (round 0's seen set, the first filter update's previous
+  state, evict's empty add set) come from schemas.empty_frame, which has 0
+  partitions and launches no task.
 """
 
 from __future__ import annotations
@@ -246,7 +253,7 @@ class Crawler:
         last = self.wh.last_round()
         if last < 0:
             frontier = self._apply_debug_window(self._seed)
-            seen = self.spark.createDataFrame([], schemas.SEEN)
+            seen = schemas.empty_frame(self.spark, schemas.SEEN)
             fresh = None if self._bloom_probe_mode() == "routed" else self._new_bloom()
             return frontier, seen, fresh, 1, 0
         frontier = self.wh.read_state(self.spark, "frontier", schemas.FRONTIER)
@@ -312,7 +319,7 @@ class Crawler:
             return 0
         new_seen = seen.join(ev, cond, "left_anti")
         tname = self._filter_table
-        empty_hashes = sp.createDataFrame([], "url_hash long")
+        empty_hashes = schemas.empty_frame(sp, "url_hash long")
         if self.settings.crawl.seen_filter == "cuckoo":
             prev = self.wh.read_state(sp, tname) if self.wh.has_table(tname) else None
             filter_df = self._filter_update(
@@ -518,12 +525,13 @@ class Crawler:
                 .withColumn("html", F.coalesce(F.col("html"), F.col("c_html")))
                 .drop("c_hash", "c_curl", "c_html")
             )
-        # 3× finer than the shuffle default: extraction tasks are the longest
-        # in the round (Python-bound), so small tasks pack the executors and
-        # cut the straggler tail; the exchange also keeps the UDF off the
-        # join stage (see the selector-spin note above)
+        # one extraction task per shuffle partition: every Python-worker task
+        # pays a fixed start-up cost (~0.3 s on 4 cores), so splitting a
+        # round's few thousand pages into more waves than the cores costs
+        # more than the straggler tail it cuts. The exchange also keeps the
+        # UDF off the join stage (see the selector-spin note above)
         feed_x = feed.select(F.col("curl").alias("url"), "html", "provider").repartition(
-            int(sp.conf.get("spark.sql.shuffle.partitions")) * 3
+            int(sp.conf.get("spark.sql.shuffle.partitions"))
         )
         extracted = extract_pages(
             feed_x,
@@ -531,23 +539,6 @@ class Crawler:
             self.settings.abcd.landing_page_field,
             self.landing_base_url,
         ).persist()
-
-        # 5. crawl order seq + 7. dense surrogate keys — skew-robust global
-        #    numbering via ONE fused range repartition (seen.rank_and_key);
-        #    partitioning by host instead would put the skewed host's whole
-        #    batch in one task. ``ranked`` is persisted and force-materialized
-        #    INSIDE the counters action below: its four consumers (crawl_log, seen, both key_map joins)
-        #    run as concurrent commit writes, and a lazily-materialized cache
-        #    would serialize them on the cache-fill lock.
-        ranked = rank_and_key(
-            statused.select("curl", "url_hash", "chost", "priority", "warc_ts", "url",
-                            (F.col("disposition") == "fetched").alias("is_fetched")),
-            ["chost", "priority", "warc_ts", "curl"],
-            fetched_col="is_fetched",
-            key_offset=next_key - 1,
-            keep=_pins,
-        ).persist()
-        _pins.append(ranked)
 
         # ALL round counters in ONE action: non-selected dispositions union the
         # selected/fetch-statused ones AND the extraction kinds (each branch
@@ -574,7 +565,6 @@ class Crawler:
             .unionByName(rest)
             .unionByName(deferred_disp)
             .unionByName(ex_kinds)
-            .unionByName(ranked.select(F.lit("x_ranked").alias("disposition")))
             .groupBy("disposition")
             .count()
             .collect()
@@ -587,6 +577,24 @@ class Crawler:
         n_deferred = c1.get("deferred", 0)
         n_datasets = c1.get("x_dataset", 0)
         n_units = c1.get("x_unit", 0)
+
+        # 5. crawl order seq + 7. dense surrogate keys — skew-robust global
+        #    numbering (seen.rank_and_key); partitioning by host instead would
+        #    put the skewed host's whole batch in one task. ``statused`` holds
+        #    one row per selected curl, so the counters give its exact row
+        #    count and rank_and_key picks its path without a counting job.
+        #    Persisted: its four consumers (crawl_log, seen, both key_map
+        #    joins) run as concurrent commit writes.
+        ranked = rank_and_key(
+            statused.select("curl", "url_hash", "chost", "priority", "warc_ts", "url",
+                            (F.col("disposition") == "fetched").alias("is_fetched")),
+            ["chost", "priority", "warc_ts", "curl"],
+            fetched_col="is_fetched",
+            key_offset=next_key - 1,
+            keep=_pins,
+            n_rows=n_fetched + n_retried + n_failed,
+        ).persist()
+        _pins.append(ranked)
 
         crawl_log = ranked.select(
             F.lit(round_).alias("round"),

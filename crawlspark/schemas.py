@@ -14,6 +14,7 @@ reference's in-memory structures:
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -120,3 +121,13 @@ LINEAGE = StructType(
         StructField("rows", LongType(), False),
     ]
 )
+
+
+def empty_frame(spark: SparkSession, schema: StructType | str) -> DataFrame:
+    """A 0-row frame of ``schema`` with 0 partitions, so scanning it launches
+    no task. ``createDataFrame`` of an empty list instead plans a Python-RDD
+    scan over ``defaultParallelism`` partitions, and each of those tasks pays
+    a Python worker's fixed cost for no rows. The session is explicit: a
+    thread with no active session must not fall back to
+    ``SparkSession.getActiveSession()``, which returns None there."""
+    return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)

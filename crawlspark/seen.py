@@ -32,7 +32,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
 
@@ -293,7 +293,9 @@ class PartitionedCuckoo:
         return cls(int(m), int(slots), int(nb), tables)
 
 
-def bloom_filter_column(bloom: PartitionedBloom | None, hash_col: str):
+def bloom_filter_column(
+    spark: SparkSession, bloom: PartitionedBloom | None, hash_col: str
+):
     """Vectorized (Arrow-batched) Bloom probe as a BooleanType pandas UDF.
 
     Returns a Column: true = *possibly* seen (must exact-confirm),
@@ -311,7 +313,6 @@ def bloom_filter_column(bloom: PartitionedBloom | None, hash_col: str):
     if bloom is None or not getattr(bloom, "bitmaps", getattr(bloom, "tables", None)):
         return F.lit(True)
     cls = type(bloom)  # PartitionedBloom or PartitionedCuckoo — same contract
-    spark = __import__("pyspark").sql.SparkSession.getActiveSession()
     bc = spark.sparkContext.broadcast(bloom.to_rows())
 
     @F.pandas_udf(BooleanType())
@@ -423,9 +424,7 @@ def distributed_cuckoo_update(
     if n_buckets & (n_buckets - 1):
         raise ValueError(f"n_buckets must be a power of two, got {n_buckets}")
     from . import schemas
-    from pyspark.sql import SparkSession
 
-    spark = SparkSession.getActiveSession()
     ops = new_hashes.select(
         F.col(hash_col).bitwiseAND(F.lit(n_buckets - 1)).cast("int").alias("bucket"),
         F.col(hash_col).alias("h"),
@@ -442,7 +441,9 @@ def distributed_cuckoo_update(
     prev = (
         prev_cuckoo.select("bucket", "table")
         if prev_cuckoo is not None
-        else spark.createDataFrame([], schemas.CUCKOO).select("bucket", "table")
+        else schemas.empty_frame(new_hashes.sparkSession, schemas.CUCKOO).select(
+            "bucket", "table"
+        )
     )
 
     def merge(key, ops_pdf: pd.DataFrame, prev_pdf: pd.DataFrame) -> pd.DataFrame:
@@ -540,7 +541,9 @@ def split_new_vs_seen(
             .drop("_ph", "maybe")
         )
     else:
-        maybe = batch.withColumn("_maybe", bloom_filter_column(bloom, hash_col))
+        maybe = batch.withColumn(
+            "_maybe", bloom_filter_column(batch.sparkSession, bloom, hash_col)
+        )
     confirm_cols = [F.col(hash_col).alias("_seen_hash")]
     cond = F.col("_maybe") & (F.col(hash_col) == F.col("_seen_hash"))
     if url_col is not None:
@@ -575,9 +578,7 @@ def distributed_bloom_update(
     if n_buckets & (n_buckets - 1):
         raise ValueError(f"n_buckets must be a power of two, got {n_buckets}")
     from . import schemas
-    from pyspark.sql import SparkSession
 
-    spark = SparkSession.getActiveSession()
     hb = new_hashes.select(
         F.col(hash_col).bitwiseAND(F.lit(n_buckets - 1)).cast("int").alias("bucket"),
         F.col(hash_col).alias("h"),
@@ -585,7 +586,9 @@ def distributed_bloom_update(
     prev = (
         prev_bloom.select("bucket", "bitmap")
         if prev_bloom is not None
-        else spark.createDataFrame([], schemas.BLOOM).select("bucket", "bitmap")
+        else schemas.empty_frame(new_hashes.sparkSession, schemas.BLOOM).select(
+            "bucket", "bitmap"
+        )
     )
 
     def merge(key, new_pdf: pd.DataFrame, prev_pdf: pd.DataFrame) -> pd.DataFrame:
@@ -646,14 +649,17 @@ def rank_and_key(
     key_offset: int = 0,
     keep: list | None = None,
     small_threshold: int = 100_000,
+    n_rows: int | None = None,
 ) -> DataFrame:
     """Fused global numbering: one range shuffle produces BOTH the crawl-order
     ``seq`` (dense 1-based over all rows) and the dense ``surrogate_key`` over
     the fetched subset (first-seen order), continuing from ``key_offset``.
 
-    ADAPTIVE (the AQE idea applied to ranking): the input is persisted and
-    counted first — one job the range path pays anyway through its sampling
-    pass. At or under ``small_threshold`` rows both numberings run in one
+    ADAPTIVE (the AQE idea applied to ranking): the path is picked from the
+    input's row count. A caller that already knows it passes ``n_rows`` (the
+    crawl round takes it from its counters action), so picking the path runs
+    no job; without ``n_rows`` the input is persisted and counted first. At or
+    under ``small_threshold`` rows both numberings run in one
     single-partition window — the 4-job range machinery costs seconds of pure
     scheduling per crawl round on small/local batches. Above it, the input is
     range-repartitioned on the order columns (balanced regardless of key
@@ -670,13 +676,15 @@ def rank_and_key(
     """
     oc = [F.col(c).asc() for c in order_cols]
     fint0 = F.col(fetched_col).cast("long")
-    src = df.persist()
-    if keep is not None:
-        keep.append(src)
-    if src.count() <= small_threshold:
+    if n_rows is None:
+        df = df.persist()
+        if keep is not None:
+            keep.append(df)
+        n_rows = df.count()
+    if n_rows <= small_threshold:
         w_small = Window.orderBy(*oc)
         return (
-            src.withColumn("seq", F.row_number().over(w_small).cast("long"))
+            df.withColumn("seq", F.row_number().over(w_small).cast("long"))
             .withColumn("_frn", F.sum(fint0).over(w_small))
             .withColumn(
                 "surrogate_key",
@@ -690,7 +698,7 @@ def rank_and_key(
     # persisted: the counts branch and the window branch MUST observe the same
     # (sampled, hence nondeterministic) range boundaries — the cache pins them
     d = (
-        src.repartitionByRange(*oc)
+        df.repartitionByRange(*oc)
         .sortWithinPartitions(*oc)
         .withColumn("_pid", F.spark_partition_id())
         .persist()

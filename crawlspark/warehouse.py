@@ -29,6 +29,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from .schemas import empty_frame
+
 
 class Warehouse:
     def __init__(self, path: str | Path):
@@ -226,7 +228,7 @@ class Warehouse:
         t = self.manifest()["tables"].get(name)
         if not t or not t["rounds"]:
             assert schema is not None, f"no snapshot for {name} and no schema"
-            return SparkSession.getActiveSession().createDataFrame([], schema)
+            return empty_frame(spark, schema)
         return spark.read.parquet(str(self._round_dir(name, max(t["rounds"]))))
 
     def read_appends(
@@ -236,7 +238,7 @@ class Warehouse:
         t = self.manifest()["tables"].get(name)
         if not t or not t["rounds"]:
             assert schema is not None, f"no appends for {name} and no schema"
-            return SparkSession.getActiveSession().createDataFrame([], schema)
+            return empty_frame(spark, schema)
         dirs = [str(self._round_dir(name, r)) for r in sorted(t["rounds"])]
         return spark.read.parquet(*dirs)
 

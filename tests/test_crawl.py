@@ -247,3 +247,33 @@ def test_evict_recrawl(spark, synth_dfs, tmp_path, overrides):
     # fresh keys continue from the current max (first-seen-wins is per-life)
     max_kept = max(v for u, v in seen_before.items() if u not in victims)
     assert all(seen_after[u] > max_kept for u in victims)
+
+
+# Spark work of round 0 on the synth fixture at local[4] with 8 shuffle
+# partitions, recorded. An empty frame scanned as a Python RDD, an extra
+# extraction wave or a separate counting job pushes a round over them.
+# Concurrent commit writers sometimes reuse a shuffle and complete fewer tasks.
+ROUND_JOBS_MAX = 16
+ROUND_TASKS_MAX = 197
+
+
+def test_round_spark_cost_bounded(spark, synth_dfs, job_ids, tmp_path):
+    """CI guard on a round's fixed cost: the jobs one crawl round starts
+    (its commit's writer threads included) and the tasks they complete stay
+    within the recorded bounds."""
+    pages, frontier, robots, cache_df = synth_dfs
+    crawler = Crawler(
+        spark, Settings.new(), Warehouse(tmp_path / "whJ"), synth.golden_fields(),
+        pages, robots, frontier, cache_df,
+    )
+    before = job_ids()
+    assert len(crawler.run(max_rounds=1)) == 1
+    jobs = job_ids() - before
+    st = spark.sparkContext.statusTracker()
+    stages = {sid for j in jobs for sid in st.getJobInfo(j).stageIds}
+    tasks = sum(
+        info.numCompletedTasks
+        for info in map(st.getStageInfo, stages)
+        if info is not None
+    )
+    assert len(jobs) <= ROUND_JOBS_MAX and tasks <= ROUND_TASKS_MAX, (len(jobs), tasks)

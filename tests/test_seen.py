@@ -107,16 +107,26 @@ def test_split_new_vs_seen_routed_df(spark):
 
 
 @pytest.mark.parametrize("small_threshold", [None, 0], ids=["window", "range"])
-def test_rank_and_key_fused(spark, small_threshold):
+def test_rank_and_key_fused(spark, job_ids, small_threshold):
     """Both adaptive paths — the single window (input ≤ the default
     threshold) and the range-partitioned path (forced by threshold 0) —
     number rows densely in (host, priority, k) order and key the fetched
-    subset densely from key_offset + 1."""
+    subset densely from key_offset + 1, whether rank_and_key counts the
+    input itself or the caller passes the count as ``n_rows``."""
     data = [(f"h{i % 7}", (i * 13) % 5, i % 3 != 1, f"k{i:03d}") for i in range(211)]
     df = spark.createDataFrame(data, ["host", "priority", "is_fetched", "k"])
     kw = {} if small_threshold is None else {"small_threshold": small_threshold}
-    out = {r["k"]: (r["seq"], r["surrogate_key"])
-           for r in rank_and_key(df, ["host", "priority", "k"], key_offset=100, **kw).collect()}
+    order = ["host", "priority", "k"]
+
+    def numbering(ranked):
+        return {r["k"]: (r["seq"], r["surrogate_key"]) for r in ranked.collect()}
+
+    out = numbering(rank_and_key(df, order, key_offset=100, **kw))
+    before = job_ids()
+    counted = rank_and_key(df, order, key_offset=100, n_rows=len(data), **kw)
+    if small_threshold is None:  # a known count picks the window path job-free
+        assert job_ids() == before
+    assert numbering(counted) == out
     assert len(out) == len(data)
     ordered = sorted(data, key=lambda t: (t[0], t[1], t[3]))
     frank = 0
@@ -289,3 +299,46 @@ def test_cuckoo_overfull_raises():
     hs = (np.arange(40, dtype=np.uint64) * np.uint64(0x9E3779B97F4A7C15)).view(np.int64)
     with pytest.raises(RuntimeError, match="full"):
         ck.add(hs)
+
+
+def test_empty_frame_launches_no_task(spark):
+    """schemas.empty_frame: the given schema, no rows and no partitions, so
+    a scan of it launches no task (createDataFrame([]) launches one Python
+    task per default-parallelism slot)."""
+    from crawlspark import schemas
+
+    df = schemas.empty_frame(spark, schemas.SEEN)
+    assert df.schema == schemas.SEEN
+    assert df._jdf.rdd().getNumPartitions() == 0
+    assert df.count() == 0
+
+
+@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+def test_first_filter_update_matches_driver_build(spark, kind):
+    """A filter update with no previous state (prev=None, an empty frame
+    inside) builds the same rows as the driver-side filter over the same
+    hashes."""
+    from crawlspark.seen import (
+        PartitionedCuckoo,
+        distributed_bloom_update,
+        distributed_cuckoo_update,
+    )
+
+    n_buckets = 8
+    hashes = spark.range(700).select(
+        F.xxhash64(F.col("id").cast("string")).alias("url_hash")
+    )
+    hs = np.array([r["url_hash"] for r in hashes.collect()], dtype=np.int64)
+    if kind == "bloom":
+        got = distributed_bloom_update(hashes, None, 1 << 12, 3, n_buckets)
+        ref = PartitionedBloom(1 << 12, 3, n_buckets)
+        blob = "bitmap"
+    else:
+        got = distributed_cuckoo_update(hashes, None, 1 << 8, 4, n_buckets)
+        ref = PartitionedCuckoo(1 << 8, 4, n_buckets)
+        blob = "table"
+    ref.add(hs)
+    rows = sorted(
+        (r["bucket"], bytes(r[blob]), *tuple(r)[2:]) for r in got.collect()
+    )
+    assert rows == ref.to_rows()

@@ -139,3 +139,30 @@ def test_concurrent_commits_serialize(tmp_path):
     m = wh.manifest()
     assert m["tables"]["t"]["rounds"] == [1] and m["last_round"] == 1
 
+
+def test_absent_table_reads_from_a_thread(spark, tmp_path):
+    """Reading an absent table returns an empty frame of the given schema
+    through the caller's session, also on a thread where
+    SparkSession.getActiveSession() is None."""
+    import threading
+
+    from crawlspark import schemas
+
+    wh = Warehouse(tmp_path / "wh")
+    out, errs = [], []
+
+    def read_absent():
+        try:
+            out.append(wh.read_state(spark, "absent", schemas.SEEN))
+            out.append(wh.read_appends(spark, "absent", schemas.METRICS))
+        except Exception as e:  # noqa: BLE001
+            errs.append(e)
+
+    t = threading.Thread(target=read_absent)
+    t.start()
+    t.join(timeout=120)
+    assert not t.is_alive()
+    assert not errs, errs
+    state, appends = out
+    assert state.schema == schemas.SEEN and state.count() == 0
+    assert appends.schema == schemas.METRICS and appends.count() == 0
