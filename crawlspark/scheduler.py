@@ -525,11 +525,13 @@ class Crawler:
                 .withColumn("html", F.coalesce(F.col("html"), F.col("c_html")))
                 .drop("c_hash", "c_curl", "c_html")
             )
-        # one extraction task per shuffle partition: every Python-worker task
-        # pays a fixed start-up cost (~0.3 s on 4 cores), so splitting a
-        # round's few thousand pages into more waves than the cores costs
-        # more than the straggler tail it cuts. The exchange also keeps the
-        # UDF off the join stage (see the selector-spin note above)
+        # one extraction task per shuffle partition (session.py sizes these at
+        # 1-3x the cores). Every Python-worker task pays a fixed start-up
+        # cost (~0.3 s on 4 cores), and a 3x finer split costs more in
+        # start-ups than the straggler tail it cuts: measured on polite
+        # rounds of a few thousand pages and on a 200k-page bulk round (4
+        # cores, 2x-core partitions). The exchange also keeps the UDF off
+        # the join stage (see the selector-spin note above)
         feed_x = feed.select(F.col("curl").alias("url"), "html", "provider").repartition(
             int(sp.conf.get("spark.sql.shuffle.partitions"))
         )
@@ -584,7 +586,10 @@ class Crawler:
         #    one row per selected curl, so the counters give its exact row
         #    count and rank_and_key picks its path without a counting job.
         #    Persisted: its four consumers (crawl_log, seen, both key_map
-        #    joins) run as concurrent commit writes.
+        #    joins) and the filter-update cogroup run as concurrent commit
+        #    writes and fill the cache lazily. That computes ranked once: the
+        #    writers share its shuffle stages, and a cached partition's block
+        #    lock lets one task compute it while the others wait and read it.
         ranked = rank_and_key(
             statused.select("curl", "url_hash", "chost", "priority", "warc_ts", "url",
                             (F.col("disposition") == "fetched").alias("is_fetched")),
