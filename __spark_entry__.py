@@ -5,11 +5,10 @@ canonicalize → robots → politeness → fetch join → extraction → seen/ke
 metrics) over deterministic synthetic pages sized from sf0.001 documents.
 
 ``queries()`` exposes one named query per implemented operator family from
-SURVEY.md §2 (S1-S28) plus the training-data ops (dedup / text analysis /
-corpus curation); ``oracle_sql()`` gives the DuckDB-equivalent SQL
-for every SQL-expressible one. Aggregates use exact decimal arithmetic so
-Spark and DuckDB agree bit-for-bit; float formatting uses printf-style
-rendering available identically on both sides.
+SURVEY.md §2 (S1-S28) plus the crawl, ingestion and text-analysis ops;
+``oracle_sql()`` gives the DuckDB-equivalent SQL for every one. Aggregates
+use exact decimal arithmetic so Spark and DuckDB agree bit-for-bit; float
+formatting uses printf-style rendering available identically on both sides.
 """
 
 from __future__ import annotations
@@ -179,10 +178,11 @@ def q_s14b_surrogate_keys(spark, sf):
     firsts = (
         e.groupBy("user_id").agg(F.min("ts").alias("first_ts"))
         .withColumn("is_fetched", F.lit(True))
+        .persist()
     )
-    return rank_and_key(firsts, ["first_ts", "user_id"]).select(
-        "user_id", "first_ts", "surrogate_key"
-    )
+    return rank_and_key(
+        firsts, ["first_ts", "user_id"], n_rows=firsts.count()
+    ).select("user_id", "first_ts", "surrogate_key")
 
 
 def q_s15_point_wkt(spark, sf):
@@ -469,77 +469,6 @@ def q_token_count(spark, sf):
     return token_count(_t(spark, sf, "documents"))
 
 
-def q_fingerprint(spark, sf):
-    from crawlspark.textops import fingerprint
-
-    return fingerprint(_t(spark, sf, "documents")).select("doc_id", "md5_fp")
-
-
-def q_fingerprint_winnow(spark, sf):
-    # winnowing fingerprints (sub-document near-dup evidence; Schleimer 2003)
-    from crawlspark.textops import winnow_fingerprints
-
-    return winnow_fingerprints(_t(spark, sf, "documents"))
-
-
-def q_decontaminate(spark, sf):
-    # benchmark decontamination (GPT-3 appx C): eval set = every 97th doc;
-    # any training doc sharing a 5-gram with it is flagged. Broadcast-semi
-    # shape — no corpus shuffle beyond the id-only distinct.
-    from crawlspark.textops import decontaminate
-
-    d = _t(spark, sf, "documents")
-    bench = d.filter(F.col("doc_id") % 97 == 0)
-    return decontaminate(d, bench, shingle_n=5).orderBy("doc_id")
-
-
-def q_domain_quota(spark, sf):
-    # per-domain contribution cap (C4 §2.3 style): top-20 docs per source by
-    # length, two-phase salted top-k (identical output to the single window)
-    from crawlspark.textops import domain_quota
-
-    return domain_quota(_t(spark, sf, "documents"), k=20).orderBy("doc_id")
-
-
-def q_split_assign(spark, sf):
-    # deterministic md5-bucket train/val/test split — reproducible under
-    # re-runs and repartitioning, portable to the SQL oracle
-    from crawlspark.textops import split_assign
-
-    return split_assign(_t(spark, sf, "documents")).orderBy("doc_id")
-
-
-def q_pii_redact(spark, sf):
-    # PII scrub audit: deterministic synthetic PII appended per doc (the
-    # corpus itself is clean) so email/IP/phone branches all fire; identical
-    # footer is built in the oracle SQL
-    from crawlspark.textops import pii_redact
-
-    d = _t(spark, sf, "documents").select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.lit(" contact u"), F.col("doc_id").cast("string"),
-            F.lit("@example.com at 10.0.0."),
-            (F.col("doc_id") % 256).cast("string"),
-            F.when(F.col("doc_id") % 3 == 0,
-                   F.concat(F.lit(" tel 555-01"),
-                            (F.col("doc_id") % 10).cast("string"),
-                            F.lit("-4242")))
-            .otherwise(F.lit("")),
-        ).alias("text"),
-    )
-    return pii_redact(d).orderBy("doc_id")
-
-
-def q_pack_sequences(spark, sf):
-    # GPT-2 concat-and-chunk packing: global exclusive token prefix sum +
-    # ctx-2048 sequence index (adaptive: window small, range-partitioned big)
-    from crawlspark.textops import pack_sequences
-
-    return pack_sequences(_t(spark, sf, "documents"), ctx=2048).orderBy("doc_id")
-
-
 def q_crawl_trap_detect(spark, sf):
     # per-host crawl-trap score over synthesized URL shapes: hosts 0-2 get
     # trap-pattern paths (repeated segments / depth-10 / 5 query params),
@@ -590,31 +519,6 @@ def q_anchor_text_index(spark, sf):
     )
     pages = d.select(html.alias("payload"), base.alias("url"))
     return anchor_text_index(pages).orderBy("url")
-
-
-def q_html_to_text(spark, sf):
-    # WET-step visible-text extraction over synthesized HTML wrapping the
-    # documents' text; oracle runs the identical Java∩RE2 regexp chain
-    from crawlspark.textops import html_to_text
-
-    d = _t(spark, sf, "documents")
-    html = F.concat(
-        F.lit("<html><head><title>t</title><style>x{color:red}</style>"
-              "<script>var a=1;</script></head><body><p>"),
-        F.col("text"),
-        F.lit("</p><div>A &amp;amp; B &lt;tag&gt;</div><!-- note --><ul><li>one"
-              "</li><li>two</li></ul><br/>end</body></html>"),
-    )
-    return html_to_text(
-        d.select("doc_id", html.alias("payload"))
-    ).orderBy("doc_id")
-
-
-def q_term_postings(spark, sf):
-    # exact TF/DF inverted-index fact table (integer core of TF-IDF)
-    from crawlspark.textops import term_postings
-
-    return term_postings(_t(spark, sf, "documents")).orderBy("term", "doc_id")
 
 
 def q_crawl_robots_sitemaps(spark, sf):
@@ -802,93 +706,6 @@ def q_crawl_warc_pages(spark, sf):
     ).orderBy("url")
 
 
-def q_pipeline_warc_wet(spark, sf):
-    # the full ingestion chain composed: WARC byte walk → PAGES load edge →
-    # WET visible-text extraction → Gopher gates. One connected plan from
-    # archive bytes to per-document keep verdicts (the Common-Crawl
-    # WARC→WET→filtered-corpus path in one query).
-    from crawlspark.textops import gopher_quality_rules, html_to_text
-    from crawlspark.warc import pages_from_warc, parse_warc
-
-    d = _t(spark, sf, "documents").filter(F.col("doc_id") < 300)
-    did = F.col("doc_id").cast("string")
-    payload = F.concat(
-        F.lit("<html><head><script>var a=1;</script></head><body><p>"),
-        F.col("text"),
-        F.lit("</p><div>tail &amp; x</div></body></html>"),
-    )
-    http = F.concat(
-        F.lit("HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n"), payload
-    )
-    rec = F.concat(
-        F.lit("WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: https://w"),
-        did, F.lit(".example.org/p\r\nWARC-Date: 2024-01-02T03:04:05Z\r\n"
-                   "Content-Type: application/http; msgtype=response\r\n"
-                   "Content-Length: "),
-        F.length(F.encode(http, "UTF-8")).cast("string"), F.lit("\r\n\r\n"), http, F.lit("\r\n\r\n"),
-    )
-    archives = d.select(
-        F.concat(F.lit("w"), did).alias("path"),
-        F.encode(rec, "UTF-8").alias("content"),
-    )
-    pages = pages_from_warc(parse_warc(archives))
-    wet = html_to_text(
-        pages.select(F.col("url").alias("doc_id"), F.col("html").alias("payload"))
-    )
-    # gates are a pure projection — carry text/n_chars through instead of
-    # re-joining wet (a join would DUPLICATE the WARC-parse subtree: two
-    # MapInPandas in the plan, the byte walk run twice)
-    return (
-        gopher_quality_rules(wet, carry_cols=("text", "n_chars"))
-        .select(F.col("doc_id").alias("url"), "text", "n_chars", "n_words", "keep")
-        .orderBy("url")
-    )
-
-
-def q_pipeline_training_set(spark, sf):
-    # COMPOSED PIPELINE, fully SQL-oracle-expressible end-to-end:
-    # the "raw corpus → training set" chain a 100 TB curation run executes —
-    # Gopher quality gates → exact content dedup (first-seen keeper) →
-    # benchmark decontamination (broadcast 5-gram overlap vs the eval set)
-    # → per-domain quota cap (top-20 by length, salted two-phase) →
-    # deterministic md5-bucket train/val/test assignment. Every stage has
-    # exact ANSI-SQL semantics, so the ORACLE IS THE WHOLE CHAIN — one
-    # DuckDB WITH-query validates the composition itself.
-    from crawlspark.textops import (
-        decontaminate,
-        domain_quota,
-        gopher_quality_rules,
-        split_assign,
-    )
-
-    d = _t(spark, sf, "documents")
-    bench = d.filter(F.col("doc_id") % 97 == 0).select("doc_id", "text")
-    # gated corpus persisted once: consumed by the keeper aggregation AND the
-    # survivor semi-join, so the scan and the gates run once
-    gated = d.join(
-        gopher_quality_rules(d).filter("keep").select("doc_id"), "doc_id"
-    ).persist()
-    keepers = (
-        gated.groupBy(F.md5("text").alias("h"))
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-    uniq = gated.join(keepers, "doc_id", "left_semi")
-    clean = uniq.join(
-        decontaminate(uniq.select("doc_id", "text"), bench)
-        .filter(~F.col("contaminated"))
-        .select("doc_id"),
-        "doc_id",
-        "left_semi",
-    )
-    quota = domain_quota(clean, k=20)
-    return (
-        quota.join(split_assign(quota), "doc_id")
-        .select("doc_id", "domain", "split")
-        .orderBy("doc_id")
-    )
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         "s01_filter_pushdown": q_s01_filter_pushdown,
@@ -918,31 +735,20 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "extraction_units": q_extraction_units,
         "extraction_version": q_extraction_version,
         "ngram_jaccard": q_ngram_jaccard,
-        "pipeline_training_set": q_pipeline_training_set,
         "gopher_quality": q_gopher_quality,
         "lang_id": q_lang_id,
         "quality_score": q_quality_score,
         "token_count": q_token_count,
-        "fingerprint": q_fingerprint,
-        "decontaminate": q_decontaminate,
-        "domain_quota": q_domain_quota,
-        "split_assign": q_split_assign,
-        "pii_redact": q_pii_redact,
-        "pack_sequences": q_pack_sequences,
         "crawl_trap_detect": q_crawl_trap_detect,
         "anchor_text_index": q_anchor_text_index,
         "crawl_robots_sitemaps": q_crawl_robots_sitemaps,
         "recrawl_priorities": q_recrawl_priorities,
         "crawl_host_graph": q_crawl_host_graph,
-        "html_to_text": q_html_to_text,
-        "term_postings": q_term_postings,
-        "pipeline_warc_wet": q_pipeline_warc_wet,
         "host_rank": q_host_rank,
         "crawl_sitemap_parse": q_crawl_sitemap_parse,
         "crawl_sitemap_frontier": q_crawl_sitemap_frontier,
         "crawl_warc_parse": q_crawl_warc_parse,
         "crawl_warc_pages": q_crawl_warc_pages,
-        "fingerprint_winnow": q_fingerprint_winnow,
     }
 
 
@@ -1257,183 +1063,11 @@ def oracle_sql() -> dict[str, str]:
                    cast(ceil(length(text) / 4.0) AS bigint) AS bpe_est_tokens
             FROM documents
         """,
-        "fingerprint": """
-            SELECT doc_id, md5(text) AS md5_fp FROM documents
-        """,
-        # n-gram construction mirrors shingles_expr exactly: len(w)>=5 ⇒
-        # positional 5-grams; shorter ⇒ one whole-text gram (same CASE edge)
-        "decontaminate": """
-            WITH tok AS (
-                SELECT doc_id, string_split(text, ' ') AS w FROM documents
-            ),
-            grams AS (
-                SELECT doc_id,
-                       CASE WHEN len(w) >= 5
-                            THEN array_to_string(list_slice(w, i, i + 4), ' ')
-                            ELSE array_to_string(w, ' ') END AS gram
-                FROM tok, unnest(generate_series(1, greatest(len(w) - 4, 1))) AS t(i)
-            ),
-            bg AS (SELECT DISTINCT gram FROM grams WHERE doc_id % 97 = 0),
-            cont AS (
-                SELECT DISTINCT g.doc_id FROM grams g JOIN bg USING (gram)
-            )
-            SELECT d.doc_id, (c.doc_id IS NOT NULL) AS contaminated
-            FROM documents d LEFT JOIN cont c USING (doc_id)
-            ORDER BY doc_id
-        """,
-        "domain_quota": """
-            SELECT doc_id, domain FROM (
-                SELECT doc_id, source AS domain,
-                       row_number() OVER (
-                           PARTITION BY source
-                           ORDER BY n_chars DESC, doc_id ASC
-                       ) AS r
-                FROM documents
-            ) WHERE r <= 20 ORDER BY doc_id
-        """,
-        "split_assign": """
-            SELECT doc_id, bucket,
-                   CASE WHEN bucket < 5 THEN 'test'
-                        WHEN bucket < 10 THEN 'val'
-                        ELSE 'train' END AS split
-            FROM (
-                SELECT doc_id,
-                       ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT
-                           % 100 AS bucket
-                FROM documents
-            ) ORDER BY doc_id
-        """,
-        # identical footer construction + the identical Java/RE2-common
-        # patterns, applied in the same pinned order (email → IP → phone)
-        "pii_redact": """
-            WITH aug AS (
-                SELECT doc_id,
-                       text || ' contact u' || CAST(doc_id AS VARCHAR)
-                       || '@example.com at 10.0.0.'
-                       || CAST(doc_id % 256 AS VARCHAR)
-                       || CASE WHEN doc_id % 3 = 0
-                               THEN ' tel 555-01' || CAST(doc_id % 10 AS VARCHAR)
-                                    || '-4242'
-                               ELSE '' END AS text
-                FROM documents
-            ),
-            e AS (
-                SELECT doc_id, text,
-                       len(regexp_extract_all(text,
-                           '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}')) AS n_emails,
-                       regexp_replace(text,
-                           '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}',
-                           '<EMAIL>', 'g') AS t1
-                FROM aug
-            ),
-            i AS (
-                SELECT doc_id, n_emails,
-                       len(regexp_extract_all(t1,
-                           '\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b')) AS n_ips,
-                       regexp_replace(t1,
-                           '\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b',
-                           '<IP>', 'g') AS t2
-                FROM e
-            )
-            SELECT doc_id, n_emails, n_ips,
-                   len(regexp_extract_all(t2, '\\b\\d{3}-\\d{3}-\\d{4}\\b')) AS n_phones,
-                   regexp_replace(t2, '\\b\\d{3}-\\d{3}-\\d{4}\\b',
-                                  '<PHONE>', 'g') AS redacted
-            FROM i ORDER BY doc_id
-        """,
-        "pack_sequences": """
-            SELECT doc_id, n_tokens,
-                   CAST(cum - n_tokens AS BIGINT) AS start_offset,
-                   CAST((cum - n_tokens) // 2048 AS BIGINT) AS seq_index
-            FROM (
-                SELECT doc_id,
-                       CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-                       sum(len(string_split(text, ' ')))
-                           OVER (ORDER BY doc_id) AS cum
-                FROM documents
-            ) ORDER BY doc_id
-        """,
-        # the WHOLE curation chain as one WITH-query: gates → exact dedup →
-        # decontamination → domain quota → split (validates the composition,
-        # not just each stage)
-        "pipeline_training_set": """
-            WITH feat AS (
-              SELECT doc_id, text, source, n_chars,
-                     len(string_split(text, ' ')) AS nw,
-                     len(list_filter(string_split(text, ' '),
-                                     w -> regexp_matches(w, '[a-zA-Z]'))) AS aw,
-                     cast((length(p) - length(replace(p, ' the ', ''))) / 5 AS bigint)
-                     + cast((length(p) - length(replace(p, ' and ', ''))) / 5 AS bigint)
-                     + cast((length(p) - length(replace(p, ' of ', ''))) / 4 AS bigint)
-                     + cast((length(p) - length(replace(p, ' to ', ''))) / 4 AS bigint)
-                     + cast((length(p) - length(replace(p, ' in ', ''))) / 4 AS bigint) AS sh
-              FROM (SELECT doc_id, text, source, n_chars,
-                           ' ' || text || ' ' AS p FROM documents)
-            ),
-            gated AS (
-              SELECT doc_id, text, source, n_chars FROM feat
-              WHERE nw >= 20 AND nw <= 100000
-                AND length(text) * 1.0 / nw >= 3.0
-                AND length(text) * 1.0 / nw <= 10.0
-                AND aw * 1.0 / nw >= 0.8 AND sh >= 2
-            ),
-            keepers AS (
-              SELECT min(doc_id) AS doc_id FROM gated GROUP BY md5(text)
-            ),
-            uniq AS (SELECT gated.* FROM gated JOIN keepers USING (doc_id)),
-            tok AS (SELECT doc_id, string_split(text, ' ') AS w FROM uniq),
-            btok AS (
-              SELECT string_split(text, ' ') AS w FROM documents
-              WHERE doc_id % 97 = 0
-            ),
-            grams AS (
-              SELECT doc_id,
-                     CASE WHEN len(w) >= 5
-                          THEN array_to_string(list_slice(w, i, i + 4), ' ')
-                          ELSE array_to_string(w, ' ') END AS gram
-              FROM tok, unnest(generate_series(1, greatest(len(w) - 4, 1))) AS t(i)
-            ),
-            bgrams AS (
-              SELECT DISTINCT
-                     CASE WHEN len(w) >= 5
-                          THEN array_to_string(list_slice(w, i, i + 4), ' ')
-                          ELSE array_to_string(w, ' ') END AS gram
-              FROM btok, unnest(generate_series(1, greatest(len(w) - 4, 1))) AS t(i)
-            ),
-            cont AS (
-              SELECT DISTINCT grams.doc_id FROM grams JOIN bgrams USING (gram)
-            ),
-            clean AS (
-              SELECT * FROM uniq
-              WHERE doc_id NOT IN (SELECT doc_id FROM cont)
-            ),
-            quota AS (
-              SELECT doc_id, domain FROM (
-                SELECT doc_id, source AS domain,
-                       row_number() OVER (
-                           PARTITION BY source
-                           ORDER BY n_chars DESC, doc_id ASC
-                       ) AS r
-                FROM clean
-              ) WHERE r <= 20
-            )
-            SELECT doc_id, domain,
-                   CASE WHEN b < 5 THEN 'test'
-                        WHEN b < 10 THEN 'val'
-                        ELSE 'train' END AS split
-            FROM (
-              SELECT doc_id, domain,
-                     ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT
-                         % 100 AS b
-              FROM quota
-            ) ORDER BY doc_id
-        """,
-        # xxhash64-based sketches and the pandas-UDF extraction are not
-        # ANSI-SQL-expressible; their oracles are INDEPENDENT pure-Python
-        # mirrors (tools/make_fixtures.py — xxhash64_py + Java int semantics,
-        # same strategy as tests/oracle_sim.py and the reference's golden
-        # fixtures, abcd_parser.rs:232-298) materialized as parquet for the
-        # sf0.01 correctness gate and read here via read_parquet.
+        # the pandas-UDF extraction is not ANSI-SQL-expressible; its oracle is
+        # an INDEPENDENT pure-Python mirror (tools/make_fixtures.py — the same
+        # strategy as tests/oracle_sim.py and the reference's golden fixtures,
+        # abcd_parser.rs:232-298) materialized as parquet for the sf0.01
+        # correctness gate and read here via read_parquet.
         "extraction_units": f"""
             SELECT url, member_index, unit_index, unit_id, lon
             FROM read_parquet('{_FIXTURES}/extraction_units.parquet')
@@ -1446,101 +1080,6 @@ def oracle_sql() -> dict[str, str]:
                 ('http://v/none', CAST(NULL AS VARCHAR))
             ) AS t(url, abcd_version)
             ORDER BY url
-        """,
-        "fingerprint_winnow": f"""
-            SELECT doc_id, fp FROM read_parquet('{_FIXTURES}/fingerprint_winnow.parquet')
-        """,
-        # identical regexp chain over the same synthesized HTML (patterns
-        # stay in the Java-RE2 common subset; e'\n' = the literal newline
-        # Spark's replacement strings produce; chr(39) = the apostrophe)
-        "html_to_text": """
-            WITH raw AS (
-                SELECT doc_id,
-                       '<html><head><title>t</title><style>x{color:red}</style>'
-                       || '<script>var a=1;</script></head><body><p>'
-                       || text
-                       || '</p><div>A &amp;amp; B &lt;tag&gt;</div><!-- note -->'
-                       || '<ul><li>one</li><li>two</li></ul><br/>end</body></html>'
-                       AS s
-                FROM raw0
-            ),
-            st AS (
-                SELECT doc_id,
-                  regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-                    replace(replace(replace(replace(replace(replace(
-                      regexp_replace(
-                        regexp_replace(
-                          regexp_replace(
-                            regexp_replace(
-                              regexp_replace(s, '(?is)<script[^>]*>.*?</script>', ' ', 'g'),
-                              '(?is)<style[^>]*>.*?</style>', ' ', 'g'),
-                            '(?s)<!--.*?-->', ' ', 'g'),
-                          '(?i)</(p|div|li|tr|h[1-6]|br)>|<br[^>]*>', e'\n', 'g'),
-                        '<[^>]+>', ' ', 'g'),
-                      '&lt;', '<'), '&gt;', '>'), '&quot;', '"'),
-                      '&#39;', chr(39)), '&nbsp;', ' '), '&amp;', '&'),
-                    '[ \t]+', ' ', 'g'),
-                    e' ?\n ?', e'\n', 'g'),
-                    e'\n{2,}', e'\n', 'g'),
-                    '^\s+|\s+$', '', 'g') AS text
-                FROM raw
-            )
-            SELECT doc_id, text, CAST(length(text) AS BIGINT) AS n_chars
-            FROM st ORDER BY doc_id
-        """.replace("FROM raw0", "FROM documents"),
-        "term_postings": """
-            WITH toks AS (
-                SELECT doc_id,
-                       unnest(regexp_extract_all(lower(text), '([a-z0-9]+)', 1))
-                           AS term
-                FROM documents
-            ),
-            tf AS (
-                SELECT term, doc_id, count(*) AS tf
-                FROM toks GROUP BY term, doc_id
-            ),
-            dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-            nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents)
-            SELECT term, doc_id,
-                   CAST(tf AS BIGINT) AS tf,
-                   CAST(df AS BIGINT) AS df,
-                   CAST(n_docs AS BIGINT) AS n_docs
-            FROM tf JOIN dfq USING (term) CROSS JOIN nd
-            ORDER BY term, doc_id
-        """,
-        # closed form: the WET text of the synthesized archive is exactly
-        # text || '\ntail & x' (documents.text verified free of multi-space
-        # / tag / entity bytes at sf0.01 and sf0.1); gates mirror
-        # gopher_quality_rules over that text
-        "pipeline_warc_wet": """
-            WITH wet AS (
-                SELECT 'https://w' || CAST(doc_id AS VARCHAR)
-                           || '.example.org/p' AS url,
-                       text || e'\ntail & x' AS text
-                FROM documents WHERE doc_id < 300
-            ),
-            feat AS (
-                SELECT url, text,
-                       len(string_split(text, ' ')) AS nw,
-                       len(list_filter(string_split(text, ' '),
-                                       w -> regexp_matches(w, '[a-zA-Z]'))) AS aw,
-                       cast((length(p) - length(replace(p, ' the ', ''))) / 5 AS bigint)
-                       + cast((length(p) - length(replace(p, ' and ', ''))) / 5 AS bigint)
-                       + cast((length(p) - length(replace(p, ' of ', ''))) / 4 AS bigint)
-                       + cast((length(p) - length(replace(p, ' to ', ''))) / 4 AS bigint)
-                       + cast((length(p) - length(replace(p, ' in ', ''))) / 4 AS bigint)
-                           AS sh
-                FROM (SELECT url, text, ' ' || text || ' ' AS p FROM wet)
-            )
-            SELECT url, text,
-                   CAST(length(text) AS BIGINT) AS n_chars,
-                   CAST(nw AS BIGINT) AS n_words,
-                   ((nw >= 20 AND nw <= 100000)
-                    AND (length(text) * 1.0 / nw >= 3.0
-                         AND length(text) * 1.0 / nw <= 10.0)
-                    AND (aw * 1.0 / nw >= 0.8)
-                    AND (sh >= 2)) AS keep
-            FROM feat ORDER BY url
         """,
         # Sitemap directives in closed form: every body yields its /m{id}
         # map (comment stripped), doc_id%3==0 adds /extra.xml; empty-value

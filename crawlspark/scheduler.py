@@ -248,8 +248,22 @@ class Crawler:
             new_hashes, prev_df, c.bloom_bits, c.bloom_hashes, c.seen_buckets
         )
 
+    def _require_filter_table(self) -> None:
+        """A committed warehouse must hold the configured prefilter's table.
+        Starting from an empty filter instead would probe every older seen
+        URL as new and skip its exact confirm, so resuming under a different
+        ``crawl.seen_filter`` would key those URLs a second time."""
+        tname = self._filter_table
+        if self.wh.last_round() >= 0 and not self.wh.has_table(tname):
+            raise ValueError(
+                f"warehouse {self.wh.path} has committed rounds but no "
+                f"{tname!r} table: crawl.seen_filter={tname!r} differs from "
+                "the filter it was crawled with"
+            )
+
     def _load_state(self):
         """(frontier, seen, bloom, next_key, next_round) from the last commit."""
+        self._require_filter_table()
         last = self.wh.last_round()
         if last < 0:
             frontier = self._apply_debug_window(self._seed)
@@ -307,6 +321,7 @@ class Crawler:
         eviction is atomic and resume-exact like any crawl round. Returns
         the number of evicted seen rows."""
         sp = self.spark
+        self._require_filter_table()
         seen = self.wh.read_state(sp, "seen", schemas.SEEN)
         ev = enrich(urls.select("url")).select(
             F.col("curl").alias("_eurl"), F.col("url_hash").alias("_ehash")
@@ -666,16 +681,7 @@ class Crawler:
         # the driver never collects url hashes. The cogroup job runs inside
         # the commit's parallel write wave.
         tname = self._filter_table
-        if self.wh.has_table(tname):
-            prev_bloom_df = self.wh.read_state(sp, tname)
-        elif isinstance(bloom, DataFrame):
-            prev_bloom_df = bloom
-        elif isinstance(bloom, PartitionedBloom) and bloom.bitmaps:
-            prev_bloom_df = sp.createDataFrame(bloom.to_rows(), schemas.BLOOM)
-        elif isinstance(bloom, PartitionedCuckoo) and bloom.tables:
-            prev_bloom_df = sp.createDataFrame(bloom.to_rows(), schemas.CUCKOO)
-        else:
-            prev_bloom_df = None
+        prev_bloom_df = self.wh.read_state(sp, tname) if self.wh.has_table(tname) else None
         bloom_df = self._filter_update(new_seen.select("url_hash"), prev_bloom_df)
 
         # sort-on-write (S21, the reference's post-load CLUSTER analog,

@@ -649,17 +649,17 @@ def rank_and_key(
     key_offset: int = 0,
     keep: list | None = None,
     small_threshold: int = 100_000,
-    n_rows: int | None = None,
+    *,
+    n_rows: int,
 ) -> DataFrame:
     """Fused global numbering: one range shuffle produces BOTH the crawl-order
     ``seq`` (dense 1-based over all rows) and the dense ``surrogate_key`` over
     the fetched subset (first-seen order), continuing from ``key_offset``.
 
     ADAPTIVE (the AQE idea applied to ranking): the path is picked from the
-    input's row count. A caller that already knows it passes ``n_rows`` (the
-    crawl round takes it from its counters action), so picking the path runs
-    no job; without ``n_rows`` the input is persisted and counted first. At or
-    under ``small_threshold`` rows both numberings run in one
+    input's row count ``n_rows``, which the caller supplies (the crawl round
+    takes it from its counters action), so picking the path runs no job. At
+    or under ``small_threshold`` rows both numberings run in one
     single-partition window — the 4-job range machinery costs seconds of pure
     scheduling per crawl round on small/local batches. Above it, the input is
     range-repartitioned on the order columns (balanced regardless of key
@@ -676,11 +676,6 @@ def rank_and_key(
     """
     oc = [F.col(c).asc() for c in order_cols]
     fint0 = F.col(fetched_col).cast("long")
-    if n_rows is None:
-        df = df.persist()
-        if keep is not None:
-            keep.append(df)
-        n_rows = df.count()
     if n_rows <= small_threshold:
         w_small = Window.orderBy(*oc)
         return (

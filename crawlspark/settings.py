@@ -64,6 +64,14 @@ class CrawlSettings:
     cuckoo_entries: int = 1 << 14   # cuckoo buckets per hash-range partition
     cuckoo_slots: int = 4           # fingerprints per cuckoo bucket
 
+    def __post_init__(self) -> None:
+        for name, allowed in (("seen_filter", ("bloom", "cuckoo")),
+                              ("bloom_probe", ("auto", "broadcast", "routed"))):
+            if getattr(self, name) not in allowed:
+                raise ValueError(
+                    f"crawl.{name} must be one of {allowed}, got {getattr(self, name)!r}"
+                )
+
 
 @dataclass
 class WarehouseSettings:

@@ -199,7 +199,9 @@ def test_idempotent_recommit(spark, synth_dfs, tmp_path):
 
 def test_crawl_cuckoo_matches_oracle(spark, synth_dfs, tmp_path):
     """seen_filter='cuckoo' produces the exact same crawl as the bloom path
-    (filter kind is a routing detail; the exact join decides membership)."""
+    (filter kind is a routing detail; the exact join decides membership).
+    Resuming that warehouse under the default 'bloom' setting fails fast: an
+    empty Bloom filter would skip the exact confirm for every seen URL."""
     settings, wh, _ = run_crawler(
         spark, synth_dfs, tmp_path / "whK",
         overrides={"crawl": {"seen_filter": "cuckoo"}},
@@ -209,6 +211,17 @@ def test_crawl_cuckoo_matches_oracle(spark, synth_dfs, tmp_path):
     assert log == sim.crawl_order
     assert seen == sim.seen
     assert wh.has_table("cuckoo") and not wh.has_table("bloom")
+
+    pages, frontier, robots, cache_df = synth_dfs
+    last = wh.last_round()
+    crawler = Crawler(
+        spark, Settings.new(), wh, synth.golden_fields(), pages, robots, frontier, cache_df
+    )
+    with pytest.raises(ValueError, match="'bloom'"):
+        crawler.run()
+    with pytest.raises(ValueError, match="'bloom'"):
+        crawler.evict(spark.createDataFrame([(sorted(seen)[0],)], ["url"]))
+    assert wh.last_round() == last and not wh.has_table("bloom")
 
 
 @pytest.mark.parametrize("overrides", [

@@ -27,10 +27,13 @@ def test_settings_layering(tmp_path):
 def test_settings_rejects_unknown_keys(tmp_path):
     import pytest
 
-    # an unknown key in a known section, and a misspelled section
+    # an unknown key in a known section, a misspelled section, and values
+    # outside the seen-filter and probe-mode choices
     for toml, override in [
         ("[crawl]\nnot_a_knob = 1\n", {"crawl": {"not_a_knob": 1}}),
         ("[crawll]\nmax_rounds = 2\n", {"crawll": {"max_rounds": 2}}),
+        ('[crawl]\nseen_filter = "cukoo"\n', {"crawl": {"seen_filter": "cukoo"}}),
+        ('[crawl]\nbloom_probe = "route"\n', {"crawl": {"bloom_probe": "route"}}),
     ]:
         p = tmp_path / "s.toml"
         p.write_text(toml)

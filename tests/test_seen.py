@@ -111,8 +111,8 @@ def test_rank_and_key_fused(spark, job_ids, small_threshold):
     """Both adaptive paths — the single window (input ≤ the default
     threshold) and the range-partitioned path (forced by threshold 0) —
     number rows densely in (host, priority, k) order and key the fetched
-    subset densely from key_offset + 1, whether rank_and_key counts the
-    input itself or the caller passes the count as ``n_rows``."""
+    subset densely from key_offset + 1. The caller passes the row count as
+    ``n_rows``, so the window path picks itself without a job."""
     data = [(f"h{i % 7}", (i * 13) % 5, i % 3 != 1, f"k{i:03d}") for i in range(211)]
     df = spark.createDataFrame(data, ["host", "priority", "is_fetched", "k"])
     kw = {} if small_threshold is None else {"small_threshold": small_threshold}
@@ -121,12 +121,11 @@ def test_rank_and_key_fused(spark, job_ids, small_threshold):
     def numbering(ranked):
         return {r["k"]: (r["seq"], r["surrogate_key"]) for r in ranked.collect()}
 
-    out = numbering(rank_and_key(df, order, key_offset=100, **kw))
     before = job_ids()
-    counted = rank_and_key(df, order, key_offset=100, n_rows=len(data), **kw)
+    ranked = rank_and_key(df, order, key_offset=100, n_rows=len(data), **kw)
     if small_threshold is None:  # a known count picks the window path job-free
         assert job_ids() == before
-    assert numbering(counted) == out
+    out = numbering(ranked)
     assert len(out) == len(data)
     ordered = sorted(data, key=lambda t: (t[0], t[1], t[3]))
     frank = 0

@@ -160,68 +160,9 @@ def main() -> None:
           ("no exchange (pure projection)", "Exchange" not in p)])
     )
 
-    # 11. benchmark decontamination: benchmark gram set broadcast, corpus side
-    #     map-only up to the id-only distinct (no corpus-sized shuffle)
-    from crawlspark.textops import decontaminate, domain_quota, split_assign
-
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    q = decontaminate(docs, docs.filter(F.col("doc_id") % 97 == 0))
-    p = fmt(q)
-    sections.append(
-        ("Decontamination: broadcast-semi gram probe, id-only shuffle", p,
-         [("benchmark gram side is BROADCAST into a semi join",
-           "BroadcastHashJoin" in p and "LeftSemi" in p),
-          ("grams stay JVM-side (no Python operator)",
-           "MapInPandas" not in p and "BatchEvalPython" not in p),
-          ("no cartesian product", "CartesianProduct" not in p)])
-    )
 
-    # 12. domain quota: two-phase salted top-k — no single-partition exchange
-    q = domain_quota(docs, k=20)
-    p = fmt(q)
-    sections.append(
-        ("Domain quota: salted two-phase top-k (skew-safe)", p,
-         [("two windowed row_number phases", p.count("Window") >= 2),
-          ("never collapses to one partition",
-           "Exchange SinglePartition" not in p),
-          ("no Python operator", "MapInPandas" not in p and "BatchEvalPython" not in p)])
-    )
-
-    # 13. split assignment: pure projection — zero exchanges
-    q = split_assign(docs)
-    p = fmt(q)
-    sections.append(
-        ("Train/val/test split: shuffle-free pure projection", p,
-         [("no Exchange anywhere", "Exchange" not in p),
-          ("whole-stage codegen", "codegen id" in p)])
-    )
-
-    # 14. PII redaction: pure regexp projection
-    from crawlspark.textops import pack_sequences, pii_redact
-
-    q = pii_redact(docs)
-    p = fmt(q)
-    sections.append(
-        ("PII redaction: shuffle-free regexp projection", p,
-         [("no Exchange anywhere", "Exchange" not in p),
-          ("whole-stage codegen", "codegen id" in p)])
-    )
-
-    # 15. sequence packing AT SCALE (small_threshold=0 forces the range
-    #     path): per-partition running sums + triangular metadata offsets —
-    #     no global single-partition window over the corpus
-    q = pack_sequences(docs, ctx=2048, small_threshold=0)
-    p = fmt(q)
-    sections.append(
-        ("Sequence packing (range path): partitioned prefix sum", p,
-         [("window is partition-local (never SinglePartition over the corpus)",
-           "Exchange SinglePartition" not in p),
-          ("partition offsets are broadcast back", "BroadcastExchange" in p),
-          ("no Python operator",
-           "MapInPandas" not in p and "BatchEvalPython" not in p)])
-    )
-
-    # 16. host rank: one PageRank iteration — dangling mass rides a 1-row
+    # 11. host rank: one PageRank iteration — dangling mass rides a 1-row
     #     broadcast, contributions are a map-side-combinable long sum
     from crawlspark.hostrank import host_rank
 
@@ -239,7 +180,7 @@ def main() -> None:
           ("inflow is a partial-aggregated long sum", "HashAggregate" in p)])
     )
 
-    # 17. sitemap parse: pure regexp projection + explode — zero exchanges
+    # 12. sitemap parse: pure regexp projection + explode — zero exchanges
     from crawlspark.sitemap import parse_sitemap
 
     q = parse_sitemap(
@@ -254,7 +195,7 @@ def main() -> None:
            "MapInPandas" not in p and "BatchEvalPython" not in p)])
     )
 
-    # 18. WARC ingestion: the mapInPandas MUST sit on an exchange, never
+    # 13. WARC ingestion: the mapInPandas MUST sit on an exchange, never
     #     directly on the scan (Spark 4.1 PythonRunner selector-spin)
     from crawlspark.warc import parse_warc
 
@@ -271,7 +212,7 @@ def main() -> None:
            "Exchange" in p)])
     )
 
-    # 19. crawl-trap signals: one combinable groupBy(host) — the per-URL
+    # 14. crawl-trap signals: one combinable groupBy(host) — the per-URL
     #     feature extraction is pure projection
     from crawlspark.canonical import url_trap_signals
 
@@ -291,7 +232,7 @@ def main() -> None:
            "MapInPandas" not in p and "BatchEvalPython" not in p)])
     )
 
-    # 20. anchor-text index: data-scale rows pass only through combinable
+    # 15. anchor-text index: data-scale rows pass only through combinable
     #     aggregations; the top-anchor window sits on the (url, anchor)
     #     aggregate
     from crawlspark.canonical import anchor_text_index
@@ -316,7 +257,7 @@ def main() -> None:
            "MapInPandas" not in p and "BatchEvalPython" not in p)])
     )
 
-    # 21. freshness recrawl: the lag window partitions by url (bounded by
+    # 16. freshness recrawl: the lag window partitions by url (bounded by
     #     round count per partition), aggregation is combinable, no Python
     from crawlspark.freshness import change_rates, recrawl_priorities
 
@@ -335,48 +276,6 @@ def main() -> None:
           ("map-side partial aggregation", "HashAggregate" in p),
           ("no Python operator",
            "MapInPandas" not in p and "BatchEvalPython" not in p)])
-    )
-
-    # 22. WET text extraction: one shuffle-free regexp projection
-    from crawlspark.textops import html_to_text, term_postings
-
-    q = html_to_text(docs.select("doc_id", F.col("text").alias("payload")))
-    p = fmt(q)
-    sections.append(
-        ("WET text extraction: shuffle-free regexp projection", p,
-         [("no Exchange anywhere", "Exchange" not in p),
-          ("whole-stage codegen", "codegen id" in p),
-          ("no Python operator",
-           "MapInPandas" not in p and "BatchEvalPython" not in p)])
-    )
-
-    # 23. term postings: df aggregates the AGGREGATED tf table; n_docs is a
-    #     1-row broadcast; no Python, no cartesian
-    q = term_postings(docs)
-    p = fmt(q)
-    sections.append(
-        ("Term postings: combinable tf/df aggs + scalar broadcast", p,
-         [("map-side partial aggregation", "HashAggregate" in p),
-          ("n_docs scalar joins via broadcast",
-           "BroadcastNestedLoopJoin" in p or "BroadcastExchange" in p),
-          ("no cartesian product", "CartesianProduct" not in p),
-          ("no Python operator",
-           "MapInPandas" not in p and "BatchEvalPython" not in p)])
-    )
-
-    # 24. WARC→WET→gates composed pipeline: exactly ONE Python operator
-    #     (the WARC byte walk), an exchange below it (selector-spin guard),
-    #     everything downstream pure Catalyst
-    q = em.q_pipeline_warc_wet(spark, SF)
-    p = fmt(q)
-    sections.append(
-        ("WARC→WET→gates pipeline: one Python op, Catalyst downstream", p,
-         [("exactly one Arrow mapInPandas (the byte walk)",
-           # count tree nodes "MapInPandas (n)", not the detail section's
-           # "(n) MapInPandas" echo of the same node
-           p.count("MapInPandas (") == 1 and "BatchEvalPython" not in p),
-          ("exchange below the UDF (selector-spin guard)", "Exchange" in p),
-          ("no cartesian product", "CartesianProduct" not in p)])
     )
 
     out = ["# PLANS.md — physical-plan audit (generated by tools/plan_audit.py)", ""]
