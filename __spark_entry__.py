@@ -421,54 +421,6 @@ def q_extraction_version(spark, sf):
     ).orderBy("url")
 
 
-# ---------------------------------------------------------------------------
-# training-data ops
-# ---------------------------------------------------------------------------
-
-def q_ngram_jaccard(spark, sf):
-    # word-set jaccard of consecutive doc pairs (SQL-expressible)
-    d = _t(spark, sf, "documents").select("doc_id", "text")
-    a = d.alias("a")
-    b = d.withColumn("doc_id", F.col("doc_id") - 1).alias("b")
-    pairs = a.join(b, "doc_id").select(
-        F.col("doc_id").alias("a_id"),
-        F.array_distinct(F.split(F.col("a.text"), " ")).alias("wa"),
-        F.array_distinct(F.split(F.col("b.text"), " ")).alias("wb"),
-    )
-    inter = F.size(F.array_intersect("wa", "wb"))
-    union = F.size(F.array_union("wa", "wb"))
-    return pairs.select(
-        "a_id",
-        inter.alias("n_inter"),
-        union.alias("n_union"),
-        F.round(inter / union, 6).alias("jaccard"),
-    )
-
-
-def q_gopher_quality(spark, sf):
-    from crawlspark.textops import gopher_quality_rules
-
-    return gopher_quality_rules(_t(spark, sf, "documents"))
-
-
-def q_lang_id(spark, sf):
-    from crawlspark.textops import lang_id_heuristic
-
-    return lang_id_heuristic(_t(spark, sf, "documents"))
-
-
-def q_quality_score(spark, sf):
-    from crawlspark.textops import quality_score
-
-    return quality_score(_t(spark, sf, "documents"))
-
-
-def q_token_count(spark, sf):
-    from crawlspark.textops import token_count
-
-    return token_count(_t(spark, sf, "documents"))
-
-
 def q_crawl_trap_detect(spark, sf):
     # per-host crawl-trap score over synthesized URL shapes: hosts 0-2 get
     # trap-pattern paths (repeated segments / depth-10 / 5 query params),
@@ -734,11 +686,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "crawl_link_extract": q_crawl_link_extract,
         "extraction_units": q_extraction_units,
         "extraction_version": q_extraction_version,
-        "ngram_jaccard": q_ngram_jaccard,
-        "gopher_quality": q_gopher_quality,
-        "lang_id": q_lang_id,
-        "quality_score": q_quality_score,
-        "token_count": q_token_count,
         "crawl_trap_detect": q_crawl_trap_detect,
         "anchor_text_index": q_anchor_text_index,
         "crawl_robots_sitemaps": q_crawl_robots_sitemaps,
@@ -750,34 +697,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "crawl_warc_parse": q_crawl_warc_parse,
         "crawl_warc_pages": q_crawl_warc_pages,
     }
-
-
-def _lang_id_sql() -> str:
-    from crawlspark.textops import _STOPWORDS
-
-    def cnt(needle: str) -> str:
-        n = needle.replace("'", "''")
-        return (
-            f"cast((length(p) - length(replace(p, ' {n} ', ''))) / {len(needle) + 2} as bigint)"
-        )
-
-    score_exprs = []
-    for lang, words in _STOPWORDS.items():
-        score_exprs.append(" + ".join(cnt(w) for w in words) + f" AS s_{lang}")
-    langs = list(_STOPWORDS)
-    best = "greatest(" + ", ".join(f"s_{k}" for k in langs) + ")"
-    case = "CASE "
-    for k in langs:
-        case += f"WHEN s_{k} = {best} AND {best} > 0 THEN '{k}' "
-    case += "ELSE 'und' END"
-    cols = ", ".join(f"s_{k}" for k in langs)
-    return f"""
-        SELECT doc_id, {case} AS lang_pred, {cols}
-        FROM (
-          SELECT doc_id, {', '.join(score_exprs)}
-          FROM (SELECT doc_id, ' ' || text || ' ' AS p FROM documents)
-        )
-    """
 
 
 def _host_rank_sql(iterations: int = 6, damping: int = 85, scale: int = 10**12) -> str:
@@ -999,69 +918,6 @@ def oracle_sql() -> dict[str, str]:
                    CAST(floor(60.0 / (1 + doc_id % 5)) AS int) AS max_per_round
             FROM documents, unnest(['/p/9', '/admin' || doc_id]) AS t(p)
             WHERE doc_id < 500
-        """,
-        "ngram_jaccard": """
-            SELECT a.doc_id AS a_id,
-                   len(list_intersect(list_distinct(string_split(a.text, ' ')),
-                                      list_distinct(string_split(b.text, ' ')))) AS n_inter,
-                   len(list_distinct(list_concat(string_split(a.text, ' '),
-                                                 string_split(b.text, ' ')))) AS n_union,
-                   round(len(list_intersect(list_distinct(string_split(a.text, ' ')),
-                                            list_distinct(string_split(b.text, ' ')))) * 1.0 /
-                         len(list_distinct(list_concat(string_split(a.text, ' '),
-                                                       string_split(b.text, ' ')))), 6) AS jaccard
-            FROM documents a JOIN documents b ON b.doc_id = a.doc_id + 1
-        """,
-        "gopher_quality": """
-            SELECT doc_id,
-                   cast(nw AS bigint) AS n_words,
-                   round(length(text) * 1.0 / nw, 6) AS mean_word_len,
-                   cast(aw AS bigint) AS alpha_words,
-                   round(aw * 1.0 / nw, 6) AS alpha_word_ratio,
-                   cast(sh AS bigint) AS stopword_hits,
-                   (nw >= 20 AND nw <= 100000) AS ok_word_count,
-                   (length(text) * 1.0 / nw >= 3.0 AND length(text) * 1.0 / nw <= 10.0)
-                     AS ok_mean_word_len,
-                   (aw * 1.0 / nw >= 0.8) AS ok_alpha_ratio,
-                   (sh >= 2) AS ok_stopwords,
-                   ((nw >= 20 AND nw <= 100000)
-                    AND (length(text) * 1.0 / nw >= 3.0 AND length(text) * 1.0 / nw <= 10.0)
-                    AND (aw * 1.0 / nw >= 0.8)
-                    AND (sh >= 2)) AS keep
-            FROM (
-              SELECT doc_id, text,
-                     len(string_split(text, ' ')) AS nw,
-                     len(list_filter(string_split(text, ' '),
-                                     w -> regexp_matches(w, '[a-zA-Z]'))) AS aw,
-                     cast((length(p) - length(replace(p, ' the ', ''))) / 5 AS bigint)
-                     + cast((length(p) - length(replace(p, ' and ', ''))) / 5 AS bigint)
-                     + cast((length(p) - length(replace(p, ' of ', ''))) / 4 AS bigint)
-                     + cast((length(p) - length(replace(p, ' to ', ''))) / 4 AS bigint)
-                     + cast((length(p) - length(replace(p, ' in ', ''))) / 4 AS bigint) AS sh
-              FROM (SELECT doc_id, text, ' ' || text || ' ' AS p FROM documents)
-            )
-        """,
-        "lang_id": _lang_id_sql(),
-        "quality_score": """
-            SELECT doc_id,
-                   cast(length(text) AS bigint) AS n_chars_m,
-                   cast(len(string_split(text, ' ')) AS bigint) AS n_words,
-                   round(length(text) * 1.0 / len(string_split(text, ' ')), 6) AS mean_word_len,
-                   cast((length(p) - length(replace(p, ' the ', ''))) / 5
-                        + (length(p) - length(replace(p, ' and ', ''))) / 5
-                        + (length(p) - length(replace(p, ' of ', ''))) / 4 AS bigint)
-                        AS stopword_hits,
-                   round(cast((length(p) - length(replace(p, ' the ', ''))) / 5
-                        + (length(p) - length(replace(p, ' and ', ''))) / 5
-                        + (length(p) - length(replace(p, ' of ', ''))) / 4 AS bigint) * 1.0
-                        / len(string_split(text, ' ')), 6) AS stopword_ratio
-            FROM (SELECT doc_id, text, ' ' || text || ' ' AS p FROM documents)
-        """,
-        "token_count": """
-            SELECT doc_id,
-                   cast(len(string_split(text, ' ')) AS bigint) AS ws_tokens,
-                   cast(ceil(length(text) / 4.0) AS bigint) AS bpe_est_tokens
-            FROM documents
         """,
         # the pandas-UDF extraction is not ANSI-SQL-expressible; its oracle is
         # an INDEPENDENT pure-Python mirror (tools/make_fixtures.py — the same

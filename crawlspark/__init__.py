@@ -31,9 +31,6 @@ Architecture (Spark-first, not a port):
 * ``listing``     — dataset_listing semi-join view (src/storage/database_sink.rs:492-558)
 * ``csvsink``     — --file-to-csv parity surface (src/main.rs:54-115)
 * ``gpkg``        — GeoPackage export (csv-to-gpkg.sh parity)
-* ``textops``     — text-analysis ops for the query battery: language-ID,
-                    quality score, Gopher gates, token counts (no crawl path
-                    reaches them)
 
 Everything is DataFrame-API; RDDs are never used; Python touches data only
 through Arrow-vectorized pandas UDFs: the ``extract`` and ``warc`` byte walks,

@@ -6,7 +6,8 @@ Reference semantics re-expressed as batch fetch rounds (north_rule):
   time (/root/reference/src/main.rs:154-267) — "politeness by construction";
   the engine makes politeness explicit: per-host budget-k selection per round.
 * fetch failure → recovery copy → else skip (/root/reference/src/main.rs:182-203)
-  becomes: pages join → cache join → bounded retry re-enqueue → failed.
+  becomes: fetch-index join (pages with their recovery copies folded in once,
+  at construction) → bounded retry re-enqueue → failed.
 * dedup by first-seen id (/root/reference/src/storage/surrogate_key.rs:24-34)
   becomes the canonical-URL seen set (seen.py) with dense first-seen keys.
 * per-item error tolerance + counters (/root/reference/src/main.rs:224-266,
@@ -28,7 +29,8 @@ every rule below is implemented twice and asserted equal):
        rest ⇒ deferred (stays in frontier)
     5. crawl order = (chost, priority, warc_ts, curl) over the selected set →
        seq 1..k (global within round); chost compared as a string
-    6. fetch: pages hit ⇒ fetched; else cache hit ⇒ fetched (recovered);
+    6. fetch: fetch-index hit ⇒ fetched (the index holds each page, or its
+       recovery copy where the page is missing or has no html);
        else retries < max_retries ⇒ retried (re-enqueued, retries+1)
        else failed (dropped)
     7. surrogate keys: dense, continuing from the seen max, over fetched rows
@@ -98,22 +100,35 @@ def enrich(df: DataFrame) -> DataFrame:
     )
 
 
-def build_pages_index(pages: DataFrame) -> DataFrame:
-    """Canonical fetchable-pages index, one row per canonical url (first by
-    warc_ts, url). Keyed on (url_hash, canonical url) — the hash is the
-    shuffle/bucket key, the string disambiguates xxhash64 collisions (expected
-    at the 10^10-URL design point by birthday bound). At cluster scale this is
-    a bucketed Iceberg table keyed by url_hash (the fetch join is then
-    co-located); locally a parquet snapshot with the same layout."""
-    p = enrich(pages.select("url", "warc_ts", "html"))
-    w = Window.partitionBy("url_hash", "curl").orderBy(
-        F.col("warc_ts").asc(), F.col("url").asc()
-    )
-    return (
-        p.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("url_hash", F.col("curl").alias("page_curl"), "html")
-    )
+def build_pages_index(pages: DataFrame, cache: DataFrame | None = None) -> DataFrame:
+    """Canonical fetch index, one row per canonical url: the pages row first
+    by (warc_ts, url), with the recovery ``cache`` (src/main.rs:182-203)
+    folded in the same way — a cache-only url is fetchable, and the cache
+    html stands in where the pages html is NULL. Keyed on (url_hash,
+    canonical url) — the hash is the shuffle/bucket key, the string
+    disambiguates xxhash64 collisions (expected at the 10^10-URL design point
+    by birthday bound). At cluster scale this is a bucketed Iceberg table
+    keyed by url_hash (the fetch join is then co-located); locally a parquet
+    snapshot with the same layout."""
+
+    def winners(df: DataFrame) -> DataFrame:
+        p = enrich(df.select("url", "warc_ts", "html"))
+        w = Window.partitionBy("url_hash", "curl").orderBy(
+            F.col("warc_ts").asc(), F.col("url").asc()
+        )
+        return (
+            p.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .select("url_hash", "curl", "html")
+        )
+
+    idx = winners(pages)
+    if cache is not None:
+        rec = winners(cache).withColumnRenamed("html", "_cache_html")
+        idx = idx.join(rec, ["url_hash", "curl"], "full_outer").select(
+            "url_hash", "curl", F.coalesce("html", "_cache_html").alias("html")
+        )
+    return idx.withColumnRenamed("curl", "page_curl")
 
 
 @dataclass
@@ -149,15 +164,24 @@ class Crawler:
         self.fields = fields
         self.landing_base_url = landing_base_url
 
-        # the fetch index is materialized once (hash-layout parquet — the
-        # local stand-in for a bucketed Iceberg table): every round's plan
-        # then starts from a plain scan instead of re-optimizing the
-        # canonicalize+window index-build subtree (driver plan-compile time
-        # was the dominant *serial* cost per round)
-        self.pages_idx = self._materialize_index(pages, "pages_idx")
-        self.cache_idx = (
-            self._materialize_index(cache, "cache_idx") if cache is not None else None
+        # the fetch index (pages + recovery copies) is materialized once
+        # (hash-layout parquet — the local stand-in for a bucketed Iceberg
+        # table): every round's plan then starts from a plain scan instead of
+        # re-optimizing the canonicalize+window index-build subtree (driver
+        # plan-compile time was the dominant *serial* cost per round)
+        self.wh.write_once(
+            "fetch_idx",
+            build_pages_index(pages, cache).repartition(
+                settings.crawl.seen_buckets, "url_hash"
+            ),
         )
+        # NOTE: deliberately NOT cached in memory — the deserialized payload
+        # blobs are several × the parquet size and evict the round's working
+        # caches (measured: commit time 4s → 45s under storage pressure);
+        # the parquet scan + hash exchange is cheaper than cache thrash. On a
+        # real cluster this is a bucketed Iceberg table and the exchange
+        # disappears entirely.
+        self.fetch_idx = self.wh.read_state(spark, "fetch_idx")
         self.robots = robots
 
         # one-time dimension: the (name, hash) translation table
@@ -168,21 +192,6 @@ class Crawler:
         )
 
         self._seed = frontier_seed
-
-    # ------------------------------------------------------------------
-    def _materialize_index(self, df: DataFrame, name: str) -> DataFrame:
-        """Build the fetch index once as a hash-layout parquet snapshot."""
-        n = self.settings.crawl.seen_buckets
-        self.wh.write_once(
-            name, build_pages_index(df).repartition(n, "url_hash")
-        )
-        # NOTE: deliberately NOT cached in memory — the deserialized payload
-        # blobs are several × the parquet size and evict the round's working
-        # caches (measured: commit time 4s → 45s under storage pressure);
-        # the parquet scan + hash exchange is cheaper than cache thrash. On a
-        # real cluster this is a bucketed Iceberg table and the exchange
-        # disappears entirely.
-        return self.wh.read_state(self.spark, name)
 
     # ------------------------------------------------------------------
     @property
@@ -249,17 +258,35 @@ class Crawler:
         )
 
     def _require_filter_table(self) -> None:
-        """A committed warehouse must hold the configured prefilter's table.
-        Starting from an empty filter instead would probe every older seen
-        URL as new and skip its exact confirm, so resuming under a different
-        ``crawl.seen_filter`` would key those URLs a second time."""
+        """A committed warehouse must hold the configured prefilter's table,
+        built with the configured sizes. Starting from an empty filter, or
+        merging new keys into old bitmaps/tables under other sizes, would
+        probe older seen URLs as new and skip their exact confirm, so those
+        URLs would be keyed a second time. The sizes are read on the driver
+        with pyarrow: no Spark job."""
         tname = self._filter_table
-        if self.wh.last_round() >= 0 and not self.wh.has_table(tname):
+        if self.wh.last_round() < 0:
+            return
+        if not self.wh.has_table(tname):
             raise ValueError(
                 f"warehouse {self.wh.path} has committed rounds but no "
                 f"{tname!r} table: crawl.seen_filter={tname!r} differs from "
                 "the filter it was crawled with"
             )
+        sizes = (  # filter-table column -> crawl setting
+            {"m": "cuckoo_entries", "slots": "cuckoo_slots"} if tname == "cuckoo"
+            else {"bits": "bloom_bits", "k": "bloom_hashes"}
+        )
+        sizes["n_buckets"] = "seen_buckets"
+        got = self.wh.distinct_values(tname, list(sizes))
+        for col, setting in sizes.items():
+            value = getattr(self.settings.crawl, setting)
+            other = got[col] - {value}
+            if other:
+                raise ValueError(
+                    f"crawl.{setting}={value}, but the warehouse's {tname!r} "
+                    f"table was built with {col}={other.pop()}"
+                )
 
     def _load_state(self):
         """(frontier, seen, bloom, next_key, next_round) from the last commit."""
@@ -474,53 +501,41 @@ class Crawler:
             defer_host = cand.filter(F.col("host_rn") > budget)
             selected = cand.filter(F.col("host_rn") <= budget)
 
-        # 6. fetch PROBE: payload-free hit test. The pages index is joined
-        #    WITHOUT its html column (parquet column pruning ⇒ no payload IO
-        #    or shuffle here); the hit is confirmed on the canonical-url
-        #    STRING, so an xxhash64 collision can never fetch another page's
-        #    html (reference dedups on the exact id string,
-        #    src/storage/surrogate_key.rs:24-34).
+        # 6. fetch PROBE: payload-free hit test. The fetch index (pages and
+        #    recovery copies in one table) is joined WITHOUT its html column
+        #    (parquet column pruning ⇒ no payload IO or shuffle here); the hit
+        #    is confirmed on the canonical-url STRING, so an xxhash64
+        #    collision can never fetch another page's html (reference dedups
+        #    on the exact id string, src/storage/surrogate_key.rs:24-34).
         #    SHUFFLE_HASH hint: Catalyst's size estimate would otherwise pick
         #    broadcast for the (compressed-parquet-small) index — wrong at
         #    10^10 pages; partitioned hash join on url_hash is the plan a
-        #    bucketed Iceberg index makes shuffle-free on the pages side.
-        probe = self.pages_idx.select(
+        #    bucketed Iceberg index makes shuffle-free on the index side.
+        probe = self.fetch_idx.select(
             F.col("url_hash").alias("p_hash"), "page_curl"
         ).hint("SHUFFLE_HASH")
         statused = (
             selected.join(probe, (F.col("url_hash") == F.col("p_hash"))
                           & (F.col("curl") == F.col("page_curl")), "left")
-            .withColumn("has_page", F.col("page_curl").isNotNull())
-            .drop("p_hash", "page_curl")
-        )
-        if self.cache_idx is not None:
-            cprobe = self.cache_idx.select(
-                F.col("url_hash").alias("c_hash"),
-                F.col("page_curl").alias("cache_curl"),
-            ).hint("SHUFFLE_HASH")
-            statused = (
-                statused.join(cprobe, (F.col("url_hash") == F.col("c_hash"))
-                              & (F.col("curl") == F.col("cache_curl")), "left")
-                .withColumn("has_cache", F.col("cache_curl").isNotNull())
-                .drop("c_hash", "cache_curl")
+            .withColumn(
+                "disposition",
+                F.when(F.col("page_curl").isNotNull(), "fetched")
+                .when(F.col("retries") < F.lit(s.max_retries), "retried")
+                .otherwise("failed"),
             )
-        else:
-            statused = statused.withColumn("has_cache", F.lit(False))
-        statused = statused.withColumn(
-            "disposition",
-            F.when(F.col("has_page") | F.col("has_cache"), "fetched")
-            .when(F.col("retries") < F.lit(s.max_retries), "retried")
-            .otherwise("failed"),
+            .drop("p_hash", "page_curl")
         ).persist()
 
         # 6b + 8. fetch PAYLOAD → extraction, one pipelined pass: html bytes
         #    flow parquet scan → hash join → mapInPandas inside a single stage
         #    chain and are never cached or re-shuffled (the round's only
-        #    payload traffic). Cache fallback = src/main.rs:182-203.
+        #    payload traffic). The index already holds the recovery copies
+        #    (build_pages_index), so this one join is the cache fallback of
+        #    src/main.rs:182-203 too.
         fetched_keys = statused.filter(F.col("disposition") == "fetched").select(
             "curl", "url_hash", "provider"
         )
-        pg = self.pages_idx.select(
+        pg = self.fetch_idx.select(
             F.col("url_hash").alias("p_hash"), "page_curl", "html"
         ).hint("SHUFFLE_HASH")
         feed = (
@@ -528,18 +543,6 @@ class Crawler:
                               & (F.col("curl") == F.col("page_curl")), "left")
             .drop("p_hash", "page_curl")
         )
-        if self.cache_idx is not None:
-            cp = self.cache_idx.select(
-                F.col("url_hash").alias("c_hash"),
-                F.col("page_curl").alias("c_curl"),
-                F.col("html").alias("c_html"),
-            ).hint("SHUFFLE_HASH")
-            feed = (
-                feed.join(cp, (F.col("url_hash") == F.col("c_hash"))
-                          & (F.col("curl") == F.col("c_curl")), "left")
-                .withColumn("html", F.coalesce(F.col("html"), F.col("c_html")))
-                .drop("c_hash", "c_curl", "c_html")
-            )
         # one extraction task per shuffle partition (session.py sizes these at
         # 1-3x the cores). Every Python-worker task pays a fixed start-up
         # cost (~0.3 s on 4 cores), and a 3x finer split costs more in

@@ -231,6 +231,19 @@ class Warehouse:
             return empty_frame(spark, schema)
         return spark.read.parquet(str(self._round_dir(name, max(t["rounds"]))))
 
+    def distinct_values(self, name: str, columns: list[str]) -> dict[str, set]:
+        """Distinct values per column of a state table's latest snapshot, read
+        on the driver from its parquet files: no Spark job (small tables)."""
+        import pyarrow.parquet as pq
+
+        t = self.manifest()["tables"][name]
+        out: dict[str, set] = {c: set() for c in columns}
+        for part in sorted(self._round_dir(name, max(t["rounds"])).glob("*.parquet")):
+            tbl = pq.ParquetFile(part).read(columns=columns)
+            for c in columns:
+                out[c].update(tbl.column(c).to_pylist())
+        return out
+
     def read_appends(
         self, spark: SparkSession, name: str, schema: StructType | None = None
     ) -> DataFrame:

@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from crawlspark import schemas, synth
-from crawlspark.scheduler import Crawler
+from crawlspark.scheduler import Crawler, build_pages_index
 from crawlspark.settings import Settings
 from crawlspark.warehouse import Warehouse
 
@@ -59,6 +59,24 @@ def run_crawler(spark, synth_dfs, wh_dir, max_rounds=None, overrides=None):
     return settings, wh, results
 
 
+def assert_resume_refused(spark, synth_dfs, wh, seen, cases):
+    """Each (overrides, match) Crawler on the committed warehouse ``wh`` must
+    refuse both to resume and to evict, and commit nothing."""
+    pages, frontier, robots, cache_df = synth_dfs
+    last = wh.last_round()
+    victim = spark.createDataFrame([(sorted(seen)[0],)], ["url"])
+    for overrides, match in cases:
+        crawler = Crawler(
+            spark, Settings.new(overrides=overrides), wh, synth.golden_fields(),
+            pages, robots, frontier, cache_df,
+        )
+        with pytest.raises(ValueError, match=match):
+            crawler.run()
+        with pytest.raises(ValueError, match=match):
+            crawler.evict(victim)
+    assert wh.last_round() == last
+
+
 def collect_state(spark, wh: Warehouse):
     log = [
         (r["round"], r["seq"], r["url"])
@@ -73,6 +91,31 @@ def collect_state(spark, wh: Warehouse):
         for r in wh.read_appends(spark, "metrics", schemas.METRICS).collect()
     }
     return log, seen, metrics
+
+
+def test_fetch_index_precedence(spark):
+    """The fetch index holds the pages winner per canonical url, else the
+    recovery copy; a pages row with NULL html takes the copy's html."""
+    from datetime import datetime
+
+    ts = datetime(2020, 1, 1)
+
+    def frame(rows):
+        return spark.createDataFrame(
+            [(u, ts, h, None, None) for u, h in rows], schemas.PAGES
+        )
+
+    pages = frame([("https://a.example/page", b"P"), ("https://a.example/both", b"P"),
+                   ("https://a.example/null", None)])
+    cache = frame([("https://a.example/cache", b"C"), ("https://a.example/both", b"C"),
+                   ("https://a.example/null", b"C")])
+    got = {r["page_curl"]: r["html"] for r in build_pages_index(pages, cache).collect()}
+    assert got == {
+        "https://a.example/page": b"P",
+        "https://a.example/cache": b"C",
+        "https://a.example/both": b"P",
+        "https://a.example/null": b"C",
+    }
 
 
 @pytest.fixture(scope="module")
@@ -142,7 +185,10 @@ def test_listing_view(spark, full_run):
 
 def test_crawl_routed_bloom_matches_oracle(spark, synth_dfs, tmp_path):
     """Scale-path probe (bucket-routed cogroup, no driver collect / whole-
-    filter broadcast) produces the exact same crawl as the broadcast probe."""
+    filter broadcast) produces the exact same crawl as the broadcast probe.
+    Resuming that warehouse with a resized Bloom filter fails fast: merging
+    new keys into the old bitmaps under other sizes would probe older seen
+    URLs as new and skip their exact confirm."""
     settings, wh, _ = run_crawler(
         spark, synth_dfs, tmp_path / "whR",
         overrides={"crawl": {"bloom_probe": "routed"}},
@@ -151,6 +197,11 @@ def test_crawl_routed_bloom_matches_oracle(spark, synth_dfs, tmp_path):
     log, seen, _ = collect_state(spark, wh)
     assert log == sim.crawl_order
     assert seen == sim.seen
+
+    assert_resume_refused(spark, synth_dfs, wh, seen, [
+        ({"crawl": {"bloom_probe": "routed", "bloom_bits": 1 << 16}}, "bloom_bits=65536"),
+        ({"crawl": {"bloom_probe": "routed", "seen_buckets": 8}}, "seen_buckets=8"),
+    ])
 
 
 def test_kill_and_resume_exact(spark, synth_dfs, full_run, tmp_path):
@@ -201,7 +252,8 @@ def test_crawl_cuckoo_matches_oracle(spark, synth_dfs, tmp_path):
     """seen_filter='cuckoo' produces the exact same crawl as the bloom path
     (filter kind is a routing detail; the exact join decides membership).
     Resuming that warehouse under the default 'bloom' setting fails fast: an
-    empty Bloom filter would skip the exact confirm for every seen URL."""
+    empty Bloom filter would skip the exact confirm for every seen URL. So
+    does resuming it with a resized cuckoo filter."""
     settings, wh, _ = run_crawler(
         spark, synth_dfs, tmp_path / "whK",
         overrides={"crawl": {"seen_filter": "cuckoo"}},
@@ -212,16 +264,12 @@ def test_crawl_cuckoo_matches_oracle(spark, synth_dfs, tmp_path):
     assert seen == sim.seen
     assert wh.has_table("cuckoo") and not wh.has_table("bloom")
 
-    pages, frontier, robots, cache_df = synth_dfs
-    last = wh.last_round()
-    crawler = Crawler(
-        spark, Settings.new(), wh, synth.golden_fields(), pages, robots, frontier, cache_df
-    )
-    with pytest.raises(ValueError, match="'bloom'"):
-        crawler.run()
-    with pytest.raises(ValueError, match="'bloom'"):
-        crawler.evict(spark.createDataFrame([(sorted(seen)[0],)], ["url"]))
-    assert wh.last_round() == last and not wh.has_table("bloom")
+    assert_resume_refused(spark, synth_dfs, wh, seen, [
+        ({}, "'bloom'"),
+        ({"crawl": {"seen_filter": "cuckoo", "seen_buckets": 8}}, "seen_buckets=8"),
+        ({"crawl": {"seen_filter": "cuckoo", "cuckoo_slots": 2}}, "cuckoo_slots=2"),
+    ])
+    assert not wh.has_table("bloom")
 
 
 @pytest.mark.parametrize("overrides", [
@@ -264,16 +312,18 @@ def test_evict_recrawl(spark, synth_dfs, tmp_path, overrides):
 
 # Spark work of round 0 on the synth fixture at local[4] with 8 shuffle
 # partitions, recorded. An empty frame scanned as a Python RDD, an extra
-# extraction wave or a separate counting job pushes a round over them.
-# Concurrent commit writers sometimes reuse a shuffle and complete fewer tasks.
+# extraction wave, a separate counting job or a second fetch-index join
+# pushes a round over them. Concurrent commit writers sometimes reuse a
+# shuffle and complete fewer tasks.
 ROUND_JOBS_MAX = 16
-ROUND_TASKS_MAX = 197
+ROUND_STAGES_MAX = 40
+ROUND_TASKS_MAX = 193
 
 
 def test_round_spark_cost_bounded(spark, synth_dfs, job_ids, tmp_path):
     """CI guard on a round's fixed cost: the jobs one crawl round starts
-    (its commit's writer threads included) and the tasks they complete stay
-    within the recorded bounds."""
+    (its commit's writer threads included), their stages and the tasks they
+    complete stay within the recorded bounds."""
     pages, frontier, robots, cache_df = synth_dfs
     crawler = Crawler(
         spark, Settings.new(), Warehouse(tmp_path / "whJ"), synth.golden_fields(),
@@ -289,4 +339,8 @@ def test_round_spark_cost_bounded(spark, synth_dfs, job_ids, tmp_path):
         for info in map(st.getStageInfo, stages)
         if info is not None
     )
-    assert len(jobs) <= ROUND_JOBS_MAX and tasks <= ROUND_TASKS_MAX, (len(jobs), tasks)
+    assert (
+        len(jobs) <= ROUND_JOBS_MAX
+        and len(stages) <= ROUND_STAGES_MAX
+        and tasks <= ROUND_TASKS_MAX
+    ), (len(jobs), len(stages), tasks)
