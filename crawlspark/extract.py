@@ -42,7 +42,7 @@ from typing import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType, IntegerType, StringType, StructField, StructType,
@@ -424,6 +424,20 @@ def extract_pages(
             yield out
 
     return src.mapInPandas(run, schema=schema)
+
+
+def _passthrough(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    yield from batches
+
+
+def start_workers(spark: SparkSession) -> None:
+    """Start the session's Python workers for the extraction UDF: one Arrow
+    map task per core, so every core's worker is forked (and has imported
+    this module, which ``_passthrough`` is pickled by reference to) before
+    the first extraction needs it. Spark starts them lazily, at the first
+    Python task; a started worker is reused by later tasks."""
+    n = spark.sparkContext.defaultParallelism
+    spark.range(n, numPartitions=n).mapInPandas(_passthrough, "id long").collect()
 
 
 def split_dataset_units(df: DataFrame, fields: AbcdFields) -> tuple[DataFrame, DataFrame]:

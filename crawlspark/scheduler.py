@@ -60,6 +60,7 @@ Scale notes:
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -67,7 +68,7 @@ from pyspark.sql import functions as F
 
 from . import schemas
 from .canonical import canonicalize_expr, host_expr, url_hash_expr
-from .extract import extract_pages, split_dataset_units
+from .extract import extract_pages, split_dataset_units, start_workers
 from .fields import AbcdFields
 from .seen import (
     PartitionedBloom,
@@ -164,17 +165,26 @@ class Crawler:
         self.fields = fields
         self.landing_base_url = landing_base_url
 
-        # the fetch index (pages + recovery copies) is materialized once
-        # (hash-layout parquet — the local stand-in for a bucketed Iceberg
-        # table): every round's plan then starts from a plain scan instead of
-        # re-optimizing the canonicalize+window index-build subtree (driver
-        # plan-compile time was the dominant *serial* cost per round)
-        self.wh.write_once(
-            "fetch_idx",
-            build_pages_index(pages, cache).repartition(
-                settings.crawl.seen_buckets, "url_hash"
-            ),
-        )
+        # Spark starts a session's Python workers at its first Python task.
+        # In a crawl that is round 0's extraction, whose tasks would wait
+        # 1.5-2.5 s (4 cores) for them, so they start here, in a thread
+        # beside the index build, whose driver-side planning leaves the
+        # executors idle for seconds.
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            workers = pool.submit(start_workers, spark)
+            # the fetch index (pages + recovery copies) is materialized once
+            # (hash-layout parquet — the local stand-in for a bucketed Iceberg
+            # table): every round's plan then starts from a plain scan instead
+            # of re-optimizing the canonicalize+window index-build subtree
+            # (driver plan-compile time was the dominant *serial* cost per
+            # round)
+            self.wh.write_once(
+                "fetch_idx",
+                build_pages_index(pages, cache).repartition(
+                    settings.crawl.seen_buckets, "url_hash"
+                ),
+            )
+            workers.result()
         # NOTE: deliberately NOT cached in memory — the deserialized payload
         # blobs are several × the parquet size and evict the round's working
         # caches (measured: commit time 4s → 45s under storage pressure);

@@ -8,6 +8,8 @@ Scale notes (100 TB / 1000-executor design, tested on local[32]):
   cluster this is set to 2-3x total cores (and AQE coalesces down).
 * ANSI off — the reference's numeric parse is NULL-on-failure (TRY_CAST
   semantics, /root/reference/src/abcd/abcd_parser.rs:110-114).
+* Python workers fork from ``crawlspark.pydaemon``, which starts from a
+  byte-compiled pyspark and imports pandas/pyarrow once, before the forks.
 """
 
 from __future__ import annotations
@@ -32,6 +34,7 @@ def get_spark(
         .master(master)
         .config("spark.pyspark.python", sys.executable)
         .config("spark.executorEnv.PYTHONPATH", os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+        .config("spark.python.daemon.module", "crawlspark.pydaemon")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -284,3 +284,26 @@ def test_robots_crlf_bodies(spark):
     assert r["crawl_delay_s"] == 2.5
     sm = robots_sitemaps(df).collect()
     assert [x["sitemap_url"] for x in sm] == ["https://a.org/s.xml"]
+
+
+def test_pydaemon_prefers_installed_pyspark(tmp_path, monkeypatch):
+    """The Python worker daemon drops Spark's source-only pyspark.zip from
+    its path only when the installed pyspark is the same release."""
+    import importlib.util
+    import sys
+    import zipfile
+    from pathlib import Path
+
+    from crawlspark import pydaemon
+
+    installed = importlib.util.find_spec("pyspark").origin
+    same = Path(installed).with_name("version.py").read_bytes()
+    for name, version, kept in [("same", same, False),
+                                ("other", b'__version__: str = "0.0.0"\n', True)]:
+        archive = tmp_path / name / "pyspark.zip"
+        archive.parent.mkdir()
+        with zipfile.ZipFile(archive, "w") as z:
+            z.writestr("pyspark/version.py", version)
+        monkeypatch.setattr(sys, "path", [str(archive), *sys.path])
+        pydaemon._prefer_installed_pyspark()
+        assert (str(archive) in sys.path) == kept, name
